@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.io.CommitLog
+import graft.io.{CommitLog, LogAction}
 
 /** One-off METADATA-PLANE scale probe (NOT a gate) — the commit-log
   * analogue of [[ScaleProbe]]'s data-plane tiers:
@@ -321,9 +320,8 @@ object LogProbe {
         val f = s"probe_$v.parquet"
         Files.copy(Paths.get(t, seed), Paths.get(t, f),
           StandardCopyOption.COPY_ATTRIBUTES)
-        Files.write(logDir.resolve(f"$v%012d.json"),
-          s"""{"op":"append"}\n{"add":"$f","rows":1,"bytes":$bytes}\n"""
-            .getBytes(StandardCharsets.UTF_8))
+        Files.write(logDir.resolve(f"$v%012d.json"), LogAction.encodeFile(Seq(
+          LogAction.Op("append"), LogAction.Add(f, rows = Some(1L), bytes = Some(bytes)))))
         if (v % 500 == 0) CommitLog.checkpoint(t)
       }
       val head = CommitLog.currentVersion(t)

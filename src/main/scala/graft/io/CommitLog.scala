@@ -3,6 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,9 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   table/part-*.parquet          data files (immutable once committed)
-  *   table/_log/00000000000N.json  commit N: one JSON object per line —
-  *                                 {"op":...,"version":N} header, then
-  *                                 {"add":"file"} / {"remove":"file"}
+  *   table/_log/00000000000N.json  commit N: one JSON action per line —
+  *                                 an op header, then adds / removes and
+  *                                 the rest of the [[LogAction]] vocabulary
   *   table/_log/N.checkpoint.json  optional: the full live state at N in
   *                                 one file (see [[checkpoint]])
   *   table/_log/_last_checkpoint   pointer to the newest checkpoint version
@@ -43,11 +44,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    files are partitioned by key range and only touched partitions are
   *    rewritten — the add/remove commit vocabulary already expresses that.
   *
-  * JSON is written and parsed with a two-regex vocabulary on purpose: the
-  * format is load-bearing, so the fewer moving parts the better, and file
-  * names (Spark part-file UUIDs) never contain quotes or escapes.
+  * Every line is encoded and decoded by ONE codec, [[LogAction]] (Jackson
+  * streaming, the parser Spark SQL's JSON source already ships): names are
+  * JSON-escaped, so any name the engine accepts round-trips, and a line
+  * the codec cannot decode fails the read loudly instead of vanishing.
   */
 object CommitLog {
+  import LogAction._
 
   final case class Commit(version: Long, op: String,
                           add: Seq[String], remove: Seq[String],
@@ -61,74 +64,6 @@ object CommitLog {
   private def lastCkptPath(table: String): Path =
     logDir(table).resolve("_last_checkpoint")
 
-  private val AddRe = """"add"\s*:\s*"([^"]+)"""".r
-  private val RemoveRe = """"remove"\s*:\s*"([^"]+)"""".r
-  private val OpRe = """"op"\s*:\s*"([^"]+)"""".r
-  // transaction marker (the public Delta SetTransaction shape): an
-  // application-level id committed atomically WITH its data, so a replayed
-  // batch can be recognized and skipped — exactly-once streaming ingest
-  private val TxnRe = """"txn"\s*:\s*"([^"]+)"""".r
-  // zone-map vocabulary: an add action MAY carry the file's [lo, hi] range
-  // on the table's clustering column — {"add":"f","lo":N,"hi":N} — and MAY
-  // name that column ({"add":"f","lo":N,"hi":N,"col":"x"}), which is what
-  // lets a SQL reader that only sees pushed Filters match them to the
-  // recorded ranges safely (stats on an UNNAMED column are still served
-  // for the Scala API's explicit prunedFiles(column-known-to-caller) path,
-  // but never matched against a filter by name)
-  private val AddStatsRe = """"add"\s*:\s*"([^"]+)"\s*,\s*"lo"\s*:\s*(-?\d+)\s*,\s*"hi"\s*:\s*(-?\d+)""".r
-  private val AddStatsColRe = """"add"\s*:\s*"([^"]+)"\s*,\s*"lo"\s*:\s*(-?\d+)\s*,\s*"hi"\s*:\s*(-?\d+)\s*,\s*"col"\s*:\s*"([^"]+)"""".r
-  // row-count vocabulary: an add MAY record its file's footer row count
-  // (trailing, after any zone-map fields) — what makes count(*) a
-  // metadata-only answer. One action per line, so [^\n]*? cannot leak
-  // a neighbor's fields into the match.
-  private val AddRowsRe = """"add"\s*:\s*"([^"]+)"[^\n]*?"rows"\s*:\s*(\d+)""".r
-  // on-disk size vocabulary: an add MAY record its file's byte size —
-  // what lets a SQL reader's Scan report real table statistics to
-  // Catalyst (auto-broadcast of small snapshots) without touching the
-  // filesystem at planning time
-  private val AddBytesRe = """"add"\s*:\s*"([^"]+)"[^\n]*?"bytes"\s*:\s*(\d+)""".r
-  // schema vocabulary (the Delta `metaData` analogue): an `alter` commit
-  // MAY declare the table schema — the StructType JSON, base64-encoded so
-  // the line-oriented action grammar never has to parse nested quoting.
-  // The LAST declaration at or below the read version wins; tables that
-  // never declared one keep deriving their schema from the data files.
-  private val SchemaRe = """"schema64"\s*:\s*"([A-Za-z0-9+/=]+)"""".r
-  // clustering vocabulary: a commit MAY declare the table's clustering
-  // spec — writes then range-partition on the column and record zone
-  // ranges without the writer having to know (`CREATE TABLE ...
-  // PARTITIONED BY (bucket(n, col))`). Last declaration wins.
-  private val ClusterRe = """"clusterby"\s*:\s*"([^"]+)"\s*,\s*"buckets"\s*:\s*(\d+)""".r
-  // tombstone vocabulary: a DROP COLUMN records the dropped column's
-  // PHYSICAL name so no later ADD/RENAME can reuse it — old data files
-  // still carry those bytes, and a reused name would silently resurrect
-  // stale values instead of serving NULLs. Tombstones accumulate.
-  private val TombstoneRe = """"tombstone"\s*:\s*"([^"]+)"""".r
-  // a purge commit lifts reservations: its rewrite removed the dead bytes
-  // from every live file, so the physical name is reusable again
-  private val UntombstoneRe = """"untombstone"\s*:\s*"([^"]+)"""".r
-  // multi-column zone stats: EVERY add records the file's per-column
-  // [lo, hi] for plain integral columns, harvested from the same footer
-  // the row count comes from — so filters on ANY integral column prune
-  // files, not just the declared clustering column (the Delta
-  // stats-for-first-N-columns design, in this log's compact vocabulary:
-  // "mstats":"a=1:9,b=-3:4"). Annotated-int columns carry a UNIT-FAITHFUL
-  // type tag so a range on them prunes too, with no unit mismatch
-  // possible: "d=d19000:19400" (DateType, epoch DAYS — the exact INT32
-  // value parquet stores), "ts=t1700000000000000:..." (timestamps, epoch
-  // MICROS — parquet's physical unit, MILLIS/NANOS normalized on
-  // harvest), "p=c2.100:999" (decimal, UNSCALED value at the annotated
-  // scale). A bare range stays a plain signed int — old logs decode
-  // unchanged.
-  private val MStatsRe = """"add"\s*:\s*"([^"]+)"[^\n]*?"mstats"\s*:\s*"([^"]*)"""".r
-  // string zone stats, kept out of mstats because the values are byte
-  // bounds, not longs: "sstats":"col=<b64lo>:<b64hi>" with URL-safe
-  // unpadded base64 (alphabet disjoint from the , : = separators). lo is
-  // the column's UTF-8 min truncated to 32 bytes (a prefix is always <=
-  // the full value in unsigned byte order); hi is the max truncated with
-  // the last byte INCREMENTED when truncation dropped anything (Delta's
-  // 32-char prefix convention — a safe upper bound, never an exact max).
-  private val SStatsRe = """"add"\s*:\s*"([^"]+)"[^\n]*?"sstats"\s*:\s*"([^"]*)"""".r
-
   /** One column's typed zone range. `kind`: 'i' plain signed int, 'd'
     * date as epoch days, 't' timestamp as epoch micros (LTZ and NTZ alike
     * — a column is only ever one of them, and the filter literal's Java
@@ -137,62 +72,6 @@ object CommitLog {
     * with the filter literal converted to the kind's unit — a kind
     * mismatch reads the file (fail-safe), never guesses. */
   final case class ColStat(kind: Char, lo: Long, hi: Long, scale: Int = 0)
-
-  // per-file key bloom filter, for tables that DECLARED one
-  // ({"bloomon":"<physCol>"}, [[declareBloom]]): each add MAY carry
-  // "bloomref":1, meaning an m-bit filter over the declared column's
-  // values sits in the SIDECAR file `<dataFile>.bloom` next to the data
-  // (the Delta/Iceberg bloom-index design). Sidecars, not inline bytes,
-  // on measured evidence: an inline bloom made EVERY log replay decode
-  // every live file's filter (~100 KB each), turning all metadata reads
-  // ∝ table — the first LogProbe tier A3 run showed exactly that
-  // (0.67/1.13/3.39 s at 1×/4×/16×). The log line carries one flag; the
-  // bits load lazily, per requested file, through an immutable-content
-  // cache. This is what makes hash-keyed ingest dedup ∝ batch instead
-  // of ∝ table: a UNIFORM content-hash key spans every file's zone
-  // range, but a fresh batch's keys miss almost every per-file bloom,
-  // so the duplicate check reads almost nothing.
-  private val BloomOnRe = """"bloomon"\s*:\s*"([^"]+)"""".r
-  private val BloomRefRe = """"add"\s*:\s*"([^"]+)"[^\n]*?"bloomref"\s*:\s*1""".r
-
-  // deletion-vector vocabulary (the public Delta deletion-vector /
-  // Iceberg position-delete design, reduced to this log's sidecar
-  // convention): a table OPTS IN with {"dvon":1} (an alter commit —
-  // default stays copy-on-write, so existing tables and gates are
-  // untouched); a 'delete' commit then MAY carry
-  // {"dv":"<dataFile>","dvfile":"<sidecar>","dvrows":N} — the sidecar
-  // file `<dataFile>.dv-<uuid>` holds the data file's SUPPRESSED row
-  // positions (sorted distinct longs), and every read of that file
-  // anti-joins them away. The vector REPLACES the file's previous one
-  // (each delete writes a merged sidecar under a NEW name — sidecars are
-  // immutable content, so time travel serves each version's own vector
-  // and the lazy per-file cache never invalidates). Removing or
-  // re-adding a file clears its vector. Why this beats copy-on-write at
-  // 100 TB: deleting 100 rows scattered across a million files rewrites
-  // ~0 bytes of data — the commit is ∝ rows deleted, not ∝ rows kept —
-  // and `compact` materializes vectors back into clean files when read
-  // amplification matters more than delete latency (the Delta
-  // OPTIMIZE trade, same knob).
-  private val DvOnRe = """"dvon"\s*:\s*1""".r
-  private val DvRe =
-    """"dv"\s*:\s*"([^"]+)"\s*,\s*"dvfile"\s*:\s*"([^"]+)"\s*,\s*"dvrows"\s*:\s*(\d+)""".r
-  // automatic materialization policy ({"dvmaxratio":"0.5"}, an alter
-  // action like dvon; TBLPROPERTIES 'graft.dv.maxRatio' at CREATE): when
-  // a merge-on-read statement's merged vector would push a file's
-  // suppressed/total past the ratio, the COMMITTING statement rewrites
-  // that file (survivors staged fresh, remove+add in the same commit)
-  // instead of letting reads decay into suppression probes — the Delta
-  // deletion-vector rewrite-threshold trade, declared per table. Files
-  // below the ratio keep their vectors; last declaration wins.
-  private val DvMaxRatioRe = """"dvmaxratio"\s*:\s*"([0-9.eE+-]+)"""".r
-  // CHECK-constraint vocabulary (the public Delta table-constraint
-  // semantics): {"constraint":"<name>","expr64":"<b64 sql>"} declares,
-  // {"unconstraint":"<name>"} drops. The expression is base64-encoded so
-  // the line grammar never parses nested quoting; enforcement happens at
-  // the staging chokepoints, per-row inside the write ([[withRowChecks]]).
-  private val ConstraintRe =
-    """"constraint"\s*:\s*"([^"]+)"\s*,\s*"expr64"\s*:\s*"([A-Za-z0-9+/=]+)"""".r
-  private val UnconstraintRe = """"unconstraint"\s*:\s*"([^"]+)"""".r
 
   /** Committed versions with a RETAINED commit file, ascending; empty for
     * a fresh/absent table. After [[expireLog]] this lists only the tail —
@@ -234,46 +113,35 @@ object CommitLog {
       .trim.toLongOption.filter(v => Files.exists(ckptPath(table, v)))
 
   def readCommit(table: String, version: Long): Commit = {
-    val pa = parsedFile(logDir(table).resolve(f"$version%012d.json"))
-    Commit(version, pa.op, pa.adds, pa.removes, pa.dvActs.map(_._1))
+    val as = parsedFile(commitPath(table, version))
+    Commit(version, opOf(as), as.collect { case a: Add => a.file },
+      as.collect { case Remove(f) => f }, as.collect { case d: Dv => d.file })
   }
+
+  /** A log file's header op ("unknown" when it has none). */
+  private def opOf(as: Seq[LogAction]): String =
+    as.collectFirst { case Op(op, _) => op }.getOrElse("unknown")
 
   /** The deletion-vector actions of one commit: (dataFile, sidecar)
     * pairs, in action order — what the CDF walk needs to replay each
     * file's vector evolution through a window. */
   private def dvActionsOf(table: String, version: Long): Seq[(String, String)] =
-    parsedFile(logDir(table).resolve(f"$version%012d.json"))
-      .dvActs.map(d => (d._1, d._2))
+    parsedFile(commitPath(table, version)).collect { case Dv(f, sc, _) => (f, sc) }
 
-  // CDF update-classification vocabulary (the Delta `_change_type =
-  // 'update_preimage' / 'update_postimage'` parity): an 'update'/'merge'
-  // commit MAY annotate which of its changes are UPDATE images —
-  //   {"dvu":"<dataFile>","dvufile":"<sidecar>"}: THIS commit's update-
-  //     preimage positions in <dataFile> (a `.dvu-` sidecar holding just
-  //     the statement's update-suppressed positions — NOT the merged
-  //     vector, which keeps riding the "dv" action);
-  //   {"cdfpost":"<addedFile>"}: the added image file holds update-
-  //     POSTimages (matched-update rows), not plain inserts.
-  // Annotations are per-commit history, invisible to replay/snapshots:
-  // only the change-feed walk reads them, to label updated rows as
-  // paired update_preimage/update_postimage instead of delete/insert.
-  // They share the vacuum horizon — a reclaimed `.dvu-` sidecar degrades
-  // that commit's labels back to delete/insert, never the row set.
-  private val DvuRe =
-    """"dvu"\s*:\s*"([^"]+)"\s*,\s*"dvufile"\s*:\s*"([^"]+)"""".r
-  private val CdfPostRe = """"cdfpost"\s*:\s*"([^"]+)"""".r
-
-  /** One commit's CDF update annotations: (file → update-position
-    * sidecar, postimage-marked added files). Empty for commits that
-    * never recorded any (every pre-round-14 log). */
+  /** One commit's CDF update annotations ([[LogAction.Dvu]],
+    * [[LogAction.CdfPost]]): (file → update-position sidecar,
+    * postimage-marked added files). Empty for commits that never recorded
+    * any (logs written before these annotations existed). */
   private def cdfAnnotationsOf(table: String, version: Long)
       : (Map[String, String], Set[String]) = {
-    val pa = parsedFile(logDir(table).resolve(f"$version%012d.json"))
-    (pa.dvu.toMap, pa.cdfPost)
+    val as = parsedFile(commitPath(table, version))
+    (as.collect { case Dvu(f, sc) => f -> sc }.toMap,
+      as.collect { case CdfPost(f) => f }.toSet)
   }
 
-  /** Replayed log state: live files (first-added order, with optional
-    * zone-map stats) plus the set of committed transaction ids.
+  /** Replayed log state: live files (first-added order, each with the add
+    * action that made it live) plus the set of committed transaction ids
+    * and the table's declarations.
     *
     * INVARIANT — cached instances are READ-ONLY after replay: instances
     * live in [[replayCache]] and are shared across every later call with
@@ -283,14 +151,10 @@ object CommitLog {
     * [[applyParsed]], under [[replay]]'s construction of a fresh
     * instance, writes here. */
   private final class LogState {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Option[(Long, Long)]]
-    // file -> the column its recorded [lo, hi] range describes (only for
-    // adds that NAMED it; pruning by filter-name requires this)
-    val statsCols = scala.collection.mutable.HashMap.empty[String, String]
-    // file -> footer row count, when the add recorded it
-    val rowCounts = scala.collection.mutable.HashMap.empty[String, Long]
-    // file -> on-disk byte size, when the add recorded it
-    val fileBytes = scala.collection.mutable.HashMap.empty[String, Long]
+    // live file -> its add action: zone range, row/byte counts, typed
+    // multi-stats, string bounds, bloom flag — re-emitted verbatim by
+    // checkpoint and restore
+    val live = scala.collection.mutable.LinkedHashMap.empty[String, Add]
     val txns = scala.collection.mutable.LinkedHashSet.empty[String]
     // the declared table schema (StructType JSON), when an alter committed one
     var schemaJson: Option[String] = None
@@ -298,21 +162,12 @@ object CommitLog {
     var clusterSpec: Option[(String, Int)] = None
     // physical names of DROPPED columns — permanently reserved
     val tombstones = scala.collection.mutable.LinkedHashSet.empty[String]
-    // file -> per-column typed [lo, hi] multi-stats (PHYSICAL names),
-    // when the add recorded them
-    val multiStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, ColStat]]
-    // file -> per-column string byte bounds (PHYSICAL names)
-    val stringStats =
-      scala.collection.mutable.HashMap.empty[String, Map[String, (Array[Byte], Array[Byte])]]
     // the declared bloom column (PHYSICAL name), when a commit set one
     var bloomCol: Option[String] = None
-    // files whose add recorded a bloom SIDECAR (`<file>.bloom`)
-    val bloomed = scala.collection.mutable.HashSet.empty[String]
     // deletion vectors: file -> (sidecar name, suppressed row count);
     // set by dv actions, cleared by the file's remove or re-add
     val dvs = scala.collection.mutable.HashMap.empty[String, (String, Long)]
-    // whether the table opted into merge-on-read deletes ({"dvon":1})
+    // whether the table opted into merge-on-read deletes (DvOn)
     var dvOn: Boolean = false
     // automatic materialization threshold, when declared (last wins)
     var dvMaxRatio: Option[Double] = None
@@ -320,95 +175,29 @@ object CommitLog {
     val constraints = scala.collection.mutable.LinkedHashMap.empty[String, String]
   }
 
-  /** Every action one log file (commit or checkpoint summary) carries,
-    * parsed ONCE. Immutable value — cached per file ([[parsedFile]]) and
-    * shared by every replay/CDF/conflict-check consumer, so the regex
-    * pass over a commit's text runs at most once per content generation
-    * instead of once per metadata call (the tl-gate driver floor was
-    * dominated by exactly this re-parsing). */
-  private final case class ParsedActions(
-      op: String,
-      adds: Seq[String],
-      removes: Seq[String],
-      stats: Map[String, (Long, Long)],
-      statsCols: Map[String, String],
-      rows: Map[String, Long],
-      bytes: Map[String, Long],
-      mstats: Map[String, Map[String, ColStat]],
-      sstats: Map[String, Map[String, (Array[Byte], Array[Byte])]],
-      bloomed: Set[String],
-      dvActs: Seq[(String, String, Long)],
-      dvOn: Boolean,
-      // outer Option = a dvmaxratio action exists (last one wins, exactly
-      // as the text pass applied them); inner = its parsed value
-      dvMaxRatio: Option[Option[Double]],
-      constraints: Seq[(String, String)],
-      unconstraints: Seq[String],
-      bloomOn: Option[String],
-      txns: Seq[String],
-      schemaJson: Option[String],
-      clusterSpec: Option[(String, Int)],
-      tombstones: Seq[String],
-      untombstones: Seq[String],
-      dvu: Seq[(String, String)],
-      cdfPost: Set[String])
+  // Decoded-actions cache UNDER the replay cache: log files are immutable
+  // by atomic rename, so each is decoded at most once per content
+  // generation, validated per access against the file's stamp
+  // ([[fileStamp]]). Access-ordered LRU bounded by WEIGHT — the total
+  // actions held, not the entry count: one checkpoint summary is O(live
+  // files) actions, so an entry cap would bound nothing. A file heavier
+  // than the whole budget is simply not kept.
+  private val MaxCachedActions = 1 << 16
+  private val parsedCache =
+    new java.util.LinkedHashMap[String, (String, Vector[LogAction])](64, 0.75f, true)
+  private var parsedCacheWeight = 0L
 
-  /** One full regex pass over a log file's text — the ONLY place the
-    * action vocabulary is decoded. Field-by-field identical to the former
-    * in-place text application ("last wins" declarations keep the last
-    * match, ordered actions keep match order). */
-  private def parseActions(text: String): ParsedActions = ParsedActions(
-    op = OpRe.findFirstMatchIn(text).map(_.group(1)).getOrElse("unknown"),
-    adds = AddRe.findAllMatchIn(text).map(_.group(1)).toSeq,
-    removes = RemoveRe.findAllMatchIn(text).map(_.group(1)).toSeq,
-    stats = AddStatsRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> (m.group(2).toLong, m.group(3).toLong)).toMap,
-    statsCols = AddStatsColRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(4)).toMap,
-    rows = AddRowsRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap,
-    bytes = AddBytesRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap,
-    mstats = MStatsRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> decodeMStats(m.group(2))).toMap,
-    sstats = SStatsRe.findAllMatchIn(text)
-      .map(m => m.group(1) -> decodeSStats(m.group(2))).toMap,
-    bloomed = BloomRefRe.findAllMatchIn(text).map(_.group(1)).toSet,
-    dvActs = DvRe.findAllMatchIn(text)
-      .map(m => (m.group(1), m.group(2), m.group(3).toLong)).toSeq,
-    dvOn = DvOnRe.findFirstIn(text).isDefined,
-    dvMaxRatio = DvMaxRatioRe.findAllMatchIn(text).toSeq.lastOption
-      .map(_.group(1).toDoubleOption),
-    constraints = ConstraintRe.findAllMatchIn(text).map(m =>
-      m.group(1) -> new String(
-        java.util.Base64.getDecoder.decode(m.group(2)), StandardCharsets.UTF_8)).toSeq,
-    unconstraints = UnconstraintRe.findAllMatchIn(text).map(_.group(1)).toSeq,
-    bloomOn = BloomOnRe.findAllMatchIn(text).toSeq.lastOption.map(_.group(1)),
-    txns = TxnRe.findAllMatchIn(text).map(_.group(1)).toSeq,
-    schemaJson = SchemaRe.findAllMatchIn(text).toSeq.lastOption.map(m =>
-      new String(java.util.Base64.getDecoder.decode(m.group(1)),
-        StandardCharsets.UTF_8)),
-    clusterSpec = ClusterRe.findAllMatchIn(text).toSeq.lastOption
-      .map(m => (m.group(1), m.group(2).toInt)),
-    tombstones = TombstoneRe.findAllMatchIn(text).map(_.group(1)).toSeq,
-    untombstones = UntombstoneRe.findAllMatchIn(text).map(_.group(1)).toSeq,
-    dvu = DvuRe.findAllMatchIn(text).map(m => (m.group(1), m.group(2))).toSeq,
-    cdfPost = CdfPostRe.findAllMatchIn(text).map(_.group(1)).toSet)
-
-  // Parsed-actions cache UNDER the replay cache: log files are immutable
-  // by atomic rename, so each need be parsed at most once per content
-  // generation. Validated per access against the file's
-  // (mtime, size, fileKey) stamp — the fileKey (inode) changes on a
-  // delete-and-recreate, which also closes the same-millisecond mtime
-  // aliasing window. Access-ordered LRU, bounded (one entry is O(actions
-  // in one commit); checkpoint summaries are O(live files), the same
-  // thing the replay cache already holds per table).
-  private val parsedCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, ParsedActions)](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, ParsedActions)]): Boolean =
-        size > 1024
-    })
+  private def cacheParsed(key: String, stamp: String, as: Vector[LogAction]): Unit =
+    parsedCache.synchronized {
+      val prev = parsedCache.put(key, (stamp, as))
+      if (prev != null) parsedCacheWeight -= math.max(1, prev._2.size)
+      parsedCacheWeight += math.max(1, as.size)
+      val it = parsedCache.values.iterator
+      while (parsedCacheWeight > MaxCachedActions && it.hasNext) {
+        parsedCacheWeight -= math.max(1, it.next()._2.size)
+        it.remove()
+      }
+    }
 
   /** Content-generation stamp: mtime + size + fileKey (inode) + creation
     * time, in ONE stat call. The creation time is the load-bearing
@@ -425,68 +214,56 @@ object CommitLog {
       s"${a.creationTime.toInstant.getEpochSecond}.${a.creationTime.toInstant.getNano}"
   }
 
-  /** The file's parsed actions, through the cache. */
-  private def parsedFile(p: Path): ParsedActions = {
+  /** The file's decoded actions, through the cache. Stat, read, stat
+    * again: the result is cached only when both stamps agree, so a file
+    * replaced between the stat and the read can never be cached under
+    * the other generation's stamp. */
+  private def parsedFile(p: Path): Vector[LogAction] = {
     val key = p.toString
     val stamp = fileStamp(p) // throws if the file vanished, like the read would
-    val hit = parsedCache.get(key)
+    val hit = parsedCache.synchronized(parsedCache.get(key))
     if (hit != null && hit._1 == stamp) return hit._2
-    val pa = parseActions(
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-    parsedCache.put(key, (stamp, pa))
-    pa
+    val as = LogAction.decodeFile(Files.readAllBytes(p), key)
+    if (fileStamp(p) == stamp) cacheParsed(key, stamp, as)
+    as
   }
 
-  /** Applies one log file's parsed actions to the state — the exact
-    * application order of the former text form (adds, removes, dv
-    * transitions, then the declaration vocabulary). */
-  private def applyParsed(state: LogState, pa: ParsedActions): Unit = {
-    pa.adds.foreach { f =>
-      state.live(f) = pa.stats.get(f)
-      pa.statsCols.get(f) match {
-        case Some(c) => state.statsCols(f) = c
-        case None    => state.statsCols.remove(f) // re-add without stats forgets the old claim
-      }
-      pa.mstats.get(f).filter(_.nonEmpty) match {
-        case Some(m) => state.multiStats(f) = m
-        case None    => state.multiStats.remove(f)
-      }
-      pa.sstats.get(f).filter(_.nonEmpty) match {
-        case Some(m) => state.stringStats(f) = m
-        case None    => state.stringStats.remove(f)
-      }
-      if (pa.bloomed(f)) state.bloomed += f else state.bloomed -= f
-      state.dvs.remove(f) // an add is fresh content; the commit's own dv
-                          // actions (checkpoint summaries) re-apply below
-      pa.rows.get(f) match {
-        case Some(n) => state.rowCounts(f) = n
-        case None    => state.rowCounts.remove(f)
-      }
-      pa.bytes.get(f) match {
-        case Some(n) => state.fileBytes(f) = n
-        case None    => state.fileBytes.remove(f)
-      }
+  /** Applies one log file's actions to the state, PHASE-ordered whatever
+    * the line order: adds, then removes, then dv transitions, then the
+    * declarations (removals of constraints and tombstones after their
+    * additions). "Last wins" declarations keep the file's last one. */
+  private def applyParsed(state: LogState, as: Vector[LogAction]): Unit = {
+    as.foreach {
+      case a: Add =>
+        state.live(a.file) = a
+        state.dvs.remove(a.file) // an add is fresh content; the file's own
+                                 // dv actions (checkpoint summaries) re-apply below
+      case _ =>
     }
-    pa.removes.foreach { f =>
-      state.live.remove(f); state.statsCols.remove(f)
-      state.rowCounts.remove(f); state.fileBytes.remove(f)
-      state.multiStats.remove(f); state.stringStats.remove(f)
-      state.bloomed -= f; state.dvs.remove(f)
+    as.foreach {
+      case Remove(f) => state.live.remove(f); state.dvs.remove(f)
+      case _ =>
     }
-    // dv actions AFTER adds/removes: a checkpoint summary re-declares a
-    // live file's vector on the line after its add, and a remove clears
-    // whatever vector the file carried
-    pa.dvActs.foreach { case (f, sc, n) => state.dvs(f) = (sc, n) }
-    if (pa.dvOn) state.dvOn = true
-    pa.dvMaxRatio.foreach(v => state.dvMaxRatio = v)
-    pa.constraints.foreach { case (n, e) => state.constraints(n) = e }
-    pa.unconstraints.foreach(state.constraints.remove)
-    pa.bloomOn.foreach(c => state.bloomCol = Some(c))
-    pa.txns.foreach(state.txns += _)
-    pa.schemaJson.foreach(j => state.schemaJson = Some(j))
-    pa.clusterSpec.foreach(cs => state.clusterSpec = Some(cs))
-    pa.tombstones.foreach(state.tombstones += _)
-    pa.untombstones.foreach(state.tombstones -= _)
+    as.foreach {
+      case Dv(f, sc, n) => state.dvs(f) = (sc, n)
+      case _ =>
+    }
+    as.foreach {
+      case DvOn => state.dvOn = true
+      case DvMaxRatio(r) => state.dvMaxRatio = Some(r)
+      case Constraint(n, e) => state.constraints(n) = e
+      case BloomOn(c) => state.bloomCol = Some(c)
+      case Txn(id) => state.txns += id
+      case Schema(j) => state.schemaJson = Some(j)
+      case ClusterBy(c, b) => state.clusterSpec = Some((c, b))
+      case Tombstone(t) => state.tombstones += t
+      case _ =>
+    }
+    as.foreach {
+      case Unconstraint(n) => state.constraints.remove(n)
+      case Untombstone(t) => state.tombstones -= t
+      case _ =>
+    }
   }
 
   /** The live file → stats state at `asOf` (default: latest). Checkpoint-
@@ -705,13 +482,7 @@ object CommitLog {
   def evolveSchema(table: String, newSchema: org.apache.spark.sql.types.StructType,
                    expectedTip: Long,
                    tombstones: Seq[String] = Seq.empty): Long = {
-    // tombstone names are interpolated into the log line raw — a quote or
-    // control char would corrupt the JSON and silently LOSE the
-    // reservation on replay (the same guard txnUpsert puts on txnId)
-    tombstones.foreach(t => require(
-      t.nonEmpty && !t.exists(c => c == '"' || c == '\\' || c < ' '),
-      s"tombstoned physical name must be non-empty without quotes, " +
-        s"backslashes, or control characters: '$t'"))
+    require(tombstones.forall(_.nonEmpty), "tombstoned physical names must be non-empty")
     // a RENAME or DROP of a column a CHECK constraint references would
     // leave the constraint dangling — every later write would fail
     // resolution with a confusing analysis error instead of this one.
@@ -728,10 +499,7 @@ object CommitLog {
         s"cannot evolve schema of $table: CHECK constraint '$n' ($e) " +
           s"references ${gone.mkString(", ")} — drop the constraint first")
     }
-    commitRaw(table, "alter",
-      s"""{"schema64":"${java.util.Base64.getEncoder
-        .encodeToString(newSchema.json.getBytes(StandardCharsets.UTF_8))}"}""" +:
-        tombstones.map(t => s"""{"tombstone":"$t"}"""),
+    commitRaw(table, "alter", Schema(newSchema.json) +: tombstones.map(Tombstone),
       Some(expectedTip))
   }
 
@@ -820,10 +588,7 @@ object CommitLog {
           s"cannot add CHECK constraint '$name' ($exprSql) to $table: " +
             s"the current snapshot already violates it, e.g. ${bad.head}")
       }
-      val b64 = java.util.Base64.getEncoder
-        .encodeToString(exprSql.getBytes(StandardCharsets.UTF_8))
-      Some(commitRaw(table, "alter",
-        Seq(s"""{"constraint":"$name","expr64":"$b64"}"""), Some(tip)))
+      Some(commitRaw(table, "alter", Seq(Constraint(name, exprSql)), Some(tip)))
     }.get
   }
 
@@ -870,8 +635,7 @@ object CommitLog {
   def dropConstraint(table: String, name: String): Option[Long] =
     serializably(table) { tip =>
       if (!constraintsOf(table, Some(tip)).contains(name)) None
-      else Some(commitRaw(table, "alter",
-        Seq(s"""{"unconstraint":"$name"}"""), Some(tip)))
+      else Some(commitRaw(table, "alter", Seq(Unconstraint(name)), Some(tip)))
     }
 
   /** The table's live CHECK constraints: name -> SQL expression. */
@@ -987,106 +751,36 @@ object CommitLog {
     named
   }
 
-  /** `{"add":f,"rows":N,"bytes":M}` — every data commit records its
-    * file's footer row count (ONE driver-side footer read per added file,
-    * a few KB of IO) and on-disk byte size (one stat), which is what makes
+  /** The add action of one freshly staged file: every data commit records
+    * its footer row count (ONE driver-side footer read per added file, a
+    * few KB of IO) and on-disk byte size (one stat), which is what makes
     * [[snapshotRowCount]] / [[snapshotSizeBytes]] metadata-only answers at
-    * any table size. A failed footer read degrades to a count-less add —
-    * the metadata count is then undefined, never wrong. */
-  private def addAction(table: String, f: String): String =
+    * any table size; the same footer open harvests the per-column
+    * multi-stats and string bounds. A failed footer read degrades to a
+    * count-less add — the metadata count is then undefined, never wrong. */
+  private def addAction(table: String, f: String): Add =
     addAction(table, f, declaredBloom(table))
 
   /** Multi-file callers resolve `bloomCol` ONCE per commit
-    * ([[declaredBloom]] replays the log) and pass it down. */
-  private def addAction(table: String, f: String, bloomCol: Option[String]): String =
-    s"""{"add":"$f"${addSuffix(table, f, bloomCol)}}"""
-
-  /** The trailing metadata every add action carries: footer row count,
-    * on-disk bytes, the per-column multi-stats, the per-column string
-    * bounds — ONE footer open serves all four — plus, on bloom-declared
-    * tables, the file's key bloom (one narrow column scan). */
-  private def addSuffix(table: String, f: String,
-                        bloomCol: Option[String] = None): String = {
+    * ([[declaredBloom]] replays the log) and pass it down. On a
+    * bloom-declared table the file's key bloom (one narrow column scan)
+    * lands as a SIDECAR `<f>.bloom`; the add carries only the flag. */
+  private def addAction(table: String, f: String, bloomCol: Option[String]): Add = {
     val fs = footerSummary(table, f)
-    // the bloom lands as a SIDECAR (`<f>.bloom`); the log line carries
-    // only the one-byte flag, so replays never pay bloom bytes
-    val bloomFlag = bloomCol.flatMap(bc =>
+    val bloomed = bloomCol.flatMap(bc =>
       try fileBloom(SparkSession.active, table, f, bc)
       catch { case scala.util.control.NonFatal(_) => None }) match {
       case Some(bits) =>
-        try { writeBloomSidecar(table, f, bits); ""","bloomref":1""" }
-        catch { case scala.util.control.NonFatal(_) => "" }
-      case None => ""
+        try { writeBloomSidecar(table, f, bits); true }
+        catch { case scala.util.control.NonFatal(_) => false }
+      case None => false
     }
-    fs.rows.fold("")(n => s""","rows":$n""") + fileSizeSuffix(table, f) +
-      (if (fs.mstats.isEmpty) ""
-       else s""","mstats":"${encodeMStats(fs.mstats)}"""") +
-      (if (fs.sstats.isEmpty) ""
-       else s""","sstats":"${encodeSStats(fs.sstats)}"""") +
-      bloomFlag
+    val bytes =
+      try Some(Files.size(Paths.get(table, f)))
+      catch { case scala.util.control.NonFatal(_) => None }
+    Add(f, rows = fs.rows, bytes = bytes, mstats = fs.mstats, sstats = fs.sstats,
+      bloomed = bloomed)
   }
-
-  /** `"a=1:9,d=d19000:19400,p=c2.100:999"` — names sorted for
-    * deterministic log lines. Only `[A-Za-z0-9_]+` names are ever encoded
-    * ([[footerSummary]] filters), so the separators cannot collide with
-    * content; a typed range leads with its kind tag (the bare form stays
-    * the plain-int encoding every older log already carries). */
-  private def encodeMStats(m: Map[String, ColStat]): String =
-    m.toSeq.sortBy(_._1).map {
-      case (c, ColStat('i', lo, hi, _)) => s"$c=$lo:$hi"
-      case (c, ColStat('c', lo, hi, sc)) => s"$c=c$sc.$lo:$hi"
-      case (c, ColStat(k, lo, hi, _)) => s"$c=$k$lo:$hi"
-    }.mkString(",")
-
-  private def decodeMStats(s: String): Map[String, ColStat] =
-    if (s.isEmpty) Map.empty
-    else s.split(',').toSeq.flatMap { part =>
-      part.split('=') match {
-        case Array(c, r) =>
-          val parsed: Option[(Char, Int, String)] = r.headOption match {
-            case Some('d') | Some('t') => Some((r.head, 0, r.tail))
-            case Some('c') =>
-              val dot = r.indexOf('.')
-              if (dot < 2) None // malformed typed range: drop the column
-              else r.substring(1, dot).toIntOption
-                .map(sc => ('c', sc, r.substring(dot + 1)))
-            case _ => Some(('i', 0, r))
-          }
-          parsed.flatMap { case (kind, scale, body) =>
-            body.split(':') match {
-              case Array(lo, hi) =>
-                for (l <- lo.toLongOption; h <- hi.toLongOption)
-                  yield c -> ColStat(kind, l, h, scale)
-              case _ => None
-            }
-          }
-        case _ => None
-      }
-    }.toMap
-
-  // string bounds ride URL-safe unpadded base64 — no '=', ',' or ':' in
-  // the alphabet, so the separators cannot collide with content
-  private val B64E = java.util.Base64.getUrlEncoder.withoutPadding
-  private val B64D = java.util.Base64.getUrlDecoder
-
-  private def encodeSStats(m: Map[String, (Array[Byte], Array[Byte])]): String =
-    m.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-      s"$c=${B64E.encodeToString(lo)}:${B64E.encodeToString(hi)}"
-    }.mkString(",")
-
-  private def decodeSStats(s: String): Map[String, (Array[Byte], Array[Byte])] =
-    if (s.isEmpty) Map.empty
-    else s.split(',').toSeq.flatMap { part =>
-      part.split('=') match {
-        case Array(c, r) => r.split(':') match {
-          case Array(lo, hi) =>
-            try Some(c -> (B64D.decode(lo), B64D.decode(hi)))
-            catch { case _: IllegalArgumentException => None }
-          case _ => None
-        }
-        case _ => None
-      }
-    }.toMap
 
   // ------------------------------------------------------------------ key blooms
   /** 20 bits/key, k=14 probes: per-key false-positive rate ~7e-5. The
@@ -1113,11 +807,6 @@ object CommitLog {
     val h2 = (h >>> 32) | (h << 32) | 1L // odd: full-period stepping
     Array.tabulate(BloomHashes)(i => java.lang.Long.remainderUnsigned(h1 + i * h2, mBits))
   }
-
-  private def bloomSet(bits: Array[Long], h: Long): Unit =
-    bloomIndices(h, bits.length * 64L).foreach { idx =>
-      bits((idx >>> 6).toInt) |= (1L << (idx & 63))
-    }
 
   private def bloomMayContain(bits: Array[Long], h: Long): Boolean =
     bloomIndices(h, bits.length * 64L).forall { idx =>
@@ -1238,7 +927,7 @@ object CommitLog {
     }
     require(ok, s"declareBloom($table, $column): bloom keys must be integral " +
       "or string — other types have no canonical string form to hash")
-    commitRaw(table, "alter", Seq(s"""{"bloomon":"$phys"}"""))
+    commitRaw(table, "alter", Seq(BloomOn(phys)))
   }
 
   /** The declared bloom column (PHYSICAL name), if any. */
@@ -1252,8 +941,8 @@ object CommitLog {
     * use the restricted form; this one loads every live bloom. */
   private[graft] def fileBlooms(table: String, asOf: Option[Long] = None)
       : Map[String, Array[Long]] = {
-    val state = replay(table, asOf)
-    fileBloomsOf(table, state.bloomed.filter(state.live.contains).toSeq)
+    fileBloomsOf(table,
+      replay(table, asOf).live.values.collect { case a if a.bloomed => a.file }.toSeq)
   }
 
   /** Blooms for an explicit file subset (only sidecars of `files` are
@@ -1284,7 +973,7 @@ object CommitLog {
     * committed version. Idempotent (re-enabling commits another alter). */
   def enableDv(table: String): Long = {
     Files.createDirectories(Paths.get(table))
-    commitRaw(table, "alter", Seq("""{"dvon":1}"""))
+    commitRaw(table, "alter", Seq(DvOn))
   }
 
   /** The table's automatic dv-materialization threshold, if declared
@@ -1304,7 +993,7 @@ object CommitLog {
     require(ratio > 0.0 && ratio <= 1.0,
       s"graft.dv.maxRatio must be in (0, 1], got $ratio")
     Files.createDirectories(Paths.get(table))
-    commitRaw(table, "alter", Seq(s"""{"dvmaxratio":"$ratio"}"""))
+    commitRaw(table, "alter", Seq(DvMaxRatio(ratio)))
   }
 
   /** Applies the table's automatic materialization policy to ONE
@@ -1315,23 +1004,22 @@ object CommitLog {
     * ratio keep their `dv` action. Files without a recorded footer row
     * count cannot evaluate the ratio and keep their vector (fail-safe).
     * The rewritten files' now-unreferenced merged sidecars are reclaimed
-    * eagerly. Returns (action lines, staged replacements for the
+    * eagerly. Returns (actions, staged replacements for the
     * caller's conflict cleanup). CDF is unaffected either way: the
     * remove-at-old-vector/add pair multiset-diffs to exactly the rows
     * the vector would have suppressed. */
   private def dvPolicyLines(spark: SparkSession, table: String, tip: Long,
                             written: Seq[(String, String, Long)])
-      : (Seq[String], Seq[String]) = {
+      : (Seq[LogAction], Seq[String]) = {
     val state = replay(table, Some(tip))
     val toMat = state.dvMaxRatio.fold(Seq.empty[(String, String, Long)]) { r =>
       written.filter { case (f, _, n) =>
-        state.rowCounts.get(f).exists(total => total > 0 && n.toDouble / total > r)
+        state.live.get(f).flatMap(_.rows)
+          .exists(total => total > 0 && n.toDouble / total > r)
       }
     }
     val matSet = toMat.map(_._1).toSet
-    val dvLines = written.filterNot(w => matSet(w._1)).map { case (f, sc, n) =>
-      s"""{"dv":"$f","dvfile":"$sc","dvrows":$n}"""
-    }
+    val dvLines = written.filterNot(w => matSet(w._1)).map { case (f, sc, n) => Dv(f, sc, n) }
     if (toMat.isEmpty) (dvLines, Seq.empty)
     else {
       val files = toMat.map(_._1)
@@ -1346,16 +1034,14 @@ object CommitLog {
       // (the same invariant the CoW route's empty-file guard protects);
       // `compact` materializes later, with its own guard
       if (matAdds.isEmpty && state.live.keys.forall(matSet)) {
-        return (written.map { case (f, sc, n) =>
-          s"""{"dv":"$f","dvfile":"$sc","dvrows":$n}"""
-        }, Seq.empty)
+        return (written.map { case (f, sc, n) => Dv(f, sc, n) }, Seq.empty)
       }
       toMat.foreach { case (_, sc, _) =>
         Files.deleteIfExists(Paths.get(table, sc))
       }
       val bloomCol = declaredBloom(table)
       (dvLines ++ matAdds.map(f => addAction(table, f, bloomCol)) ++
-        files.map(f => s"""{"remove":"$f"}"""), matAdds)
+        files.map(Remove), matAdds)
     }
   }
 
@@ -1510,9 +1196,9 @@ object CommitLog {
     val (dvLines, matAdds) = dvPolicyLines(SparkSession.active, table,
       expectedTip, finals)
     val lines = dvLines ++
-      updFinals.map { case (f, sc) => s"""{"dvu":"$f","dvufile":"$sc"}""" } ++
+      updFinals.map { case (f, sc) => Dvu(f, sc) } ++
       (added ++ postAdded).map(f => addAction(table, f, bloomCol)) ++
-      postAdded.map(f => s"""{"cdfpost":"$f"}""")
+      postAdded.map(CdfPost)
     try {
       val v = commitRaw(table, op, lines, Some(expectedTip), reconcile = true,
         dmlReadSet = Some((finals.map(_._1) ++ updFinals.map(_._1)).toSet))
@@ -1795,10 +1481,9 @@ object CommitLog {
           // positions live)
           val (dvLines, matAdds) = dvPolicyLines(spark, table, tip,
             written.toSeq.map { case (f, sc, n, _) => (f, sc, n) })
-          val lines = dvLines ++ written.toSeq.map { case (f, _, _, du) =>
-            s"""{"dvu":"$f","dvufile":"$du"}"""
-          } ++ (insAdded ++ postAdded).map(f => addAction(table, f, bloomCol)) ++
-            postAdded.map(f => s"""{"cdfpost":"$f"}""")
+          val lines = dvLines ++ written.toSeq.map { case (f, _, _, du) => Dvu(f, du) } ++
+            (insAdded ++ postAdded).map(f => addAction(table, f, bloomCol)) ++
+            postAdded.map(CdfPost)
           try Some(commitRaw(table, "merge", lines, Some(tip), reconcile = true,
             dmlReadSet = Some(written.map(_._1).toSet)))
           catch {
@@ -1830,7 +1515,7 @@ object CommitLog {
   private final case class FooterStats(
       rows: Option[Long],
       mstats: Map[String, ColStat],
-      sstats: Map[String, (Array[Byte], Array[Byte])])
+      sstats: Map[String, (ArraySeq[Byte], ArraySeq[Byte])])
 
   /** A safe string LOWER bound: the UTF-8 min truncated to
     * [[MaxStringBoundBytes]] — a prefix is always <= the full value in
@@ -1971,15 +1656,11 @@ object CommitLog {
         FooterStats(rows,
           capped.collect { case (n, Left(cs)) => n -> cs }.toMap,
           capped.collect { case (n, Right((lo, hi))) =>
-            truncHi(hi).map(h => n -> (truncLo(lo), h))
+            truncHi(hi).map(h => n ->
+              (ArraySeq.unsafeWrapArray(truncLo(lo)), ArraySeq.unsafeWrapArray(h)))
           }.flatten.toMap)
       } finally r.close()
     } catch { case scala.util.control.NonFatal(_) => FooterStats(None, Map.empty, Map.empty) }
-
-  private def fileSizeSuffix(table: String, f: String): String =
-    (try Some(Files.size(Paths.get(table, f)))
-     catch { case scala.util.control.NonFatal(_) => None })
-      .fold("")(n => s""","bytes":$n""")
 
   // One shared Hadoop conf for driver-side footer reads: `new
   // Configuration()` re-parses the XML defaults on EVERY call (~20 ms),
@@ -2068,16 +1749,13 @@ object CommitLog {
                                   statsCol: Option[String] = None): Long = {
     val bloomCol = declaredBloom(table)
     val addActions = add.map { f =>
-      val rowsSuffix = addSuffix(table, f, bloomCol)
-      (for (c <- statsCol; (lo, hi) <- footerMinMax(table, f, c))
-        yield s"""{"add":"$f","lo":$lo,"hi":$hi,"col":"$c"$rowsSuffix}""")
-        .getOrElse(s"""{"add":"$f"$rowsSuffix}""")
+      addAction(table, f, bloomCol).copy(zone =
+        for (c <- statsCol; (lo, hi) <- footerMinMax(table, f, c)) yield Zone(lo, hi, Some(c)))
     }
     // snapshot-derived rewrites reconcile past racing blind appends
     // (the racer's fresh files intersect neither the remove set nor the
     // rewritten rows); every other racer still aborts to a re-derive
-    commitRaw(table, op, addActions ++ remove.map(f => s"""{"remove":"$f"}"""),
-      expectedTip, reconcile = true)
+    commitRaw(table, op, addActions ++ remove.map(Remove), expectedTip, reconcile = true)
   }
 
   /** Row count from the parquet footer alone (no data pages touched). */
@@ -2099,8 +1777,7 @@ object CommitLog {
                      reconcile: Boolean = false): Long = {
     val bloomCol = declaredBloom(table)
     commitRaw(table, op,
-      add.map(f => addAction(table, f, bloomCol)) ++
-        remove.map(f => s"""{"remove":"$f"}"""),
+      add.map(f => addAction(table, f, bloomCol)) ++ remove.map(Remove),
       expectedTip, reconcile)
   }
 
@@ -2135,16 +1812,16 @@ object CommitLog {
     * schema/constraint change — still aborts to the caller's full
     * re-derive. Callers whose semantics depend on the commit-time live
     * set as a WHOLE (overwrite's remove-everything) must not opt in. */
-  private def commitRaw(table: String, op: String, actions: Seq[String],
+  private def commitRaw(table: String, op: String, actions: Seq[LogAction],
                         expectedTip: Option[Long] = None,
                         reconcile: Boolean = false,
                         dmlReadSet: Option[Set[String]] = None): Long = {
     Files.createDirectories(logDir(table))
-    val lines = (s"""{"op":"$op"}""" +: actions).mkString("", "\n", "\n")
+    val bytes = LogAction.encodeFile(Op(op) +: actions)
     // a txn-marked commit must NOT reconcile past a racer carrying a txn
     // marker: the marker's already-committed check ran at expectedTip,
     // and a racing replay of the SAME id would double-apply
-    lazy val oursHasTxn = actions.exists(TxnRe.findFirstIn(_).isDefined)
+    lazy val oursHasTxn = actions.exists(_.isInstanceOf[Txn])
     var attempt = 0
     while (attempt < 100) {
       val tip = currentVersion(table)
@@ -2162,7 +1839,7 @@ object CommitLog {
       }
       val v = tip + 1
       val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, lines.getBytes(StandardCharsets.UTF_8))
+      Files.write(tmp, bytes)
       try {
         // createLink is the put-if-absent primitive: hard-linking onto an
         // existing _log/<v>.json throws FileAlreadyExistsException
@@ -2201,21 +1878,12 @@ object CommitLog {
                                oursHasTxn: Boolean): Boolean = {
     val p = commitPath(table, v)
     if (!Files.exists(p)) return false
-    val pa = parsedFile(p)
-    BlindAddOps.contains(pa.op) &&
-      pa.removes.isEmpty &&
-      pa.dvActs.isEmpty &&
-      pa.dvu.isEmpty &&
-      pa.schemaJson.isEmpty &&
-      pa.clusterSpec.isEmpty &&
-      pa.tombstones.isEmpty &&
-      pa.untombstones.isEmpty &&
-      pa.constraints.isEmpty &&
-      pa.unconstraints.isEmpty &&
-      pa.bloomOn.isEmpty &&
-      !pa.dvOn &&
-      pa.dvMaxRatio.isEmpty &&
-      (!oursHasTxn || pa.txns.isEmpty)
+    val as = parsedFile(p)
+    BlindAddOps.contains(opOf(as)) && as.forall {
+      case _: Op | _: Add | _: CdfPost => true
+      case _: Txn => !oursHasTxn
+      case _ => false
+    }
   }
 
   /** Row-level DML ops — the other commit vocabulary [[commitRaw]]'s
@@ -2242,22 +1910,15 @@ object CommitLog {
                                   oursHasTxn: Boolean): Boolean = {
     val p = commitPath(table, v)
     if (!Files.exists(p)) return false
-    val pa = parsedFile(p)
-    DmlOps.contains(pa.op) &&
-      pa.adds.isEmpty &&
-      pa.schemaJson.isEmpty &&
-      pa.clusterSpec.isEmpty &&
-      pa.tombstones.isEmpty &&
-      pa.untombstones.isEmpty &&
-      pa.constraints.isEmpty &&
-      pa.unconstraints.isEmpty &&
-      pa.bloomOn.isEmpty &&
-      !pa.dvOn &&
-      pa.dvMaxRatio.isEmpty &&
-      (!oursHasTxn || pa.txns.isEmpty) &&
-      pa.removes.forall(!readSet(_)) &&
-      pa.dvActs.forall(d => !readSet(d._1)) &&
-      pa.dvu.forall(d => !readSet(d._1))
+    val as = parsedFile(p)
+    DmlOps.contains(opOf(as)) && as.forall {
+      case _: Op | _: CdfPost => true
+      case Remove(f) => !readSet(f)
+      case Dv(f, _, _) => !readSet(f)
+      case Dvu(f, _) => !readSet(f)
+      case _: Txn => !oursHasTxn
+      case _ => false
+    }
   }
 
   /** Transactional append. Returns the committed version. Appends are
@@ -2326,8 +1987,7 @@ object CommitLog {
     * streaming query IS one); concurrent writers with the SAME id are a
     * deployment error this log does not arbitrate. */
   def txnAppend(df: DataFrame, table: String, txnId: String): Option[Long] = {
-    require(txnId.nonEmpty && !txnId.exists(c => c == '"' || c == '\n'),
-      s"txnId must be non-empty without quotes/newlines: '$txnId'")
+    require(txnId.nonEmpty, "txnId must be non-empty")
     Files.createDirectories(Paths.get(table))
     serializably(table) { tip =>
       if (replay(table, Some(tip)).txns.contains(txnId)) None
@@ -2335,7 +1995,7 @@ object CommitLog {
         val added = stage(df, table)
         val bloomCol = declaredBloom(table)
         try Some(commitRaw(table, "txn-append",
-          added.map(f => addAction(table, f, bloomCol)) :+ s"""{"txn":"$txnId"}""",
+          added.map(f => addAction(table, f, bloomCol)) :+ Txn(txnId),
           Some(tip)))
         catch {
           case e: java.util.ConcurrentModificationException =>
@@ -2357,8 +2017,7 @@ object CommitLog {
     * recognized replay. */
   def txnCommitFiles(table: String, files: Seq[String], txnId: String,
                      replace: Boolean = false): Option[Long] = {
-    require(txnId.nonEmpty && !txnId.exists(c => c == '"' || c == '\n'),
-      s"txnId must be non-empty without quotes/newlines: '$txnId'")
+    require(txnId.nonEmpty, "txnId must be non-empty")
     Files.createDirectories(Paths.get(table))
     serializably(table) { tip =>
       if (tip >= 0 && replay(table, Some(tip)).txns.contains(txnId)) None
@@ -2366,7 +2025,7 @@ object CommitLog {
         val removes = if (replace && tip >= 0) snapshotFiles(table, Some(tip)) else Seq.empty
         val bloomCol = declaredBloom(table)
         val actions = files.map(f => addAction(table, f, bloomCol)) ++
-          removes.map(f => s"""{"remove":"$f"}""") :+ s"""{"txn":"$txnId"}"""
+          removes.map(Remove) :+ Txn(txnId)
         Some(commitRaw(table, if (replace) "txn-overwrite" else "txn-append",
           actions, Some(tip)))
       }
@@ -2455,7 +2114,7 @@ object CommitLog {
     * they appear in neither the removes nor the re-staged adds. */
   private def upsertActions(spark: SparkSession, table: String, tip: Long,
                             updates: DataFrame, keys: Seq[String])
-      : (Seq[String], Seq[String]) = {
+      : (Seq[String], Seq[LogAction]) = {
     val old = if (tip < 0) Seq.empty else snapshotFiles(table, Some(tip))
     val (candidates, _) = upsertCandidates(table, tip, updates, keys, old)
     // the declared-schema reader, so an upsert after column evolution
@@ -2491,7 +2150,7 @@ object CommitLog {
         val bloomCol = declaredBloom(table)
         (fs, fs.map(f => addAction(table, f, bloomCol)))
     }
-    (added, addLines ++ candidates.map(f => s"""{"remove":"$f"}"""))
+    (added, addLines ++ candidates.map(Remove))
   }
 
   /** Transactional upsert: rows in `updates` replace current rows with the
@@ -2527,15 +2186,14 @@ object CommitLog {
     * through the version claim as usual. */
   def txnUpsert(spark: SparkSession, updates: DataFrame, table: String,
                 keys: Seq[String], txnId: String): Option[Long] = {
-    require(txnId.nonEmpty && !txnId.exists(c => c == '"' || c == '\n'),
-      s"txnId must be non-empty without quotes/newlines: '$txnId'")
+    require(txnId.nonEmpty, "txnId must be non-empty")
     Files.createDirectories(Paths.get(table))
     serializably(table) { tip =>
       if (tip >= 0 && replay(table, Some(tip)).txns.contains(txnId)) None
       else {
         val (added, actions) = upsertActions(spark, table, tip, updates, keys)
         try Some(commitRaw(table, "upsert",
-          actions :+ s"""{"txn":"$txnId"}""", Some(tip), reconcile = true))
+          actions :+ Txn(txnId), Some(tip), reconcile = true))
         catch {
           case e: java.util.ConcurrentModificationException =>
             unstage(table, added); throw e
@@ -2580,7 +2238,8 @@ object CommitLog {
         // only the CANDIDATES' flagged sidecars are touched — the probe's
         // metadata cost is ∝ candidate files (cached: steady-state ∝ new
         // files), never a decode of every live bloom per replay
-        val blooms = fileBloomsOf(table, zoneCands.filter(state.bloomed))
+        val blooms = fileBloomsOf(table,
+          zoneCands.filter(f => state.live.get(f).exists(_.bloomed)))
         val (withB, without) = zoneCands.partition(blooms.contains)
         if (withB.isEmpty) zoneCands
         else {
@@ -2658,7 +2317,8 @@ object CommitLog {
     * column, for files whose commit recorded stats (plain appends carry
     * none and are never skipped — absence of stats must fail SAFE). */
   def fileStats(table: String, asOf: Option[Long] = None): Map[String, (Long, Long)] =
-    replay(table, asOf).live.collect { case (f, Some(s)) => f -> s }.toMap
+    replay(table, asOf).live.values
+      .flatMap(a => a.zone.map(z => a.file -> (z.lo, z.hi))).toMap
 
   /** Transactional append that clusters `df` on `statsCol` (range
     * repartition into `buckets` files, each covering a disjoint key range)
@@ -2712,7 +2372,7 @@ object CommitLog {
     * Z-ORDER form, so every caller (INSERT on a declared table, upsert,
     * compaction) honors a z layout without knowing about it. */
   private def stageClustered(spark: SparkSession, df: DataFrame, table: String,
-                             statsCol: String, buckets: Int): (Seq[String], Seq[String]) = {
+                             statsCol: String, buckets: Int): (Seq[String], Seq[Add]) = {
     import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
     zSpecColumns(statsCol) match {
       case Some(zc) => return stageZOrdered(spark, df, table, zc, buckets)
@@ -2731,9 +2391,9 @@ object CommitLog {
       val r = spark.read.parquet(Paths.get(table, f).toString)
         .agg(fmin(col(s"`$physCol`").cast("long")),
           fmax(col(s"`$physCol`").cast("long"))).head()
-      val rowsSuffix = addSuffix(table, f, bloomCol)
-      if (r.isNullAt(0)) s"""{"add":"$f"$rowsSuffix}"""
-      else s"""{"add":"$f","lo":${r.getLong(0)},"hi":${r.getLong(1)},"col":"$physCol"$rowsSuffix}"""
+      val add = addAction(table, f, bloomCol)
+      if (r.isNullAt(0)) add
+      else add.copy(zone = Some(Zone(r.getLong(0), r.getLong(1), Some(physCol))))
     }
     (files, lines)
   }
@@ -2748,7 +2408,7 @@ object CommitLog {
     * stage loudly on violation. */
   private def stageZOrdered(spark: SparkSession, df: DataFrame, table: String,
                             physCols: Seq[String], buckets: Int)
-      : (Seq[String], Seq[String]) = {
+      : (Seq[String], Seq[Add]) = {
     import org.apache.spark.sql.functions.{col, count => fcount, lit, max => fmax, min => fmin}
     val logicals = physCols.map(logicalFor(table, _))
     require(logicals.forall(l => df.columns.exists(_.equalsIgnoreCase(l))),
@@ -2769,7 +2429,7 @@ object CommitLog {
         (fcount(lit(1)) +: physCols.map(p => fcount(col(s"`$p`"))))
       val r = spark.read.parquet(Paths.get(table, f).toString)
         .agg(aggs.head, aggs.tail: _*).head()
-      val rowsSuffix = addSuffix(table, f, bloomCol)
+      val add = addAction(table, f, bloomCol)
       val totalIdx = 2 + 2 * physCols.size
       // the null guard runs UNCONDITIONALLY on non-empty files: an
       // all-null-coordinate file would land stats-less (min of nulls is
@@ -2779,14 +2439,14 @@ object CommitLog {
         fail(s"z-order clustering on $logicals requires non-null " +
           "coordinates — a null row would be invisible to the recorded " +
           "zkey range and box queries would silently miss it")
-      if (r.isNullAt(0)) s"""{"add":"$f"$rowsSuffix}""" // empty range partition
+      if (r.isNullAt(0)) add // empty range partition
       else {
         val ranges = physCols.indices.map(d =>
           (r.getLong(2 + 2 * d), r.getLong(3 + 2 * d)))
         if (ranges.exists { case (lo, hi) => lo < 0 || hi > 65535L })
           fail(s"z-order clustering on $logicals needs 16-bit coordinates " +
             s"[0, 65535], got ${ranges.mkString(" x ")} — quantize first")
-        s"""{"add":"$f","lo":${r.getLong(0)},"hi":${r.getLong(1)},"col":"$spec"$rowsSuffix}"""
+        add.copy(zone = Some(Zone(r.getLong(0), r.getLong(1), Some(spec))))
       }
     }
     (files, lines)
@@ -2821,8 +2481,7 @@ object CommitLog {
       val spec = s"z(${cols.map(physicalFor(table, _, Some(tip))).mkString(",")})"
       val (added, lines) = stageClustered(spark, current, table, spec, buckets)
       try commitRaw(table, "cluster",
-        lines ++ old.map(f => s"""{"remove":"$f"}""") :+
-          clusteringAction(spec, buckets), Some(tip))
+        lines ++ old.map(Remove) :+ ClusterBy(spec, buckets), Some(tip))
       catch {
         case e: java.util.ConcurrentModificationException =>
           unstage(table, added); throw e
@@ -2831,15 +2490,12 @@ object CommitLog {
   }
 
   /** The table's declared clustering spec (column, buckets), when a
-    * commit set one (`{"clusterby":...,"buckets":...}` — what `CREATE
+    * commit set one ([[LogAction.ClusterBy]] — what `CREATE
     * TABLE ... PARTITIONED BY (bucket(n, col))` records): writers consult
     * it so every INSERT lands range-clustered with zone ranges, without
     * the writing code knowing the layout policy. */
   def declaredClustering(table: String, asOf: Option[Long] = None): Option[(String, Int)] =
     replay(table, asOf).clusterSpec
-
-  private[graft] def clusteringAction(statsCol: String, buckets: Int): String =
-    s"""{"clusterby":"$statsCol","buckets":$buckets}"""
 
   /** Creates an empty table at commit v0: one zero-row data file carrying
     * `schema` (the table is immediately readable as empty, the schema
@@ -2852,7 +2508,7 @@ object CommitLog {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).coalesce(1)
     val files = stage(empty, table)
     commitRaw(table, "create", files.map(f => addAction(table, f)) ++
-      clustering.map { case (c, b) => clusteringAction(c, b) })
+      clustering.map { case (c, b) => ClusterBy(c, b) })
   }
 
   /** Transactional clustered overwrite: one commit replaces the snapshot
@@ -2867,7 +2523,7 @@ object CommitLog {
       val old = if (tip < 0) Seq.empty else snapshotFiles(table, Some(tip))
       val (added, lines) = stageClustered(spark, df, table, statsCol, buckets)
       try commitRaw(table, "overwrite",
-        lines ++ old.map(f => s"""{"remove":"$f"}"""), Some(tip))
+        lines ++ old.map(Remove), Some(tip))
       catch {
         case e: java.util.ConcurrentModificationException =>
           unstage(table, added); throw e
@@ -2896,8 +2552,7 @@ object CommitLog {
       // a re-cluster also (re)declares the spec, so future INSERTs keep
       // the layout the operator just paid to establish
       try commitRaw(table, "cluster",
-        lines ++ old.map(f => s"""{"remove":"$f"}""") :+
-          clusteringAction(statsCol, buckets), Some(tip))
+        lines ++ old.map(Remove) :+ ClusterBy(statsCol, buckets), Some(tip))
       catch {
         case e: java.util.ConcurrentModificationException =>
           unstage(table, added); throw e
@@ -2946,8 +2601,8 @@ object CommitLog {
     * commits). These are the era boundaries change serving splits at. */
   private def dropVersions(table: String, fromV: Long, toV: Long): Seq[Long] =
     ((fromV + 1) to toV).filter { v =>
-      val pa = parsedFile(commitPath(table, v))
-      pa.op == "alter" && pa.tombstones.nonEmpty
+      val as = parsedFile(commitPath(table, v))
+      opOf(as) == "alter" && as.exists(_.isInstanceOf[Tombstone])
     }
 
   /** The schema-era sub-windows of `(fromV, toV]`: split just BELOW every
@@ -3305,9 +2960,9 @@ object CommitLog {
     val phys = physicalFor(table, column, asOf)
     // case-insensitive, matching Spark's default column resolution — the
     // SQL path hands us the schema's casing, the writer the user's
-    val named = state.live.collect {
-      case (f, Some(s)) if state.statsCols.get(f).exists(_.equalsIgnoreCase(phys)) =>
-        f -> s
+    val named = state.live.values.collect {
+      case Add(f, Some(Zone(lo, hi, Some(c))), _, _, _, _, _) if c.equalsIgnoreCase(phys) =>
+        f -> (lo, hi)
     }.toMap
     // multi-stats extend the reach to every file whose footer recorded a
     // range for the column — plain appends included; the NAMED clustering
@@ -3316,13 +2971,9 @@ object CommitLog {
     // against raw long bounds, and a typed (date/timestamp/decimal) range
     // served here could be compared in the wrong unit — typed callers go
     // through [[typedStatsOn]], which keeps the kind attached.
-    val multi = state.multiStats.toSeq.collect {
-      case (f, m) if state.live.contains(f) =>
-        m.collectFirst {
-          case (c, cs) if cs.kind == 'i' && c.equalsIgnoreCase(phys) =>
-            f -> (cs.lo, cs.hi)
-        }
-    }.flatten.toMap
+    val multi = state.live.values.flatMap(a => a.mstats.collectFirst {
+      case (c, cs) if cs.kind == 'i' && c.equalsIgnoreCase(phys) => a.file -> (cs.lo, cs.hi)
+    }).toMap
     multi ++ named
   }
 
@@ -3336,10 +2987,9 @@ object CommitLog {
                    asOf: Option[Long] = None): Map[String, ColStat] = {
     val state = replay(table, asOf)
     val phys = physicalFor(table, column, asOf)
-    state.multiStats.toSeq.collect {
-      case (f, m) if state.live.contains(f) =>
-        m.collectFirst { case (c, cs) if c.equalsIgnoreCase(phys) => f -> cs }
-    }.flatten.toMap
+    state.live.values.flatMap(a => a.mstats.collectFirst {
+      case (c, cs) if c.equalsIgnoreCase(phys) => a.file -> cs
+    }).toMap
   }
 
   /** String byte bounds on `column` for the live snapshot: file →
@@ -3351,19 +3001,17 @@ object CommitLog {
                     asOf: Option[Long] = None): Map[String, (Array[Byte], Array[Byte])] = {
     val state = replay(table, asOf)
     val phys = physicalFor(table, column, asOf)
-    state.stringStats.toSeq.collect {
-      case (f, m) if state.live.contains(f) =>
-        m.collectFirst { case (c, b) if c.equalsIgnoreCase(phys) => f -> b }
-    }.flatten.toMap
+    state.live.values.flatMap(a => a.sstats.collectFirst {
+      case (c, (lo, hi)) if c.equalsIgnoreCase(phys) => a.file -> ((lo.toArray, hi.toArray))
+    }).toMap
   }
 
   /** file → the named column its recorded zone range describes, for every
     * live file whose add action NAMED one — one log replay, bulk (callers
     * classifying many files must not replay per file). */
-  def fileStatsColumns(table: String, asOf: Option[Long] = None): Map[String, String] = {
-    val state = replay(table, asOf)
-    state.statsCols.filter { case (f, _) => state.live.contains(f) }.toMap
-  }
+  def fileStatsColumns(table: String, asOf: Option[Long] = None): Map[String, String] =
+    replay(table, asOf).live.values.flatMap(a =>
+      a.zone.flatMap(_.col).map(a.file -> _)).toMap
 
   /** Metadata-only `count(*)`: the snapshot's total rows summed from the
     * per-file footer counts the add actions recorded — `Some(total)` iff
@@ -3376,11 +3024,11 @@ object CommitLog {
     * from their own footers, so the sum is invariant. */
   def snapshotRowCount(table: String, asOf: Option[Long] = None): Option[Long] = {
     val state = replay(table, asOf)
-    val files = state.live.keys.toSeq
-    if (files.forall(state.rowCounts.contains))
+    val adds = state.live.values
+    if (adds.forall(_.rows.isDefined))
       // vector counts are exact (sorted distinct positions), so the
       // metadata answer stays exact on merge-on-read tables
-      Some(files.map(state.rowCounts).sum - state.dvs.values.map(_._2).sum)
+      Some(adds.flatMap(_.rows).sum - state.dvs.values.map(_._2).sum)
     else None
   }
 
@@ -3389,16 +3037,15 @@ object CommitLog {
     * committed by an older writer vocabulary are absent — a pruned-scan
     * row estimate is exact only when every file it reads is present. */
   def fileRowCounts(table: String, asOf: Option[Long] = None): Map[String, Long] =
-    replay(table, asOf).rowCounts.toMap
+    replay(table, asOf).live.values.flatMap(a => a.rows.map(a.file -> _)).toMap
 
   /** Per-file on-disk byte sizes: the log's byte-size vocabulary with a
     * filesystem stat as the fallback for legacy adds — exact either way
     * (a live file always exists on disk). */
   def fileSizeBytes(table: String, asOf: Option[Long] = None): Map[String, Long] = {
-    val state = replay(table, asOf)
-    state.live.keys.map { f =>
-      f -> state.fileBytes.getOrElse(f,
-        try Files.size(Paths.get(table, f))
+    replay(table, asOf).live.values.map { a =>
+      a.file -> a.bytes.getOrElse(
+        try Files.size(Paths.get(table, a.file))
         catch { case scala.util.control.NonFatal(_) => 0L })
     }.toMap
   }
@@ -3427,14 +3074,13 @@ object CommitLog {
     // recorded ranges are only upper envelopes — decline, never guess
     if (state.dvs.nonEmpty) return None
     val phys = physicalFor(table, column, asOf) // zone actions store physical names
-    val files = state.live.keys.toSeq
-    val covered = files.forall { f =>
-      state.live(f).isDefined && state.statsCols.get(f).exists(_.equalsIgnoreCase(phys)) &&
-        state.rowCounts.get(f).forall(_ > 0L)
+    val adds = state.live.values.toSeq
+    val covered = adds.forall { a =>
+      a.zone.exists(_.col.exists(_.equalsIgnoreCase(phys))) && a.rows.forall(_ > 0L)
     }
-    if (files.nonEmpty && covered) {
-      val ranges = files.map(f => state.live(f).get)
-      Some((ranges.map(_._1).min, ranges.map(_._2).max))
+    if (adds.nonEmpty && covered) {
+      val zones = adds.flatMap(_.zone)
+      Some((zones.map(_.lo).min, zones.map(_.hi).max))
     } else None
   }
 
@@ -3566,8 +3212,7 @@ object CommitLog {
             current.schema).coalesce(1), table)
         try Some(commitRaw(table, "purge",
           addLines ++ emptyGuard.map(f => addAction(table, f)) ++
-            old.map(f => s"""{"remove":"$f"}""") ++
-            tombs.map(t => s"""{"untombstone":"$t"}"""), Some(tip)))
+            old.map(Remove) ++ tombs.map(Untombstone), Some(tip)))
         catch {
           case e: java.util.ConcurrentModificationException =>
             unstage(table, added ++ emptyGuard); throw e
@@ -3643,56 +3288,27 @@ object CommitLog {
     * Production writers call this every N commits (Delta's N=10); it is
     * explicit here so gates can pin the before/after behavior. Returns the
     * checkpointed version. */
-  /** Re-serializes one live file's FULL add action from a replayed state
-    * (stats, row/byte counts, typed multi-stats, string bounds, bloom
-    * flag) — what the checkpoint summary rolls per file, and what
-    * [[restore]] re-declares when it revives a historical snapshot. */
-  private def stateAddLine(state: LogState, f: String): String = {
-    val rows = state.rowCounts.get(f).fold("")(n => s""","rows":$n""") +
-      state.fileBytes.get(f).fold("")(n => s""","bytes":$n""") +
-      state.multiStats.get(f).filter(_.nonEmpty)
-        .fold("")(m => s""","mstats":"${encodeMStats(m)}"""") +
-      state.stringStats.get(f).filter(_.nonEmpty)
-        .fold("")(m => s""","sstats":"${encodeSStats(m)}"""") +
-      (if (state.bloomed(f)) ""","bloomref":1""" else "")
-    (state.live(f), state.statsCols.get(f)) match {
-      case (Some((lo, hi)), Some(c)) =>
-        s"""{"add":"$f","lo":$lo,"hi":$hi,"col":"$c"$rows}"""
-      case (Some((lo, hi)), None) => s"""{"add":"$f","lo":$lo,"hi":$hi$rows}"""
-      case _                      => s"""{"add":"$f"$rows}"""
-    }
-  }
-
   def checkpoint(table: String): Long = {
     val v = currentVersion(table)
     require(v >= 0, s"cannot checkpoint $table: no commits")
     val state = replay(table, Some(v))
-    // declared schema + clustering spec must survive the roll like txn markers
-    val schemaLine = state.schemaJson.map(j =>
-      s"""{"schema64":"${java.util.Base64.getEncoder
-        .encodeToString(j.getBytes(StandardCharsets.UTF_8))}"}""").toSeq ++
-      state.clusterSpec.map { case (c, b) => clusteringAction(c, b) }.toSeq ++
-      state.tombstones.toSeq.map(t => s"""{"tombstone":"$t"}""") ++
-      state.bloomCol.map(c => s"""{"bloomon":"$c"}""").toSeq ++
-      (if (state.dvOn) Seq("""{"dvon":1}""") else Seq.empty) ++
-      state.dvMaxRatio.map(r => s"""{"dvmaxratio":"$r"}""").toSeq ++
-      state.constraints.toSeq.map { case (n, e) =>
-        val b64 = java.util.Base64.getEncoder
-          .encodeToString(e.getBytes(StandardCharsets.UTF_8))
-        s"""{"constraint":"$n","expr64":"$b64"}"""
-      } ++
-      // live deletion vectors roll into the summary too; [[applyParsed]]
-      // is phase-ordered (all adds, then all dv actions) regardless of
-      // line order, so the summary replays to exactly this state
-      state.dvs.toSeq.map { case (f, (sc, n)) =>
-        s"""{"dv":"$f","dvfile":"$sc","dvrows":$n}"""
-      }
-    val lines = (s"""{"op":"checkpoint","version":$v}""" +: (schemaLine ++
-      state.live.keys.toSeq.map(f => stateAddLine(state, f)) ++
-      state.txns.toSeq.map(t => s"""{"txn":"$t"}"""))
-    ).mkString("", "\n", "\n")
+    // declarations survive the roll like txn markers; live deletion vectors
+    // roll in too — [[applyParsed]] is phase-ordered (all adds, then all dv
+    // actions) regardless of line order, so the summary replays to exactly
+    // this state. Each live file re-emits the add action that made it live.
+    val actions = Op("checkpoint", Some(v)) +: (
+      state.schemaJson.map(Schema).toSeq ++
+        state.clusterSpec.map { case (c, b) => ClusterBy(c, b) } ++
+        state.tombstones.toSeq.map(Tombstone) ++
+        state.bloomCol.map(BloomOn) ++
+        (if (state.dvOn) Seq(DvOn) else Seq.empty) ++
+        state.dvMaxRatio.map(DvMaxRatio) ++
+        state.constraints.toSeq.map { case (n, e) => Constraint(n, e) } ++
+        state.dvs.toSeq.map { case (f, (sc, n)) => Dv(f, sc, n) } ++
+        state.live.values ++
+        state.txns.toSeq.map(Txn))
     val tmp = logDir(table).resolve(s".tmp-ckpt-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, lines.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, LogAction.encodeFile(actions))
     Files.move(tmp, ckptPath(table, v),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     val ptr = logDir(table).resolve(s".tmp-ptr-${java.util.UUID.randomUUID()}")
@@ -3746,18 +3362,14 @@ object CommitLog {
           "back — evolve the schema explicitly instead")
       val schemaLines =
         if (target.schemaJson == cur.schemaJson) Seq.empty
-        else target.schemaJson.toSeq.map(j =>
-          s"""{"schema64":"${java.util.Base64.getEncoder
-            .encodeToString(j.getBytes(StandardCharsets.UTF_8))}"}""")
+        else target.schemaJson.toSeq.map(Schema)
       // constraint reconciliation: drop what the target lacked, re-declare
       // what it had (possibly with a different expression)
       val constraintLines =
         cur.constraints.keys.filterNot(target.constraints.contains).toSeq
-          .map(n => s"""{"unconstraint":"$n"}""") ++
+          .map(Unconstraint) ++
           target.constraints.toSeq.collect {
-            case (n, e) if !cur.constraints.get(n).contains(e) =>
-              s"""{"constraint":"$n","expr64":"${java.util.Base64.getEncoder
-                .encodeToString(e.getBytes(StandardCharsets.UTF_8))}"}"""
+            case (n, e) if !cur.constraints.get(n).contains(e) => Constraint(n, e)
           }
       val targetDv = target.dvs.toMap
       val curDv = cur.dvs.toMap
@@ -3779,11 +3391,9 @@ object CommitLog {
           }
         }
         val lines = schemaLines ++ constraintLines ++
-          readds.map(f => stateAddLine(target, f)) ++
-          readds.flatMap(f => targetDv.get(f).map { case (sc, n) =>
-            s"""{"dv":"$f","dvfile":"$sc","dvrows":$n}"""
-          }) ++
-          removes.map(f => s"""{"remove":"$f"}""")
+          readds.map(target.live) ++
+          readds.flatMap(f => targetDv.get(f).map { case (sc, n) => Dv(f, sc, n) }) ++
+          removes.map(Remove)
         Some(commitRaw(table, "restore", lines, Some(tip)))
       }
     }

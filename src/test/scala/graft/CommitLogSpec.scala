@@ -382,14 +382,18 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.read(spark, t).schema.fieldNames.toSeq == Seq("id", "x"))
   }
 
-  test("evolveSchema refuses tombstone names that would corrupt the log line") {
+  test("evolveSchema reserves tombstone names holding quotes, backslashes and newlines") {
     val t = freshTable("badtomb")
     CommitLog.append(df(1L -> "a"), t)
     val schema = CommitLog.read(spark, t).schema
-    val tip = CommitLog.currentVersion(t)
-    for (bad <- Seq("a\"b", "a\nb", "a\\b", ""))
-      assertThrows[IllegalArgumentException](
-        CommitLog.evolveSchema(t, schema, tip, Seq(bad)))
+    assertThrows[IllegalArgumentException](
+      CommitLog.evolveSchema(t, schema, CommitLog.currentVersion(t), Seq("")))
+    val names = Seq("a\"b", "a\nb", "a\\b")
+    CommitLog.evolveSchema(t, schema, CommitLog.currentVersion(t), names)
+    assert(CommitLog.droppedPhysicalNames(t) == names.toSet)
+    CommitLog.checkpoint(t)
+    assert(CommitLog.droppedPhysicalNames(t) == names.toSet,
+      "the reservations must survive the checkpoint summary")
   }
 
   test("txnUpsert: merges exactly once; a replayed txn is a no-op") {
@@ -838,5 +842,56 @@ class CommitLogSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(served == Seq(2L -> "new"),
       s"replay served the dead generation's snapshot: $served")
+  }
+
+  // names are JSON-escaped by the log codec: a name holding a quote is
+  // written and replayed as itself, never truncated to another column
+  test("a clustering column whose name holds a quote survives the log") {
+    import spark.implicits._
+    val t = freshTable("quotedcluster")
+    CommitLog.append((1L to 40L).map(i => (i, s"v$i")).toDF("a\"b", "v"), t)
+    CommitLog.compactClustered(spark, t, "a\"b", 4)
+    assert(CommitLog.declaredClustering(t) == Some(("a\"b", 4)))
+    assert(CommitLog.fileStatsColumns(t).values.toSet == Set("a\"b"),
+      "every clustered add must name the quoted column itself")
+    assert(CommitLog.read(spark, t).count() == 40L)
+  }
+
+  test("a bloom column whose name holds a quote is declared as itself") {
+    import spark.implicits._
+    val t = freshTable("quotedbloom")
+    CommitLog.append(Seq((1L, "x")).toDF("a\"b", "v"), t)
+    CommitLog.declareBloom(spark, t, "a\"b")
+    assert(CommitLog.declaredBloom(t) == Some("a\"b"))
+    // the next ingest dedups on that column and records its bloom
+    CommitLog.dedupAppend(spark, Seq((2L, "y"), (1L, "dup")).toDF("a\"b", "v"), t,
+      Seq("a\"b"))
+    assert(CommitLog.read(spark, t).count() == 2L)
+    assert(CommitLog.fileBlooms(t).size == 1)
+  }
+
+  test("a txnAppend id holding quotes, backslashes and newlines replays as committed") {
+    val t = freshTable("txnquote")
+    val id = "q\"uery\\x#\n7"
+    assert(CommitLog.txnAppend(df(1L -> "a"), t, id).contains(0L))
+    assert(CommitLog.txnAppend(df(1L -> "a"), t, id).isEmpty,
+      "a replayed id must commit nothing")
+    assert(CommitLog.transactions(t) == Set(id))
+    CommitLog.checkpoint(t)
+    assert(CommitLog.txnAppend(df(1L -> "a"), t, id).isEmpty,
+      "the marker must survive the checkpoint summary")
+    assert(CommitLog.read(spark, t).count() == 1L)
+  }
+
+  test("a corrupt commit line fails the read, naming the file and line") {
+    val t = freshTable("corrupt")
+    CommitLog.append(df(1L -> "a"), t)
+    Files.write(Paths.get(t, "_log", f"${1L}%012d.json"),
+      "{\"op\":\"alter\"}\n{\"bloomon\":\"a\"b\"}\n".getBytes(StandardCharsets.UTF_8))
+    val e = intercept[IllegalStateException](CommitLog.snapshotFiles(t))
+    assert(e.getMessage.contains(f"${1L}%012d.json") && e.getMessage.contains("line 2"),
+      e.getMessage)
+    // time travel below the corrupt commit still serves
+    assert(CommitLog.snapshotFiles(t, Some(0L)).size == 1)
   }
 }
