@@ -79,7 +79,7 @@ object ScaleProbe {
       .getOrElse(keyShifts.keySet)
     val all = dims ++ keyShifts.keys.toSeq.sorted
     all.foreach { t =>
-      val src = spark.read.parquet(s"$base/$t.parquet")
+      val src = graft.io.Tables.table(spark, base, t)
       val out =
         if (dims.contains(t) || !expandSet.contains(t)) src
         else (0 until k).map(i => copyOf(src, t, i)).reduce(_.unionByName(_))

@@ -46,7 +46,7 @@ object Verify {
     // instead of re-derived in-session. Written before the query loop so a
     // killed run still carries it.
     // nanosAsLong up front, mirroring Tables.events: on old corpus drops
-    // where events carries TIMESTAMP(NANOS), schema inference would throw
+    // where events carries TIMESTAMP(NANOS), the schema conversion would throw
     // and record UNREADABLE for exactly the table this canary diagnoses
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // listFiles() is null for a missing sfDir — canary must record that,
@@ -56,7 +56,7 @@ object Verify {
       .filter(f => f.getName.endsWith(".parquet")).map(_.getName.stripSuffix(".parquet"))
       .sorted.map { t =>
         val schema = try {
-          spark.read.parquet(s"$sfDir/$t.parquet").schema
+          graft.io.Tables.table(spark, sfDir, t).schema
             .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
         } catch { case e: Throwable => s"UNREADABLE ${e.getMessage.take(120)}" }
         System.err.println(s"[verify] schema $t = $schema")
@@ -83,7 +83,10 @@ object Verify {
       // match Bench.runOnce's per-run clearCache: queries persist shared
       // subtrees inside their own plans, and without this the one-session
       // 237-query loop accumulates every query's MEMORY_AND_DISK blocks
-      // for the whole run (ADVICE r15)
+      // for the whole run. clearCache drops only CacheManager entries
+      // (Dataset.persist/cache); blocks of localCheckpoint'ed RDDs (d2,
+      // d13, e4) are freed only when the ContextCleaner sees their RDDs
+      // garbage-collected on the driver
       spark.catalog.clearCache()
     }
     spark.stop()

@@ -355,16 +355,24 @@ object CommitLog {
     readFiles(spark, table, files, mergeSchema, asOf)
   }
 
-  /** The snapshot's reader: when the log DECLARES a schema (an `alter`
-    * commit at or below `asOf`), reads serve exactly it — files written
-    * before a column existed serve NULLs for it, no footer merge, no
-    * mergeSchema needed; otherwise the classic file-derived read. */
-  private def reader(spark: SparkSession, table: String, asOf: Option[Long],
-                     mergeSchema: Boolean): org.apache.spark.sql.DataFrameReader =
+  /** The snapshot's parquet scan of `files`: when the log DECLARES a
+    * schema (an `alter` commit at or below `asOf`), reads serve exactly
+    * it — files written before a column existed serve NULLs for it, no
+    * footer merge, no mergeSchema needed. Otherwise the file-derived
+    * schema: `mergeSchema` unions every file's footer (Spark's parallel
+    * merge); the single-schema read declares the schema Spark would infer
+    * from the first file by path, read from its footer on the driver
+    * ([[Footers.read]]) — no inference job per read. */
+  private def reader(spark: SparkSession, table: String, files: Seq[String],
+                     asOf: Option[Long], mergeSchema: Boolean): DataFrame = {
+    val paths = files.map(f => Paths.get(table, f).toString)
     declaredSchema(table, asOf) match {
-      case Some(s) => spark.read.schema(toPhysical(s))
-      case None    => spark.read.option("mergeSchema", mergeSchema)
+      case Some(s) => spark.read.schema(toPhysical(s)).parquet(paths: _*)
+      case None if mergeSchema =>
+        spark.read.option("mergeSchema", true).parquet(paths: _*)
+      case None => Footers.read(spark, paths)
     }
+  }
 
   // ------------------------------------------------------------------ column mapping
   /** Field-metadata key carrying a column's PHYSICAL name — the name its
@@ -879,7 +887,7 @@ object CommitLog {
       val mBits = math.max(MinBloomBits,
         math.min(rows * BloomBitsPerKey, MaxBloomBits)) / 64 * 64
       val words = (mBits / 64).toInt
-      val df = spark.read.parquet(Paths.get(table, f).toString)
+      val df = Footers.read(spark, Seq(Paths.get(table, f).toString))
       if (!df.columns.exists(_.equalsIgnoreCase(physCol))) return None
       val hashes = df.select(bloomHashExpr(
         org.apache.spark.sql.functions.col(s"`$physCol`")))
@@ -1114,8 +1122,7 @@ object CommitLog {
   private def readFilesWithPos(spark: SparkSession, table: String,
                                files: Seq[String], asOf: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val df = reader(spark, table, asOf, mergeSchema = false)
-      .parquet(files.map(f => Paths.get(table, f).toString): _*)
+    val df = reader(spark, table, files, asOf, mergeSchema = false)
       .withColumn(DvFileCol, element_at(split(col("_metadata.file_path"), "/"), -1))
       .withColumn(DvPosCol, col("_metadata.row_index"))
     declaredSchema(table, asOf).fold(df) { d =>
@@ -1136,7 +1143,7 @@ object CommitLog {
   private[graft] def readSnapshotWithPos(spark: SparkSession, table: String,
                                          files: Seq[String],
                                          asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     if (files.isEmpty) {
       val shape = read(spark, table, asOf).limit(0)
         .withColumn(DvFileCol, lit(null).cast("string"))
@@ -1569,10 +1576,7 @@ object CommitLog {
     * range. */
   private def footerSummary(table: String, f: String): FooterStats =
     try {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Paths.get(table, f).toUri),
-          footerConf))
+      val r = Footers.open(footerPath(table, f))
       try {
         import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
         import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -1662,12 +1666,9 @@ object CommitLog {
       } finally r.close()
     } catch { case scala.util.control.NonFatal(_) => FooterStats(None, Map.empty, Map.empty) }
 
-  // One shared Hadoop conf for driver-side footer reads: `new
-  // Configuration()` re-parses the XML defaults on EVERY call (~20 ms),
-  // and a commit reads one footer per added file — on a 4-append+compact
-  // lifecycle that was ~0.4 s of pure conf parsing (caught by the tl4
-  // bench adjudication). Read-only use; parquet never mutates it.
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+  /** A data file's Hadoop path for [[Footers.open]]. */
+  private def footerPath(table: String, f: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(Paths.get(table, f).toUri)
 
   /** Null count of `column` from the parquet footer alone — `Some(n)` only
     * when EVERY row group's column chunk recorded one (else undefined,
@@ -1678,10 +1679,7 @@ object CommitLog {
     * delete a row the predicate did not select). */
   def footerNullCount(table: String, f: String, column: String): Option[Long] =
     try {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Paths.get(table, f).toUri),
-          footerConf))
+      val r = Footers.open(footerPath(table, f))
       try {
         val chunks = r.getFooter.getBlocks.asScala.flatMap(
           _.getColumns.asScala.filter(_.getPath.toDotString.equalsIgnoreCase(column)))
@@ -1701,10 +1699,7 @@ object CommitLog {
     * on an INT32/INT64 physical column. */
   def footerMinMax(table: String, f: String, column: String): Option[(Long, Long)] =
     try {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Paths.get(table, f).toUri),
-          footerConf))
+      val r = Footers.open(footerPath(table, f))
       try {
         import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
         val chunks = r.getFooter.getBlocks.asScala.flatMap(
@@ -1761,10 +1756,7 @@ object CommitLog {
   /** Row count from the parquet footer alone (no data pages touched). */
   def footerRowCount(table: String, f: String): Option[Long] =
     try {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(Paths.get(table, f).toUri),
-          footerConf))
+      val r = Footers.open(footerPath(table, f))
       try Some(r.getRecordCount) finally r.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -2334,20 +2326,17 @@ object CommitLog {
     commitRaw(table, "append", lines)
   }
 
-  /** Composite Z-ORDER clustering spec: `z(px,py)` with PHYSICAL inner
-    * column names. Writers range-partition on `morton(px, py)` and record
-    * each file's [min, max] zkey as its zone range; the read side turns a
-    * 2-D box predicate into zkey intervals
-    * ([[graft.functions.ZOrder.zRangesForBox]], Tropf–Herzog) and skips
-    * files whose zkey range misses every interval — multi-dimensional
-    * data skipping through the SAME one-[lo,hi]-per-file zone vocabulary
-    * single-column clustering uses. */
-  private[graft] val ZSpec = """^z\(([^,()]+),([^,()]+)\)$""".r
-
-  /** Inner PHYSICAL column names of a composite `z(...)` spec with 2 or 3
-    * dimensions; None for plain single-column specs. (The 2-column
-    * [[ZSpec]] regex predates 3-D support and remains for callers that
-    * only ever see 2-D specs.) */
+  /** Composite Z-ORDER clustering spec: `z(px,py)` (or `z(px,py,pz)`)
+    * with PHYSICAL inner column names. Writers range-partition on the
+    * Morton key of the coordinates and record each file's [min, max] zkey
+    * as its zone range; the read side turns a box predicate into zkey
+    * intervals ([[graft.functions.ZOrder.zRangesForBox]], Tropf–Herzog)
+    * and skips files whose zkey range misses every interval —
+    * multi-dimensional data skipping through the SAME one-[lo,hi]-per-file
+    * zone vocabulary single-column clustering uses.
+    *
+    * Returns the inner PHYSICAL column names of a spec with 2 or 3
+    * dimensions; None for plain single-column specs. */
   private[graft] def zSpecColumns(spec: String): Option[Seq[String]] =
     if (spec.startsWith("z(") && spec.endsWith(")")) {
       val inner = spec.substring(2, spec.length - 1).split(',').toSeq.map(_.trim)
@@ -2388,7 +2377,7 @@ object CommitLog {
       // cast to long BEFORE the agg: the zone vocabulary is [lo, hi] as
       // longs, and getLong on an IntegerType min/max would ClassCastException
       // (int clustering columns are legal — createTable accepts them)
-      val r = spark.read.parquet(Paths.get(table, f).toString)
+      val r = Footers.read(spark, Seq(Paths.get(table, f).toString))
         .agg(fmin(col(s"`$physCol`").cast("long")),
           fmax(col(s"`$physCol`").cast("long"))).head()
       val add = addAction(table, f, bloomCol)
@@ -2427,7 +2416,7 @@ object CommitLog {
         physCols.flatMap(p => Seq(fmin(col(s"`$p`").cast("long")),
           fmax(col(s"`$p`").cast("long")))) ++
         (fcount(lit(1)) +: physCols.map(p => fcount(col(s"`$p`"))))
-      val r = spark.read.parquet(Paths.get(table, f).toString)
+      val r = Footers.read(spark, Seq(Paths.get(table, f).toString))
         .agg(aggs.head, aggs.tail: _*).head()
       val add = addAction(table, f, bloomCol)
       val totalIdx = 2 + 2 * physCols.size
@@ -3092,8 +3081,7 @@ object CommitLog {
                                asOf: Option[Long] = None,
                                suppressDv: Boolean = true): DataFrame = {
     require(files.nonEmpty, s"readFiles on $table: empty file list")
-    val raw = reader(spark, table, asOf, mergeSchema)
-      .parquet(files.map(f => Paths.get(table, f).toString): _*)
+    val raw = reader(spark, table, files, asOf, mergeSchema)
     // deletion vectors are part of the snapshot's MEANING: every consumer
     // of this read (snapshots, upsert rewrites, ingest dedup key checks,
     // compaction — which thereby MATERIALIZES vectors) sees suppressed

@@ -12,9 +12,16 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Load one corpus table from a scale-factor directory. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Load one corpus table from a scale-factor directory. A table that is
+    * one parquet file declares its footer's schema ([[Footers.read]]: no
+    * inference job); a table written as a directory of part files (the
+    * scale probe's expanded corpora) keeps Spark's directory inference. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    if (java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path)))
+      Footers.read(spark, Seq(path))
+    else spark.read.parquet(path)
+  }
 
   def lineitem(spark: SparkSession, d: String): DataFrame   = table(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame     = table(spark, d, "orders")

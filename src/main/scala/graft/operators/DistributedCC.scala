@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,8 +30,6 @@ object DistributedCC {
   /** (key, x1, y1, x2, y2, label, chip) -> clusters identical to
     * [[BoxMerge.mergeFrame]] (hash-equal output schema and values). */
   def mergeUnbounded(df: DataFrame, gap: Int = 5, maxIter: Int = 50): DataFrame = {
-    val spark = df.sparkSession
-
     val idw = Window.partitionBy("key").orderBy("x1", "y1", "x2", "y2", "label", "chip")
     val boxes = df.select("key", "x1", "y1", "x2", "y2", "label", "chip")
       .withColumn("id", row_number().over(idw).cast("int"))

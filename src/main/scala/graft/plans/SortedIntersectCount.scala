@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `sorted_intersect_count(a, b)`: |a ∩ b| for two ASC-SORTED long arrays
   * with distinct elements — a two-pointer merge walk fused into

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.{CommitLog, Sinks, Tables}
+import graft.io.{CommitLog, Footers, Sinks, Tables}
 
 /** The tracker lifecycle on the transactional commit-log table format
   * ([[graft.io.CommitLog]]): append a batch, upsert a correction batch,
@@ -247,7 +247,7 @@ object TableLogQueries {
     val hit = CommitLog.prunedFiles(table, 0L, 300L)
     require(hit.length == 1,
       s"zone maps should prune to 1 of 4 files, got ${hit.length}")
-    spark.read.parquet(hit.map(f => Paths.get(table, f).toString): _*)
+    Footers.read(spark, hit.map(f => Paths.get(table, f).toString))
       .filter(col("id").between(0, 300))
       .agg(count(lit(1)).as("n_rows"), round(sum(col("price")), 2).as("total"))
       .withColumn("files_scanned", lit(hit.length))
@@ -336,7 +336,7 @@ object TableLogQueries {
       .flatMap(r => CommitLog.prunedFiles(table, r._1, r._2)).distinct
     require(files.length < all.length,
       s"z-range pruning should skip files: read ${files.length} of ${all.length}")
-    spark.read.parquet(files.map(f => Paths.get(table, f).toString): _*)
+    Footers.read(spark, files.map(f => Paths.get(table, f).toString))
       .filter(col("x").between(tl7Box._1, tl7Box._2) &&
         col("y").between(tl7Box._3, tl7Box._4))
       .agg(count(lit(1)).as("n_rows"),
@@ -893,7 +893,7 @@ object TableLogQueries {
       "tl20b: a rename must move zero data files")
     spark.sql(s"INSERT INTO $t SELECT id, status AS state, price, batch FROM t20b_b2")
     val newFile = (CommitLog.snapshotFiles(tdir).toSet -- filesBefore).head
-    val phys = spark.read.parquet(Paths.get(tdir, newFile).toString).schema.fieldNames
+    val phys = Footers.schema(spark, Paths.get(tdir, newFile).toString).fieldNames
     require(phys.contains("status") && !phys.contains("state"),
       s"tl20b: post-rename files must wear the physical name, got ${phys.toSeq}")
     spark.sql(
@@ -987,15 +987,15 @@ object TableLogQueries {
     val tdir = Paths.get(Sinks.scratchDir("commitlog_catalog_wh"), "dml", "t20e").toString
     spark.sql(s"ALTER TABLE $t DROP COLUMN status")
     require(CommitLog.snapshotFiles(tdir).exists(f =>
-        spark.read.parquet(Paths.get(tdir, f).toString)
-          .schema.fieldNames.contains("status")),
+        Footers.schema(spark, Paths.get(tdir, f).toString)
+          .fieldNames.contains("status")),
       "tl20e: pre-purge files must still carry the dropped bytes")
     val purged = spark.sql("CALL graft.system.purge('dml.t20e')").collect()
     require(purged.map(_.getString(1)).toSeq == Seq("status"),
       s"tl20e: purge must report the reclaimed physical name, got ${purged.toSeq}")
     require(CommitLog.snapshotFiles(tdir).forall(f =>
-        !spark.read.parquet(Paths.get(tdir, f).toString)
-          .schema.fieldNames.contains("status")),
+        !Footers.schema(spark, Paths.get(tdir, f).toString)
+          .fieldNames.contains("status")),
       "tl20e: purge must physically remove the dropped column's bytes")
     require(CommitLog.droppedPhysicalNames(tdir).isEmpty,
       "tl20e: purge must lift the tombstone")
@@ -1135,7 +1135,7 @@ object TableLogQueries {
     require(windowed.select("_change_type").distinct().count() == 2L,
       "tl27: the v1 window must carry the upsert's delete AND insert rows")
     // the catalog-identifier form resolves to the same relation
-    val t = dmlTable(spark, dir, "t27", "SELECT * FROM t27_b1")
+    dmlTable(spark, dir, "t27", "SELECT * FROM t27_b1")
     spark.sql("INSERT INTO graft.dml.t27 SELECT * FROM t27_b2")
     val byIdent = spark.sql("SELECT * FROM table_changes('graft.dml.t27', 0, 2)")
     val tdir = Paths.get(Sinks.scratchDir("commitlog_catalog_wh"), "dml", "t27").toString

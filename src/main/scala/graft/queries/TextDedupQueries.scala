@@ -270,7 +270,13 @@ object TextDedupQueries {
     // the signature feeds the band join AND both sides of the agreement
     // join — checkpoint it so the shingle->md5-min pipeline runs once and
     // the three consumers plan over a flat leaf instead of re-analyzing
-    // the whole subtree (r16 A/B: ckpt 1.59 vs cache 1.84 s min-of-3)
+    // the whole subtree (r16 A/B: ckpt 1.59 vs cache 1.84 s min-of-3).
+    // Fault tolerance: localCheckpoint keeps the blocks on the executors
+    // that computed them and drops the lineage, so losing one of those
+    // executors fails the query instead of recomputing the signatures —
+    // the trade [[graft.operators.Allocation.allocateRounds]] documents.
+    // The cluster-scale form materializes the signatures as a table
+    // (parquet write + re-read, its stateDir route).
     val sig = TextPipeline.minhashSignature(
       shingledFeed(spark, dir), "doc_id", "shingle", 8).localCheckpoint()
     // explicitly UNCAPPED: this is the baseline variant whose oracle
@@ -2041,8 +2047,13 @@ object TextDedupQueries {
     // AND plain recompute (r16 A/B min-of-3: ckpt 3.49 s, cache 4.94 s,
     // plain 5.18 s) because it also TRUNCATES LINEAGE — each consumer
     // re-planned the whole quality+md5-window subtree under cache(),
-    // which only dedupes execution. The 100 TB form of this pipeline
-    // materializes the same intermediate as a table between stages.
+    // which only dedupes execution. Fault tolerance: localCheckpoint
+    // keeps the blocks on the executors that computed them and drops the
+    // lineage, so losing one of those executors fails the query instead
+    // of recomputing the corpus — the trade
+    // [[graft.operators.Allocation.allocateRounds]] documents. The 100 TB
+    // form of this pipeline materializes the same intermediate as a table
+    // between stages (parquet write + re-read, its stateDir route).
     val uniq = curationUniq(d).localCheckpoint()
     // 4. near-dup components over LSH candidates; canonical = smallest id
     val sig = curationSig(spark, uniq)

@@ -912,7 +912,13 @@ object VectorQueries {
     // plus GraphCC's vertex count — checkpointing materializes the
     // crossJoin × window subtree once AND flattens the lineage each
     // consumer re-plans (the uncheckpointed form re-planned the whole
-    // subtree per consumer; A/B r16: 2.63 -> 1.52 s min-of-3)
+    // subtree per consumer; A/B r16: 2.63 -> 1.52 s min-of-3).
+    // Fault tolerance: localCheckpoint keeps the blocks on the executors
+    // that computed them and drops the lineage, so losing one of those
+    // executors fails the query instead of recomputing the cells — the
+    // trade [[graft.operators.Allocation.allocateRounds]] documents. The
+    // cluster-scale form materializes the cells as a table (parquet write
+    // + re-read, its stateDir route), which survives executor loss.
     val cells = semCells(spark, dir).localCheckpoint()
     val pairs = graft.operators.VectorSearch
       .cellPairs(cells, "vec_id", "embedding", "cell_id",
