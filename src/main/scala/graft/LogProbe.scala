@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.{CommitLog, LogAction}
@@ -60,17 +59,7 @@ object LogProbe {
 
   def main(args: Array[String]): Unit = {
     val root = sys.env.getOrElse("SPARK_GRAFT_PROBE_ROOT", "/tmp/graft_log_probe")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-log-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     import spark.implicits._
 
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]

@@ -98,20 +98,10 @@ object ScaleProbe {
       "e1_inventory,d2_lsh_pairs,a8_merge_clusters,v14_ivfpq_search,gr2_triangles")
       .split(",").map(_.trim).toSeq
 
-    // session posture IDENTICAL to graft.Bench — the probe measures how
-    // the BENCHED plans scale, so the plan-shaping confs (AQE, the 64 MB
-    // broadcast threshold gr2's size gate consults) must match exactly
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session: the probe measures how the BENCHED plans
+    // scale, so the plan-shaping confs (AQE, the 64 MB broadcast
+    // threshold gr2's size gate consults) must match exactly
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val dirs = factors.map(k => k -> expand(spark, base, root, k)).toMap
     def load(): Double = {

@@ -765,14 +765,11 @@ object CommitLog {
     * [[snapshotRowCount]] / [[snapshotSizeBytes]] metadata-only answers at
     * any table size; the same footer open harvests the per-column
     * multi-stats and string bounds. A failed footer read degrades to a
-    * count-less add — the metadata count is then undefined, never wrong. */
-  private def addAction(table: String, f: String): Add =
-    addAction(table, f, declaredBloom(table))
-
-  /** Multi-file callers resolve `bloomCol` ONCE per commit
-    * ([[declaredBloom]] replays the log) and pass it down. On a
-    * bloom-declared table the file's key bloom (one narrow column scan)
-    * lands as a SIDECAR `<f>.bloom`; the add carries only the flag. */
+    * count-less add — the metadata count is then undefined, never wrong.
+    * `bloomCol` is resolved ONCE per commit ([[declaredBloom]] replays
+    * the log). On a bloom-declared table the file's key bloom (one narrow
+    * column scan) lands as a SIDECAR `<f>.bloom`; the add carries only
+    * the flag. */
   private def addAction(table: String, f: String, bloomCol: Option[String]): Add = {
     val fs = footerSummary(table, f)
     val bloomed = bloomCol.flatMap(bc =>
@@ -789,6 +786,14 @@ object CommitLog {
     Add(f, rows = fs.rows, bytes = bytes, mstats = fs.mstats, sstats = fs.sstats,
       bloomed = bloomed)
   }
+
+  /** The add actions of freshly staged `files`, bloom column resolved once. */
+  private def addActions(table: String, files: Seq[String]): Seq[Add] =
+    if (files.isEmpty) Seq.empty
+    else {
+      val bloomCol = declaredBloom(table)
+      files.map(addAction(table, _, bloomCol))
+    }
 
   // ------------------------------------------------------------------ key blooms
   /** 20 bits/key, k=14 probes: per-key false-positive rate ~7e-5. The
@@ -961,14 +966,7 @@ object CommitLog {
 
   // ------------------------------------------------------------------ deletion vectors
   // codec + decoded-vector cache live in [[DvSidecars]] (shared with the
-  // executor-side read predicate); these delegates keep the call sites.
-
-  private[graft] def writeDvSidecar(table: String, name: String,
-                                    positions: Array[Long]): Unit =
-    DvSidecars.write(table, name, positions)
-
-  private[graft] def dvPositions(table: String, sidecar: String): Array[Long] =
-    DvSidecars.positions(table, sidecar)
+  // executor-side read predicate).
 
   /** Whether the table opted into merge-on-read deletes ([[enableDv]]). */
   def dvEnabled(table: String, asOf: Option[Long] = None): Boolean =
@@ -1032,8 +1030,7 @@ object CommitLog {
     else {
       val files = toMat.map(_._1)
       val survivors = readFilesWithPos(spark, table, files, Some(tip))
-        .filter(notSuppressedBy(table,
-          toMat.map { case (f, sc, n) => f -> (sc, n) }.toMap))
+        .filter(notSuppressedBy(table, toMat.map { case (f, sc, _) => f -> sc }.toMap))
         .drop(DvFileCol, DvPosCol)
       val matAdds = stage(survivors.coalesce(files.length), table)
       // never materialize the table into FILELESSNESS: when every live
@@ -1047,9 +1044,7 @@ object CommitLog {
       toMat.foreach { case (_, sc, _) =>
         Files.deleteIfExists(Paths.get(table, sc))
       }
-      val bloomCol = declaredBloom(table)
-      (dvLines ++ matAdds.map(f => addAction(table, f, bloomCol)) ++
-        files.map(Remove), matAdds)
+      (dvLines ++ addActions(table, matAdds) ++ files.map(Remove), matAdds)
     }
   }
 
@@ -1102,18 +1097,18 @@ object CommitLog {
     applyDv(df, table, dvFor(table, asOf))
 
   /** Predicate over the [[DvFileCol]]/[[DvPosCol]] tag columns keeping
-    * rows NOT suppressed by `dvs` — the per-task sidecar probe the MoR
-    * writers use to exclude already-deleted rows from a position scan
-    * (cost ∝ rows scanned, nothing broadcast but sidecar names). */
-  private def notSuppressedBy(table: String,
-                              dvs: Map[String, (String, Long)])
+    * rows NOT suppressed by the vectors `sidecarOf` names (file ->
+    * sidecar) — the per-task sidecar probe the MoR writers use to exclude
+    * already-deleted rows from a position scan (cost ∝ rows scanned,
+    * nothing broadcast but sidecar names). */
+  private def notSuppressedBy(table: String, sidecarOf: Map[String, String])
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.col
     val shim = org.apache.spark.sql.GraftSqlShim
     !shim.column(
       graft.plans.DvFileSuppressed(
         shim.expression(col(DvFileCol)), shim.expression(col(DvPosCol)), table,
-        dvs.map { case (f, (sc, _)) => f -> sc }))
+        sidecarOf))
   }
 
   /** Raw per-file read that KEEPS the (file, position) tag columns —
@@ -1151,9 +1146,14 @@ object CommitLog {
       return shape.limit(0)
     }
     val raw = readFilesWithPos(spark, table, files, asOf)
-    val fileSet = files.toSet
-    val dvs = replay(table, asOf).dvs.filter { case (f, _) => fileSet(f) }.toMap
+    val dvs = liveSidecars(replay(table, asOf), files)
     if (dvs.isEmpty) raw else raw.filter(notSuppressedBy(table, dvs))
+  }
+
+  /** file -> live vector sidecar, for those of `files` that carry one. */
+  private def liveSidecars(state: LogState, files: Seq[String]): Map[String, String] = {
+    val fileSet = files.toSet
+    state.dvs.collect { case (f, (sc, _)) if fileSet(f) => f -> sc }.toMap
   }
 
   /** Lands ONE delta-DML commit — the commit half of the SQL merge-on-read
@@ -1161,12 +1161,12 @@ object CommitLog {
     * write tasks as PARTIAL sidecars, one per task × file) are merged with
     * the file's existing vector into a new final sidecar, appended images
     * arrive as ordinary adds (footer stats + declared blooms recorded),
-    * and the whole statement is one conflict-checked commit against the
+    * and the whole statement lands through [[landDml]] against the
     * snapshot the scan read. Partials are deleted after the commit lands;
-    * on a version race the final sidecars are reclaimed and the conflict
-    * rethrown (the caller's abort cleans partials and data files — a
-    * statement-level retry must re-scan, exactly like the group-based
-    * rewrite). Returns None when the statement touched nothing. */
+    * on a version race [[landDml]] reclaims what this statement wrote and
+    * the caller's abort cleans the partials — a statement-level retry must
+    * re-scan, exactly like the group-based rewrite. Returns None when the
+    * statement touched nothing. */
   private[graft] def commitDeltaDml(table: String, op: String, expectedTip: Long,
                                     partials: Seq[(String, String)],
                                     added: Seq[String],
@@ -1174,56 +1174,124 @@ object CommitLog {
                                     postAdded: Seq[String] = Nil): Option[Long] = {
     if (partials.isEmpty && added.isEmpty && postAdded.isEmpty) return None
     val state = replay(table, Some(expectedTip))
-    val oldDvs = state.dvs.toMap
-    val finals = partials.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ps) =>
+    def fresh(ps: Seq[(String, String)]): Seq[Long] =
+      ps.flatMap { case (_, part) => DvSidecars.read(table, part) }
+    val written = partials.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ps) =>
       require(state.live.contains(f),
         s"delta $op on $table addresses non-live file $f — stale plan")
-      val fresh = ps.flatMap { case (_, part) => DvSidecars.read(table, part) }
-      val merged = (oldDvs.get(f).map { case (sc, _) => dvPositions(table, sc) }
-        .getOrElse(Array.empty[Long]) ++ fresh).distinct.sorted
-      val name = s"$f.dv-${java.util.UUID.randomUUID()}"
-      DvSidecars.write(table, name, merged)
-      (f, name, merged.length.toLong)
+      val (name, n) = writeMergedVector(table, f, state.dvs.get(f).map(_._1), fresh(ps))
+      (f, name, n)
     }
     // CDF update classification: per touched file, the positions this
-    // statement suppressed via UPDATE (a `.dvu-` sidecar of JUST the
-    // statement's update positions — never merged with the vector), and
-    // the postimage-marked added files. Pure history — replay ignores it.
-    val updFinals = updPartials.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ps) =>
-      val fresh = ps.flatMap { case (_, part) => DvSidecars.read(table, part) }
-        .distinct.sorted.toArray
-      val name = s"$f.dvu-${java.util.UUID.randomUUID()}"
-      DvSidecars.write(table, name, fresh)
-      (f, name)
+    // statement suppressed via UPDATE (never merged with the vector), and
+    // the postimage-marked added files
+    val dvus = updPartials.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ps) =>
+      f -> writeUpdateAnnotation(table, f, fresh(ps))
     }
-    val bloomCol = declaredBloom(table)
-    // materialization policy (graft.dv.maxRatio): past-ratio files
-    // rewrite in this same commit; their `.dvu-` annotations stay valid
-    // (CDF's −1 entries scan the ORIGINAL file)
-    val (dvLines, matAdds) = dvPolicyLines(SparkSession.active, table,
-      expectedTip, finals)
-    val lines = dvLines ++
-      updFinals.map { case (f, sc) => Dvu(f, sc) } ++
-      (added ++ postAdded).map(f => addAction(table, f, bloomCol)) ++
-      postAdded.map(CdfPost)
-    try {
-      val v = commitRaw(table, op, lines, Some(expectedTip), reconcile = true,
-        dmlReadSet = Some((finals.map(_._1) ++ updFinals.map(_._1)).toSet))
-      (partials ++ updPartials).foreach { case (_, p) =>
-        Files.deleteIfExists(Paths.get(table, p))
+    val v = landDml(SparkSession.active, table, op, expectedTip, written, dvus,
+      added, postAdded)
+    (partials ++ updPartials).foreach { case (_, p) =>
+      Files.deleteIfExists(Paths.get(table, p))
+    }
+    Some(v)
+  }
+
+  /** Merges `fresh` positions into a file's old vector (if any) and writes
+    * the result as a new `.dv-` sidecar; returns (sidecar, suppressed
+    * rows). Runs inside write tasks ([[writeVectors]]) and on the driver
+    * ([[commitDeltaDml]]) alike. */
+  private def writeMergedVector(table: String, f: String, oldSc: Option[String],
+                                fresh: Iterable[Long]): (String, Long) = {
+    val merged = (oldSc.map(DvSidecars.positions(table, _))
+      .getOrElse(Array.empty[Long]) ++ fresh).distinct.sorted
+    val name = s"$f.dv-${java.util.UUID.randomUUID()}"
+    DvSidecars.write(table, name, merged)
+    (name, merged.length.toLong)
+  }
+
+  /** Writes one statement's update positions in `f` as a `.dvu-` sidecar:
+    * the CDF's update-preimage annotation, JUST this statement's
+    * positions, never merged with the vector. Pure history — replay
+    * ignores it. */
+  private def writeUpdateAnnotation(table: String, f: String,
+                                    fresh: Iterable[Long]): String = {
+    val name = s"$f.dvu-${java.util.UUID.randomUUID()}"
+    DvSidecars.write(table, name, fresh.toArray.distinct.sorted)
+    name
+  }
+
+  /** Step one of every merge-on-read writer: the snapshot at `tip`, which
+    * must exist and have opted into deletion vectors. */
+  private def dvSnapshot(table: String, tip: Long, noCommits: => String): LogState = {
+    require(tip >= 0, noCommits)
+    val state = replay(table, Some(tip))
+    require(state.dvOn,
+      s"deletion vectors are not enabled on $table — run " +
+        "CommitLog.enableDv / CALL graft.system.enable_dv first")
+    state
+  }
+
+  /** Step two: the ([[DvFileCol]], [[DvPosCol]])-tagged rows of `cands`
+    * that `select` keeps, minus the positions their live vectors already
+    * suppress — returned with those vectors' sidecar names. */
+  private def positionScan(spark: SparkSession, table: String, state: LogState,
+                           tip: Long, cands: Seq[String])
+                          (select: DataFrame => DataFrame)
+      : (DataFrame, Map[String, String]) = {
+    val oldSc = liveSidecars(state, cands)
+    val scan = select(readFilesWithPos(spark, table, cands, Some(tip)))
+    (if (oldSc.isEmpty) scan else scan.filter(notSuppressedBy(table, oldSc)), oldSc)
+  }
+
+  /** Step three, ONE Spark job: groups `scan`'s positions by file and,
+    * inside the tasks, merges each file's fresh positions with its old
+    * vector into a new sidecar — and with `annotate` also lands the fresh
+    * positions as the `.dvu-` update annotation. Sidecars are written
+    * EXECUTOR-side like data files; a lost speculative attempt's sidecar
+    * is an unreferenced orphan, vacuumed like a lost data file's bytes.
+    * The task closure ships only the file→OLD-sidecar NAME map: each task
+    * loads just ITS file's existing vector through the per-JVM
+    * [[DvSidecars]] LRU, so the closure never grows with the candidates'
+    * suppressed rows. Returns ((file, sidecar, suppressed rows), (file,
+    * annotation)). */
+  private def writeVectors(spark: SparkSession, table: String, scan: DataFrame,
+                           oldSc: Map[String, String], annotate: Boolean)
+      : (Seq[(String, String, Long)], Seq[(String, String)]) = {
+    import org.apache.spark.sql.functions.{col, collect_list}
+    import spark.implicits._
+    val written = scan
+      .groupBy(col(DvFileCol))
+      .agg(collect_list(col(DvPosCol)).as("_graft_dv_new"))
+      .as[(String, Seq[Long])]
+      .map { case (f, fresh) =>
+        val (name, n) = writeMergedVector(table, f, oldSc.get(f), fresh)
+        (f, name, n, if (annotate) Some(writeUpdateAnnotation(table, f, fresh)) else None)
       }
-      Some(v)
-    } catch {
-      case e: java.util.ConcurrentModificationException =>
-        unstage(table, matAdds)
-        finals.foreach { case (_, sc, _) =>
-          Files.deleteIfExists(Paths.get(table, sc))
-        }
-        updFinals.foreach { case (_, sc) =>
-          Files.deleteIfExists(Paths.get(table, sc))
-        }
-        throw e
-    }
+      .collect().toSeq
+    (written.map { case (f, sc, n, _) => (f, sc, n) },
+      written.flatMap { case (f, _, _, du) => du.map(f -> _) })
+  }
+
+  /** Step four, the one landing of every merge-on-read writer: the
+    * materialization policy over the merged vectors ([[dvPolicyLines]]),
+    * then the `.dvu-` annotations and the appended images (`postAdded`
+    * marked `cdfpost`), as ONE `op` commit against `tip` whose DML read
+    * set is the touched files. A lost race reclaims everything the
+    * statement wrote — images, sidecars, annotations, materialized
+    * rewrites — before the conflict propagates. A materialized file's
+    * `.dvu-` annotation stays valid: the CDF's −1 entries scan the
+    * ORIGINAL file, where the update positions live. */
+  private def landDml(spark: SparkSession, table: String, op: String, tip: Long,
+                      written: Seq[(String, String, Long)], dvus: Seq[(String, String)],
+                      added: Seq[String], postAdded: Seq[String] = Nil): Long = {
+    val (dvLines, matAdds) = dvPolicyLines(spark, table, tip, written)
+    val images = added ++ postAdded
+    commitRaw(table, op,
+      dvLines ++ dvus.map { case (f, sc) => Dvu(f, sc) } ++ addActions(table, images) ++
+        postAdded.map(CdfPost),
+      Some(tip), reconcile = true,
+      dmlReadSet = Some((written.map(_._1) ++ dvus.map(_._1)).toSet),
+      staged = images ++ matAdds ++ written.map(_._2) ++ dvus.map(_._2))
   }
 
   /** Merge-on-read DELETE: finds the rows of `candidates` matching `cond`
@@ -1237,65 +1305,18 @@ object CommitLog {
     * Requires [[enableDv]] — the default table stays copy-on-write. */
   def dvDelete(spark: SparkSession, table: String,
                cond: org.apache.spark.sql.Column,
-               candidates: Option[Long => Seq[String]] = None): Option[Long] = {
-    import org.apache.spark.sql.functions._
+               candidates: Option[Long => Seq[String]] = None): Option[Long] =
     serializably(table) { tip =>
-      require(tip >= 0, s"dvDelete on $table: no commits")
-      val state = replay(table, Some(tip))
-      require(state.dvOn,
-        s"deletion vectors are not enabled on $table — run " +
-          "CommitLog.enableDv / CALL graft.system.enable_dv first")
-      val live = state.live.keys.toSeq
-      val liveSet = live.toSet
-      val cands = candidates.fold(live)(f => f(tip).filter(liveSet))
+      val state = dvSnapshot(table, tip, s"dvDelete on $table: no commits")
+      val cands = candidates.fold(state.live.keys.toSeq)(_(tip).filter(state.live.contains))
       if (cands.isEmpty) None
       else {
-        val candSet = cands.toSet
-        val oldDvs = state.dvs.filter { case (f, _) => candSet(f) }.toMap
-        val scan0 = readFilesWithPos(spark, table, cands, Some(tip)).filter(cond)
-        val scan =
-          if (oldDvs.isEmpty) scan0
-          else scan0.filter(notSuppressedBy(table, oldDvs))
-        // merged vector per touched file, sidecars written EXECUTOR-side
-        // (one group per file; a lost speculative attempt's sidecar is an
-        // unreferenced orphan, vacuumed like a lost data file's bytes).
-        // The task closure ships only the file→OLD-sidecar NAME map: each
-        // task loads just ITS file's existing vector through the per-JVM
-        // [[DvSidecars]] LRU — the read path's round-13 pattern. The
-        // replaced form expanded EVERY candidate's vector driver-side
-        // into the closure (∝ candidates' suppressed rows per statement,
-        // even for files the delete never touches).
-        val oldSc: Map[String, String] = oldDvs.map { case (f, (sc, _)) => f -> sc }
-        import spark.implicits._
-        val written: Array[(String, String, Long)] = scan
-          .groupBy(col(DvFileCol))
-          .agg(collect_list(col(DvPosCol)).as("_graft_dv_new"))
-          .as[(String, Seq[Long])]
-          .map { case (f, fresh) =>
-            val merged = (oldSc.get(f).map(DvSidecars.positions(table, _))
-              .getOrElse(Array.empty[Long]) ++ fresh).distinct.sorted
-            val name = s"$f.dv-${java.util.UUID.randomUUID()}"
-            writeDvSidecar(table, name, merged)
-            (f, name, merged.length.toLong)
-          }
-          .collect()
+        val (scan, oldSc) = positionScan(spark, table, state, tip, cands)(_.filter(cond))
+        val (written, _) = writeVectors(spark, table, scan, oldSc, annotate = false)
         if (written.isEmpty) None
-        else {
-          val (lines, matAdds) = dvPolicyLines(spark, table, tip, written.toSeq)
-          try Some(commitRaw(table, "delete", lines, Some(tip), reconcile = true,
-            dmlReadSet = Some(written.map(_._1).toSet)))
-          catch {
-            case e: java.util.ConcurrentModificationException =>
-              unstage(table, matAdds)
-              written.foreach { case (_, sc, _) =>
-                Files.deleteIfExists(Paths.get(table, sc))
-              }
-              throw e
-          }
-        }
+        else Some(landDml(spark, table, "delete", tip, written, Nil, Nil))
       }
     }
-  }
 
   /** Merge-on-read UPDATE (the deletion-vector sibling of [[dvDelete]]):
     * rows of `candidates` matching `cond` are suppressed via merged
@@ -1314,51 +1335,23 @@ object CommitLog {
                cond: org.apache.spark.sql.Column,
                sets: Map[String, org.apache.spark.sql.Column],
                candidates: Option[Long => Seq[String]] = None): Option[Long] = {
-    import org.apache.spark.sql.functions._
     require(sets.nonEmpty, s"dvUpdate on $table: no SET assignments")
     serializably(table) { tip =>
-      require(tip >= 0, s"dvUpdate on $table: no commits")
-      val state = replay(table, Some(tip))
-      require(state.dvOn,
-        s"deletion vectors are not enabled on $table — run " +
-          "CommitLog.enableDv / CALL graft.system.enable_dv first")
-      val live = state.live.keys.toSeq
+      val state = dvSnapshot(table, tip, s"dvUpdate on $table: no commits")
       val cols = declaredSchema(table, Some(tip)).map(_.fieldNames.toSeq)
         .getOrElse(read(spark, table, Some(tip)).columns.toSeq)
       sets.keys.foreach(c => require(cols.exists(_.equalsIgnoreCase(c)),
         s"dvUpdate on $table: SET column '$c' is not in the schema $cols"))
-      val liveSet = live.toSet
-      val cands = candidates.fold(live)(f => f(tip).filter(liveSet))
+      val cands = candidates.fold(state.live.keys.toSeq)(_(tip).filter(state.live.contains))
       if (cands.isEmpty) None
       else {
-        val candSet = cands.toSet
-        val oldDvs = state.dvs.filter { case (f, _) => candSet(f) }.toMap
-        val scan0 = readFilesWithPos(spark, table, cands, Some(tip)).filter(cond)
-        val matched0 =
-          if (oldDvs.isEmpty) scan0
-          else scan0.filter(notSuppressedBy(table, oldDvs))
+        val (scan, oldSc) = positionScan(spark, table, state, tip, cands)(_.filter(cond))
         // the same filtered scan feeds the sidecar write AND the updated
         // images — persist so the predicate runs once (at 100 TB this is
         // a checkpointed intermediate; matched rows ≪ candidates)
-        val matched = matched0.persist()
+        val matched = scan.persist()
         try {
-          // sidecar NAMES in the closure, old vectors loaded per task
-          // through the [[DvSidecars]] LRU (see [[dvDelete]])
-          val oldSc: Map[String, String] = oldDvs.map { case (f, (sc, _)) => f -> sc }
-          import spark.implicits._
-          val written: Array[(String, String, Long)] = matched
-            .select(col(DvFileCol), col(DvPosCol))
-            .groupBy(col(DvFileCol))
-            .agg(collect_list(col(DvPosCol)).as("_graft_dv_new"))
-            .as[(String, Seq[Long])]
-            .map { case (f, fresh) =>
-              val merged = (oldSc.get(f).map(DvSidecars.positions(table, _))
-                .getOrElse(Array.empty[Long]) ++ fresh).distinct.sorted
-              val name = s"$f.dv-${java.util.UUID.randomUUID()}"
-              writeDvSidecar(table, name, merged)
-              (f, name, merged.length.toLong)
-            }
-            .collect()
+          val (written, _) = writeVectors(spark, table, matched, oldSc, annotate = false)
           if (written.isEmpty) None
           else {
             // ONE select from the matched rows, so every SET right-hand
@@ -1372,20 +1365,7 @@ object CommitLog {
                 v.as(c)
               }.getOrElse(org.apache.spark.sql.functions.col(s"`$c`"))
             }.toIndexedSeq: _*)
-            val added = stage(images, table)
-            val bloomCol = declaredBloom(table)
-            val (dvLines, matAdds) = dvPolicyLines(spark, table, tip, written.toSeq)
-            val lines = dvLines ++ added.map(f => addAction(table, f, bloomCol))
-            try Some(commitRaw(table, "update", lines, Some(tip), reconcile = true,
-              dmlReadSet = Some(written.map(_._1).toSet)))
-            catch {
-              case e: java.util.ConcurrentModificationException =>
-                unstage(table, added ++ matAdds)
-                written.foreach { case (_, sc, _) =>
-                  Files.deleteIfExists(Paths.get(table, sc))
-                }
-                throw e
-            }
+            Some(landDml(spark, table, "update", tip, written, Nil, stage(images, table)))
           }
         } finally { matched.unpersist(); () }
       }
@@ -1413,15 +1393,9 @@ object CommitLog {
     * Returns the committed version. */
   def dvMerge(spark: SparkSession, source: DataFrame, table: String,
               keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions._
     require(keys.nonEmpty, s"dvMerge on $table: no keys")
     serializably(table) { tip =>
-      require(tip >= 0, s"dvMerge on $table: no commits — append instead")
-      val state = replay(table, Some(tip))
-      require(state.dvOn,
-        s"deletion vectors are not enabled on $table — run " +
-          "CommitLog.enableDv / CALL graft.system.enable_dv first")
-      val live = state.live.keys.toSeq
+      val state = dvSnapshot(table, tip, s"dvMerge on $table: no commits — append instead")
       // ONE evaluation of the source feeds candidate pruning, the matched
       // semi-join, and the matched/unmatched split: a non-deterministic or
       // changing source (a view over mutating data, rand(), a JDBC query)
@@ -1429,83 +1403,32 @@ object CommitLog {
       // materializes the merge source for exactly this reason
       val src = source.persist()
       try {
-      val (cands, _) = upsertCandidates(table, tip, src, keys, live)
-      val bloomCol = declaredBloom(table)
-      if (cands.isEmpty) {
+        val (cands, _) = upsertCandidates(table, tip, src, keys, state.live.keys.toSeq)
         // zone maps prove nothing can match: the whole source is inserts
-        val added = stage(src, table)
-        try Some(commitRaw(table, "merge",
-          added.map(f => addAction(table, f, bloomCol)), Some(tip),
-          reconcile = true, dmlReadSet = Some(Set.empty)))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            unstage(table, added); throw e
-        }
-      } else {
-        val candSet = cands.toSet
-        val oldDvs = state.dvs.filter { case (f, _) => candSet(f) }.toMap
-        val keyCols = keys.map(k => col(s"`$k`"))
-        val matched0 = readFilesWithPos(spark, table, cands, Some(tip))
-          .join(src.select(keyCols: _*).distinct(), keys, "left_semi")
-        // the matched frame feeds the vector write AND the source split —
-        // persist so the candidate scan runs once
-        val matched = (if (oldDvs.isEmpty) matched0
-          else matched0.filter(notSuppressedBy(table, oldDvs))).persist()
-        try {
-          // sidecar NAMES in the closure, old vectors loaded per task
-          // through the [[DvSidecars]] LRU (see [[dvDelete]]); each task
-          // also lands the statement's FRESH positions as the `.dvu-`
-          // update-preimage annotation (every matched suppression in a
-          // merge is an update)
-          val oldSc: Map[String, String] = oldDvs.map { case (f, (sc, _)) => f -> sc }
-          import spark.implicits._
-          val written: Array[(String, String, Long, String)] = matched
-            .select(col(DvFileCol), col(DvPosCol))
-            .groupBy(col(DvFileCol))
-            .agg(collect_list(col(DvPosCol)).as("_graft_dv_new"))
-            .as[(String, Seq[Long])]
-            .map { case (f, fresh) =>
-              val freshArr = fresh.toArray.distinct.sorted
-              val merged = (oldSc.get(f).map(DvSidecars.positions(table, _))
-                .getOrElse(Array.empty[Long]) ++ freshArr).distinct.sorted
-              val name = s"$f.dv-${java.util.UUID.randomUUID()}"
-              writeDvSidecar(table, name, merged)
-              val dvuName = s"$f.dvu-${java.util.UUID.randomUUID()}"
-              writeDvSidecar(table, dvuName, freshArr)
-              (f, name, merged.length.toLong, dvuName)
-            }
-            .collect()
-          val (postAdded, insAdded) =
-            if (written.isEmpty) (Seq.empty[String], stage(src, table))
-            else {
-              val matchedKeys = matched.select(keyCols: _*).distinct()
-              (stage(src.join(matchedKeys, keys, "left_semi"), table),
-                stage(src.join(matchedKeys, keys, "left_anti"), table))
-            }
-          // materialization policy: a past-ratio file rewrites instead of
-          // carrying the vector; its `.dvu-` annotation stays valid (the
-          // CDF's −1 entries scan the ORIGINAL file, where the update
-          // positions live)
-          val (dvLines, matAdds) = dvPolicyLines(spark, table, tip,
-            written.toSeq.map { case (f, sc, n, _) => (f, sc, n) })
-          val lines = dvLines ++ written.toSeq.map { case (f, _, _, du) => Dvu(f, du) } ++
-            (insAdded ++ postAdded).map(f => addAction(table, f, bloomCol)) ++
-            postAdded.map(CdfPost)
-          try Some(commitRaw(table, "merge", lines, Some(tip), reconcile = true,
-            dmlReadSet = Some(written.map(_._1).toSet)))
-          catch {
-            case e: java.util.ConcurrentModificationException =>
-              unstage(table, insAdded ++ postAdded ++ matAdds)
-              written.foreach { case (_, sc, _, du) =>
-                Files.deleteIfExists(Paths.get(table, sc))
-                Files.deleteIfExists(Paths.get(table, du))
+        if (cands.isEmpty) landDml(spark, table, "merge", tip, Nil, Nil, stage(src, table))
+        else {
+          val keyCols = keys.map(k => org.apache.spark.sql.functions.col(s"`$k`"))
+          val (scan, oldSc) = positionScan(spark, table, state, tip, cands)(
+            _.join(src.select(keyCols: _*).distinct(), keys, "left_semi"))
+          // the matched frame feeds the vector write AND the source split —
+          // persist so the candidate scan runs once
+          val matched = scan.persist()
+          try {
+            // every matched suppression in a merge is an update: the tasks
+            // also land the `.dvu-` update-preimage annotations
+            val (written, dvus) = writeVectors(spark, table, matched, oldSc, annotate = true)
+            val (postAdded, insAdded) =
+              if (written.isEmpty) (Seq.empty[String], stage(src, table))
+              else {
+                val matchedKeys = matched.select(keyCols: _*).distinct()
+                (stage(src.join(matchedKeys, keys, "left_semi"), table),
+                  stage(src.join(matchedKeys, keys, "left_anti"), table))
               }
-              throw e
-          }
-        } finally { matched.unpersist(); () }
-      }
+            landDml(spark, table, "merge", tip, written, dvus, insAdded, postAdded)
+          } finally { matched.unpersist(); () }
+        }
       } finally { src.unpersist(); () }
-    }.get
+    }
   }
 
   /** Cap on harvested multi-stats columns per file, counted jointly over
@@ -1738,19 +1661,20 @@ object CommitLog {
     * rule). When `statsCol` is set, each added file's zone range is
     * re-recorded from its parquet footer (min/max column statistics, no
     * data pages), so data skipping on a clustered table SURVIVES row-level
-    * rewrites instead of decaying with every DML commit. */
+    * rewrites instead of decaying with every DML commit. A lost race
+    * reclaims `add` (and the bloom sidecars written for it). */
   private[graft] def replaceFiles(table: String, remove: Seq[String], add: Seq[String],
                                   expectedTip: Option[Long], op: String = "rewrite",
                                   statsCol: Option[String] = None): Long = {
-    val bloomCol = declaredBloom(table)
-    val addActions = add.map { f =>
-      addAction(table, f, bloomCol).copy(zone =
-        for (c <- statsCol; (lo, hi) <- footerMinMax(table, f, c)) yield Zone(lo, hi, Some(c)))
+    val adds = addActions(table, add).map { a =>
+      a.copy(zone = for (c <- statsCol; (lo, hi) <- footerMinMax(table, a.file, c))
+        yield Zone(lo, hi, Some(c)))
     }
     // snapshot-derived rewrites reconcile past racing blind appends
     // (the racer's fresh files intersect neither the remove set nor the
     // rewritten rows); every other racer still aborts to a re-derive
-    commitRaw(table, op, addActions ++ remove.map(Remove), expectedTip, reconcile = true)
+    commitRaw(table, op, adds ++ remove.map(Remove), expectedTip, reconcile = true,
+      staged = add)
   }
 
   /** Row count from the parquet footer alone (no data pages touched). */
@@ -1760,18 +1684,15 @@ object CommitLog {
       try Some(r.getRecordCount) finally r.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Claims the next version with an atomic no-overwrite rename; retries
-    * on collision (another writer won that version). Returns the version
-    * the commit landed at. */
+  /** Commits freshly staged `add` files and removes `remove` through
+    * [[commitRaw]] (a lost race reclaims `add`). Returns the version the
+    * commit landed at. */
   private def commit(table: String, op: String,
                      add: Seq[String], remove: Seq[String],
                      expectedTip: Option[Long] = None,
-                     reconcile: Boolean = false): Long = {
-    val bloomCol = declaredBloom(table)
-    commitRaw(table, op,
-      add.map(f => addAction(table, f, bloomCol)) ++ remove.map(Remove),
-      expectedTip, reconcile)
-  }
+                     reconcile: Boolean = false): Long =
+    commitRaw(table, op, addActions(table, add) ++ remove.map(Remove),
+      expectedTip, reconcile, staged = add)
 
   /** Lands the actions at the next version. `expectedTip`: the log tip the
     * WRITER's snapshot was computed against — a commit whose content
@@ -1803,11 +1724,21 @@ object CommitLog {
     * Any other racer — a rewrite, an overlapping DML, a restore, a
     * schema/constraint change — still aborts to the caller's full
     * re-derive. Callers whose semantics depend on the commit-time live
-    * set as a WHOLE (overwrite's remove-everything) must not opt in. */
+    * set as a WHOLE (overwrite's remove-everything) must not opt in.
+    *
+    * `staged`: the bytes THIS statement wrote for the commit — staged data
+    * files, `.dv-`/`.dvu-` sidecars, materialized rewrites. When the commit
+    * aborts (a write conflict, or 100 lost version claims) they are
+    * reclaimed (each with its `.bloom` sidecar) before the exception
+    * propagates: invisible garbage either way, but eager reclaim keeps
+    * vacuum small, and every derived writer shares this one cleanup. Never
+    * derive it from the actions' adds — [[restore]] re-adds COMMITTED
+    * files, and reclaiming those would delete live history. */
   private def commitRaw(table: String, op: String, actions: Seq[LogAction],
                         expectedTip: Option[Long] = None,
                         reconcile: Boolean = false,
-                        dmlReadSet: Option[Set[String]] = None): Long = {
+                        dmlReadSet: Option[Set[String]] = None,
+                        staged: Seq[String] = Nil): Long = {
     Files.createDirectories(logDir(table))
     val bytes = LogAction.encodeFile(Op(op) +: actions)
     // a txn-marked commit must NOT reconcile past a racer carrying a txn
@@ -1824,9 +1755,12 @@ object CommitLog {
               isBlindAddCommit(table, v, oursHasTxn) ||
                 dmlReadSet.exists(rs =>
                   isDisjointDmlCommit(table, v, rs, oursHasTxn)))
-          if (!safe) throw new java.util.ConcurrentModificationException(
-            s"$op on $table was computed against snapshot v$e but the log tip " +
-              s"is now v$tip — the caller must re-read and re-derive the commit")
+          if (!safe) {
+            unstage(table, staged)
+            throw new java.util.ConcurrentModificationException(
+              s"$op on $table was computed against snapshot v$e but the log tip " +
+                s"is now v$tip — the caller must re-read and re-derive the commit")
+          }
         }
       }
       val v = tip + 1
@@ -1851,6 +1785,7 @@ object CommitLog {
           attempt += 1
       }
     }
+    unstage(table, staged)
     sys.error(s"commit on $table lost ${100} consecutive version races — aborting")
   }
 
@@ -1933,12 +1868,7 @@ object CommitLog {
     Files.createDirectories(Paths.get(table))
     serializably(table) { tip =>
       val old = if (tip < 0) Seq.empty else snapshotFiles(table, Some(tip))
-      val added = stage(df, table)
-      try commit(table, "overwrite", added, old, Some(tip))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          unstage(table, added); throw e
-      }
+      commit(table, "overwrite", stage(df, table), old, Some(tip))
     }
   }
 
@@ -1947,8 +1877,9 @@ object CommitLog {
     * whenever the commit aborts on a write conflict. This is what makes
     * concurrent upserts/compactions serializable: each retry re-reads and
     * re-derives, so the landed commit is always consistent with the
-    * version directly below it. */
-  private def serializably[A](table: String)(body: Long => A): A = {
+    * version directly below it. The one derive-retry loop: every writer
+    * whose commit depends on what it read goes through it. */
+  private[graft] def serializably[A](table: String)(body: Long => A): A = {
     var attempt = 0
     while (attempt < 100) {
       try return body(currentVersion(table))
@@ -1957,10 +1888,8 @@ object CommitLog {
     sys.error(s"derived commit on $table lost 100 consecutive conflicts — aborting")
   }
 
-  /** Deletes files staged for a commit that aborted on conflict — they are
-    * invisible garbage either way, but eager reclaim keeps vacuum small.
-    * A staged file's bloom sidecar (written before the commit attempt)
-    * goes with it. */
+  /** Deletes staged files that will never be committed, each with its
+    * bloom sidecar (written before the commit attempt). */
   private def unstage(table: String, files: Seq[String]): Unit =
     files.foreach { f =>
       Files.deleteIfExists(Paths.get(table, f))
@@ -1985,14 +1914,8 @@ object CommitLog {
       if (replay(table, Some(tip)).txns.contains(txnId)) None
       else {
         val added = stage(df, table)
-        val bloomCol = declaredBloom(table)
-        try Some(commitRaw(table, "txn-append",
-          added.map(f => addAction(table, f, bloomCol)) :+ Txn(txnId),
-          Some(tip)))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            unstage(table, added); throw e
-        }
+        Some(commitRaw(table, "txn-append", addActions(table, added) :+ Txn(txnId),
+          Some(tip), staged = added))
       }
     }
   }
@@ -2015,9 +1938,7 @@ object CommitLog {
       if (tip >= 0 && replay(table, Some(tip)).txns.contains(txnId)) None
       else {
         val removes = if (replace && tip >= 0) snapshotFiles(table, Some(tip)) else Seq.empty
-        val bloomCol = declaredBloom(table)
-        val actions = files.map(f => addAction(table, f, bloomCol)) ++
-          removes.map(Remove) :+ Txn(txnId)
+        val actions = addActions(table, files) ++ removes.map(Remove) :+ Txn(txnId)
         Some(commitRaw(table, if (replace) "txn-overwrite" else "txn-append",
           actions, Some(tip)))
       }
@@ -2131,17 +2052,8 @@ object CommitLog {
     // against the replacements for free — no repartitionByRange sampling
     // job, no per-file min/max agg jobs per call. Only a DECLARED
     // clustering layout is actively maintained (the user asked for it).
-    val statsCol = declaredClustering(table, if (tip < 0) None else Some(tip))
-      .map(_._1).filter(c => merged.columns.exists(_.equalsIgnoreCase(c)))
-    val (added, addLines) = statsCol match {
-      case Some(c) =>
-        stageClustered(spark, merged, table, c,
-          math.max(1, math.min(math.max(candidates.length, 1), 32)))
-      case None =>
-        val fs = stage(merged, table)
-        val bloomCol = declaredBloom(table)
-        (fs, fs.map(f => addAction(table, f, bloomCol)))
-    }
+    val (added, addLines) = stageDeclared(spark, merged, table, tip,
+      _ => math.min(math.max(candidates.length, 1), 32))
     (added, addLines ++ candidates.map(Remove))
   }
 
@@ -2159,11 +2071,7 @@ object CommitLog {
       // even on a fresh/empty table the merge decision ("nothing to
       // merge") was derived from this tip — conflict-abort applies
       val (added, actions) = upsertActions(spark, table, tip, updates, keys)
-      try commitRaw(table, "upsert", actions, Some(tip), reconcile = true)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          unstage(table, added); throw e
-      }
+      commitRaw(table, "upsert", actions, Some(tip), reconcile = true, staged = added)
     }
   }
 
@@ -2184,23 +2092,12 @@ object CommitLog {
       if (tip >= 0 && replay(table, Some(tip)).txns.contains(txnId)) None
       else {
         val (added, actions) = upsertActions(spark, table, tip, updates, keys)
-        try Some(commitRaw(table, "upsert",
-          actions :+ Txn(txnId), Some(tip), reconcile = true))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            unstage(table, added); throw e
-        }
+        Some(commitRaw(table, "upsert", actions :+ Txn(txnId), Some(tip),
+          reconcile = true, staged = added))
       }
     }
   }
 
-  /** Idempotent ingest: appends only rows whose `keys` combination is not
-    * already in the table (one left-anti join on the key — for a corpus
-    * tracker keyed on a 16-byte content hash, the same single-shuffle
-    * shape as exact dedup). Re-running a batch that brings nothing new is
-    * a NO-OP: no empty commit is written, so the version history records
-    * real ingests only. Returns the committed version, or None if the
-    * whole batch was already present. */
   /** Files [[dedupAppend]]'s duplicate check must consult: zone pruning
     * first (files whose recorded key range cannot intersect the batch's),
     * then — on bloom-declared tables with a single-column key matching
@@ -2254,6 +2151,13 @@ object CommitLog {
     }
   }
 
+  /** Idempotent ingest: appends only rows whose `keys` combination is not
+    * already in the table (one left-anti join on the key — for a corpus
+    * tracker keyed on a 16-byte content hash, the same single-shuffle
+    * shape as exact dedup). Re-running a batch that brings nothing new is
+    * a NO-OP: no empty commit is written, so the version history records
+    * real ingests only. Returns the committed version, or None if the
+    * whole batch was already present. */
   def dedupAppend(spark: SparkSession, df: DataFrame, table: String,
                   keys: Seq[String]): Option[Long] = {
     Files.createDirectories(Paths.get(table))
@@ -2287,20 +2191,8 @@ object CommitLog {
         // a constant — repeated ingests must not drift the layout away
         // from the spec the table declared (empty range partitions write
         // no file, so a small batch lands fewer files automatically)
-        val clustering = declaredClustering(table, if (tip < 0) None else Some(tip))
-          .filter { case (c, _) => df.columns.exists(_.equalsIgnoreCase(c)) }
-        val (added, addLines) = clustering match {
-          case Some((c, b)) => stageClustered(spark, fresh, table, c, b)
-          case None =>
-            val fs = stage(fresh, table)
-            val bloomCol = declaredBloom(table)
-            (fs, fs.map(f => addAction(table, f, bloomCol)))
-        }
-        try Some(commitRaw(table, "append", addLines, Some(tip)))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            unstage(table, added); throw e
-        }
+        val (added, addLines) = stageDeclared(spark, fresh, table, tip)
+        Some(commitRaw(table, "append", addLines, Some(tip), staged = added))
       }
     }
   }
@@ -2351,6 +2243,21 @@ object CommitLog {
     declaredSchema(table, None)
       .flatMap(_.fields.find(f => physicalName(f).equalsIgnoreCase(phys)))
       .map(_.name).getOrElse(phys)
+
+  /** Stages `df` under the layout the table declares at `tip`: range-
+    * clustered with zone ranges ([[stageClustered]], into
+    * `buckets(declared buckets)` files) when a clustering column is
+    * declared and `df` carries it, a plain [[stage]] otherwise. Returns
+    * (staged file names, their add actions). */
+  private def stageDeclared(spark: SparkSession, df: DataFrame, table: String, tip: Long,
+                            buckets: Int => Int = identity): (Seq[String], Seq[Add]) =
+    declaredClustering(table, if (tip < 0) None else Some(tip))
+      .filter { case (c, _) => df.columns.exists(_.equalsIgnoreCase(c)) } match {
+      case Some((c, b)) => stageClustered(spark, df, table, c, buckets(b))
+      case None =>
+        val files = stage(df, table)
+        (files, addActions(table, files))
+    }
 
   /** Stages `df` range-partitioned on `statsCol` into `buckets` files and
     * returns (staged file names, add-action lines carrying each file's
@@ -2469,12 +2376,8 @@ object CommitLog {
       val current = readFiles(spark, table, old, mergeSchema = false, Some(tip))
       val spec = s"z(${cols.map(physicalFor(table, _, Some(tip))).mkString(",")})"
       val (added, lines) = stageClustered(spark, current, table, spec, buckets)
-      try commitRaw(table, "cluster",
-        lines ++ old.map(Remove) :+ ClusterBy(spec, buckets), Some(tip))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          unstage(table, added); throw e
-      }
+      commitRaw(table, "cluster", lines ++ old.map(Remove) :+ ClusterBy(spec, buckets),
+        Some(tip), staged = added)
     }
   }
 
@@ -2493,12 +2396,18 @@ object CommitLog {
   def createEmpty(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
                   table: String, clustering: Option[(String, Int)] = None): Long = {
     Files.createDirectories(Paths.get(table))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).coalesce(1)
-    val files = stage(empty, table)
-    commitRaw(table, "create", files.map(f => addAction(table, f)) ++
+    commitRaw(table, "create", addActions(table, stageEmpty(spark, schema, table)) ++
       clustering.map { case (c, b) => ClusterBy(c, b) })
   }
+
+  /** Stages ONE zero-row file carrying `schema` (a 0-partition frame: the
+    * writer's zero-partition special case emits exactly one file) — the
+    * schema source of an empty table, and the guard that keeps a rewrite
+    * that leaves no survivor rows from making the snapshot fileless. */
+  private def stageEmpty(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+                         table: String): Seq[String] =
+    stage(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema).coalesce(1), table)
 
   /** Transactional clustered overwrite: one commit replaces the snapshot
     * with `df` range-partitioned on `statsCol`, zone ranges recorded —
@@ -2511,12 +2420,7 @@ object CommitLog {
     serializably(table) { tip =>
       val old = if (tip < 0) Seq.empty else snapshotFiles(table, Some(tip))
       val (added, lines) = stageClustered(spark, df, table, statsCol, buckets)
-      try commitRaw(table, "overwrite",
-        lines ++ old.map(Remove), Some(tip))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          unstage(table, added); throw e
-      }
+      commitRaw(table, "overwrite", lines ++ old.map(Remove), Some(tip), staged = added)
     }
   }
 
@@ -2540,51 +2444,11 @@ object CommitLog {
       val (added, lines) = stageClustered(spark, current, table, statsCol, buckets)
       // a re-cluster also (re)declares the spec, so future INSERTs keep
       // the layout the operator just paid to establish
-      try commitRaw(table, "cluster",
-        lines ++ old.map(Remove) :+ ClusterBy(statsCol, buckets), Some(tip))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          unstage(table, added); throw e
-      }
+      commitRaw(table, "cluster", lines ++ old.map(Remove) :+ ClusterBy(statsCol, buckets),
+        Some(tip), staged = added)
     }
   }
 
-  /** Row-level CHANGES between versions — the change-data-feed analogue,
-    * computed entirely from the log's add/remove sets (no change files
-    * are ever written): for each commit v in `(fromV, toV]`,
-    *
-    *   - layout-only commits (`compact`, `cluster`, `checkpoint`) emit
-    *     nothing — they move bytes, never rows;
-    *   - pure appends emit their added files' rows as `insert`;
-    *   - rewrite commits (upsert/overwrite/DML) emit the MULTISET diff of
-    *     the removed files' rows vs the added files' rows: rows only in
-    *     the old set are `delete`, only in the new set `insert` — rows a
-    *     rewrite merely carried cancel out and never appear. Without
-    *     per-row identity an UPDATE therefore reads as delete+insert,
-    *     exactly like a snapshot diff on Delta tables without CDC files.
-    *
-    * Output schema: the table columns plus `_change_type` and
-    * `_commit_version`. Needs the touched versions' files on disk, so it
-    * reaches only as far back as vacuum has not reclaimed (same horizon
-    * as time travel; missing files fail loudly at read).
-    *
-    * Plan shape is CONSTANT-WIDTH however many commits the window holds —
-    * a months-long window over a busy table (thousands of commits inside
-    * the vacuum horizon) must not build a thousand-way nested union
-    * (driver-side analysis cost, not data cost). All touched files are
-    * read in ONE scan at the window head's declared schema (additive
-    * evolution NULL-fills older eras, exactly what the per-commit
-    * alignment did), a broadcast file→(version, side) manifest stamps each
-    * row — a file added in one commit and removed in a later one
-    * contributes to both — and then:
-    *   - commits touching ONE side (pure appends / pure removes) pass
-    *     through stamped, no shuffle;
-    *   - rewrite commits (add + remove) take a sign-sum multiset diff:
-    *     group by (version, row), `sum(±1) = n_new − n_old`, emit |n|
-    *     copies — identical semantics to per-commit `exceptAll` pairs
-    *     (rows a rewrite merely carried cancel to 0 and never appear).
-    * At 100 TB the cost stays proportional to the data the DML moved,
-    * never to the table, and the diff shuffle covers only rewrite commits. */
   /** Versions in `(fromV, toV]` whose commit DROPPED a column (an alter
     * carrying tombstones — drops ride pure schema commits, never data
     * commits). These are the era boundaries change serving splits at. */
@@ -2694,9 +2558,46 @@ object CommitLog {
     }
   }
 
-  /** [[changes]] over one schema-era window (no DROP COLUMN between a
-    * data commit and the window end — [[changeWindows]] guarantees it;
-    * an alter LEADING the window is fine, it carries no rows). */
+  /** Row-level CHANGES between versions — the change-data-feed analogue,
+    * computed entirely from the log's add/remove sets (no change files
+    * are ever written): for each commit v in `(fromV, toV]`,
+    *
+    *   - layout-only commits (`compact`, `cluster`, `checkpoint`) emit
+    *     nothing — they move bytes, never rows;
+    *   - pure appends emit their added files' rows as `insert`;
+    *   - rewrite commits (upsert/overwrite/DML) emit the MULTISET diff of
+    *     the removed files' rows vs the added files' rows: rows only in
+    *     the old set are `delete`, only in the new set `insert` — rows a
+    *     rewrite merely carried cancel out and never appear. Without
+    *     per-row identity an UPDATE therefore reads as delete+insert,
+    *     exactly like a snapshot diff on Delta tables without CDC files.
+    *
+    * Output schema: the table columns plus `_change_type` and
+    * `_commit_version`. Needs the touched versions' files on disk, so it
+    * reaches only as far back as vacuum has not reclaimed (same horizon
+    * as time travel; missing files fail loudly at read).
+    *
+    * Plan shape is CONSTANT-WIDTH however many commits the window holds —
+    * a months-long window over a busy table (thousands of commits inside
+    * the vacuum horizon) must not build a thousand-way nested union
+    * (driver-side analysis cost, not data cost). All touched files are
+    * read in ONE scan at the window head's declared schema (additive
+    * evolution NULL-fills older eras, exactly what the per-commit
+    * alignment did), a broadcast file→(version, side) manifest stamps each
+    * row — a file added in one commit and removed in a later one
+    * contributes to both — and then:
+    *   - commits touching ONE side (pure appends / pure removes) pass
+    *     through stamped, no shuffle;
+    *   - rewrite commits (add + remove) take a sign-sum multiset diff:
+    *     group by (version, row), `sum(±1) = n_new − n_old`, emit |n|
+    *     copies — identical semantics to per-commit `exceptAll` pairs
+    *     (rows a rewrite merely carried cancel to 0 and never appear).
+    * At 100 TB the cost stays proportional to the data the DML moved,
+    * never to the table, and the diff shuffle covers only rewrite commits.
+    *
+    * This serves ONE schema-era window (no DROP COLUMN between a data
+    * commit and the window end — [[changeWindows]] guarantees it; an
+    * alter LEADING the window is fine, it carries no rows). */
   private def changesRaw(spark: SparkSession, table: String, fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     // 'purge' rewrites identical LOGICAL rows (it only drops tombstoned
@@ -3139,24 +3040,16 @@ object CommitLog {
         // a fully-suppressed table compacts to ZERO survivor rows: empty
         // write partitions stage no file, and removing every old file
         // would leave the snapshot without a schema source — stage one
-        // explicitly-empty file (0-partition frame: the writer's
-        // zero-partition special case emits exactly one), the same guard
-        // the purge/DML-emptying paths keep
+        // explicitly-empty file, the same guard the purge/DML-emptying
+        // paths keep
         val added =
-          if (added0.nonEmpty) added0
-          else stage(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            rewritten.schema).coalesce(1), table)
+          if (added0.nonEmpty) added0 else stageEmpty(spark, rewritten.schema, table)
         // a compaction racing a blind append RECONCILES (the racer's
         // fresh file is simply left uncompacted) instead of re-reading
         // and re-staging the whole table — maintenance never loses its
         // work to concurrent ingest; overwrite must NOT do this (its
         // semantics is remove-everything-live-at-commit)
-        try Some(commit(table, "compact", added, old, Some(tip), reconcile = true))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            unstage(table, added); throw e
-        }
+        Some(commit(table, "compact", added, old, Some(tip), reconcile = true))
       }
     }
   }
@@ -3183,28 +3076,14 @@ object CommitLog {
         // the declared-schema read already excludes dropped columns; the
         // re-stage writes only the surviving (physical-named) fields
         val current = readFiles(spark, table, old, mergeSchema = false, Some(tip))
-        val clustering = declaredClustering(table, Some(tip))
-          .filter { case (c, _) => current.columns.exists(_.equalsIgnoreCase(c)) }
-        val (added, addLines) = clustering match {
-          case Some((c, b)) => stageClustered(spark, current, table, c, b)
-          case None =>
-            val fs = stage(current, table)
-            (fs, fs.map(f => addAction(table, f)))
-        }
+        val (added, addLines) = stageDeclared(spark, current, table, tip)
         // an empty table must keep one schema-bearing file or the
         // snapshot becomes unreadable (same guard DML rewrites carry)
         val emptyGuard =
-          if (added.nonEmpty) Seq.empty
-          else stage(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            current.schema).coalesce(1), table)
-        try Some(commitRaw(table, "purge",
-          addLines ++ emptyGuard.map(f => addAction(table, f)) ++
-            old.map(Remove) ++ tombs.map(Untombstone), Some(tip)))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            unstage(table, added ++ emptyGuard); throw e
-        }
+          if (added.nonEmpty) Seq.empty else stageEmpty(spark, current.schema, table)
+        Some(commitRaw(table, "purge",
+          addLines ++ addActions(table, emptyGuard) ++ old.map(Remove) ++
+            tombs.map(Untombstone), Some(tip), staged = added ++ emptyGuard))
       }
     }
 

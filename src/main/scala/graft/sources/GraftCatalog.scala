@@ -214,13 +214,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     loadTable(ident)
   }
 
-  /** `ALTER TABLE ... ADD COLUMNS (...)` — additive schema evolution as a
-    * log commit: one `alter` action declares the widened schema (the Delta
-    * `metaData` shape), no data file moves, and every read at or past the
-    * commit serves the new columns with NULLs for pre-evolution files.
-    * Only top-level nullable additions are accepted; anything that would
-    * rewrite or reinterpret existing data (drop/rename/retype/position)
-    * is refused. */
   /** Type promotions the parquet reader can serve over OLD files without
     * rewriting them (widening reads narrow pages up; spec-verified against
     * Spark's vectorized reader). Everything else — narrowing, string↔
@@ -418,9 +411,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "tombstoned)")
     }
 
-    var attempt = 0
-    while (attempt < 100) {
-      val tip = CommitLog.currentVersion(dir)
+    CommitLog.serializably(dir) { tip =>
       dropped = CommitLog.droppedPhysicalNames(dir, Some(tip))
       // evolve the DECLARED schema when one exists (it carries the
       // physical-name metadata); fall back to the file-derived one
@@ -428,17 +419,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         CommitLog.read(SparkSession.active, dir, Some(tip)).schema)
       newTombstones.clear() // re-derived per race attempt
       val evolved = colChanges.foldLeft(cur)(applyOne)
-      try {
-        CommitLog.evolveSchema(dir, evolved, tip, newTombstones.toSeq)
-        // property commits land only once the schema evolution is durable
-        // (each is itself one atomic alter commit; pre-validated above)
-        applyProps()
-        return loadTable(ident)
-      } catch {
-        case _: java.util.ConcurrentModificationException => attempt += 1
-      }
+      CommitLog.evolveSchema(dir, evolved, tip, newTombstones.toSeq)
     }
-    sys.error(s"ALTER TABLE on $ident lost 100 consecutive version races — aborting")
+    // property commits land only once the schema evolution is durable
+    // (each is itself one atomic alter commit; pre-validated above)
+    applyProps()
+    loadTable(ident)
   }
 
   override def dropTable(ident: Identifier): Boolean = {

@@ -637,12 +637,6 @@ object GraftLogDataSource {
           new GraftRowLevelOperation(path, snapshotVersion, schema0, info.command)
     }
 
-    /** Metadata-only DELETE: when the zone maps prove every live file is
-      * either fully inside the deleted region (null-free on the bounded
-      * column) or fully outside it, the delete is ONE log commit dropping
-      * whole files — zero data IO ([[MetadataDelete]]). Spark's
-      * `OptimizeMetadataOnlyDeleteFromTable` asks here first and falls
-      * back to the copy-on-write rewrite when the proof declines. */
     /** A DELETE is served without a copy-on-write rewrite when either
       * proof applies, tried cheapest-first:
       *  1. metadata-only — zone maps prove file-exact coverage: one
@@ -663,12 +657,10 @@ object GraftLogDataSource {
       require(!isCdf, s"graftlog: a change-feed relation of $path is read-only")
       require(!timeTravel,
         s"graftlog: cannot DELETE from a time-travel snapshot of $path")
-      var attempt = 0
-      while (attempt < 100) {
-        // re-derive against the CURRENT tip: the proof was planned on this
-        // table's pinned snapshot, but the delete must apply serializably
-        // to the head (a racing commit aborts the attempt and re-proves)
-        val tip = CommitLog.currentVersion(path)
+      // re-derive against the CURRENT tip: the proof was planned on this
+      // table's pinned snapshot, but the delete must apply serializably
+      // to the head (a racing commit aborts the attempt and re-proves)
+      CommitLog.serializably(path) { tip =>
         MetadataDelete.plan(path, tip, filters.toIndexedSeq) match {
           case None if CommitLog.dvEnabled(path, Some(tip)) &&
               filters.forall(translate(_).isDefined) =>
@@ -678,27 +670,23 @@ object GraftLogDataSource {
               .reduceOption(_ && _).getOrElse(lit(true))
             CommitLog.dvDelete(SparkSession.active, path, cond,
               Some(v => prunedFileNames(path, v, filters.toIndexedSeq)))
-            return
+            ()
           case None => throw new IllegalStateException(
             s"graftlog: metadata DELETE on $path is no longer provable at " +
               s"v$tip (the table changed since planning) — re-run the DELETE")
-          case Some(drops) if drops.isEmpty => return // provably matches nothing
+          case Some(drops) if drops.isEmpty => () // provably matches nothing
           case Some(drops) =>
             // dropping every live file (TRUNCATE / delete-all) must leave a
-            // schema source: one empty parquet file, as CREATE TABLE does
+            // schema source: one empty parquet file, as CREATE TABLE does;
+            // a lost race reclaims it
             val emptyGuard =
               if (CommitLog.snapshotFiles(path, Some(tip)).forall(drops.contains))
                 Seq(MetadataDelete.writeEmptyFile(path, schema0))
               else Seq.empty
-            try {
-              CommitLog.replaceFiles(path, drops, emptyGuard, Some(tip), op = "delete")
-              return
-            } catch {
-              case _: java.util.ConcurrentModificationException => attempt += 1
-            }
+            CommitLog.replaceFiles(path, drops, emptyGuard, Some(tip), op = "delete")
+            ()
         }
       }
-      sys.error(s"metadata DELETE on $path lost 100 consecutive version races — aborting")
     }
 
     // ------------------------------------------------------------------ write

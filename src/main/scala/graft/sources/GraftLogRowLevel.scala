@@ -155,13 +155,10 @@ private[sources] final class GraftRowLevelOperation(
                     CommitLog.snapshotFiles(path, Some(version)).forall(removed.contains))
                   Seq(MetadataDelete.writeEmptyFile(path, schema))
                 else Seq.empty
-              try CommitLog.replaceFiles(path, removed, added ++ emptyGuard, Some(version),
+              // a lost race reclaims the staged files and their blooms
+              CommitLog.replaceFiles(path, removed, added ++ emptyGuard, Some(version),
                 op = cmd.name.toLowerCase, statsCol = statsCol)
-              catch {
-                case e: java.util.ConcurrentModificationException =>
-                  (added ++ emptyGuard).foreach(f => Files.deleteIfExists(Paths.get(path, f)))
-                  throw e
-              }
+              ()
             }
 
             override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for named queries to files
   * (plans/<tag>/<query>_<suffix>.txt) — the judge-checkable plan evidence.
   * Usage: ExplainDump <outDir> <suffix> <query> [query ...]
-  * Uses the bench's session shape (local[32], partitions=32, AQE on,
-  * 64 MB broadcast threshold) so plan shapes match what the bench runs. */
+  * Uses the bench's session ([[graft.GraftSession.local]], 32 cores by
+  * default) so plan shapes match what the bench runs. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ExplainDump <outDir> <suffix> <query> [query ...]")
@@ -15,14 +13,7 @@ object ExplainDump {
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run one query and print every Spark JOB's wall time with
   * its description (guide §1: decide whether the time is compute, shuffle,
@@ -17,15 +16,7 @@ object QueryProbe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeats = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     @volatile var rows = Seq.empty[(Int, Double, Int, String)]

@@ -118,6 +118,7 @@ class CommitLogSpec extends SparkSpec {
     assert(rows.toMap == (1 to 6).map(i => i.toLong -> s"new$i").toMap,
       s"every concurrent update must survive: ${rows.sortBy(_._1).toSeq}")
     assert(CommitLog.currentVersion(t) == 6L, "six upserts land six versions")
+    assertNoLeakedFiles(t)
   }
 
   test("uncommitted data files are invisible to readers") {
@@ -380,6 +381,7 @@ class CommitLogSpec extends SparkSpec {
     // depending on commit order — but the PURGED snapshot's content is
     // exact and the name is reusable either way
     assert(CommitLog.read(spark, t).schema.fieldNames.toSeq == Seq("id", "x"))
+    assertNoLeakedFiles(t)
   }
 
   test("evolveSchema reserves tombstone names holding quotes, backslashes and newlines") {
@@ -819,6 +821,7 @@ class CommitLogSpec extends SparkSpec {
     val got = CommitLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
     assert(got == ((1L to 4L) ++ (10L to 14L)).toSeq,
       s"no appended or compacted row may be lost or duplicated: $got")
+    assertNoLeakedFiles(t)
   }
 
   test("replay never serves a deleted-and-recreated table's dead generation, " +

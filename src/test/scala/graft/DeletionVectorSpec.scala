@@ -364,6 +364,45 @@ class DeletionVectorSpec extends SparkSpec {
     val got = CommitLog.read(spark, t).collect().map(_.getLong(0)).toSet
     assert(got == (1L to 12L).toSet -- Set(2L, 3L, 5L, 6L, 8L, 9L), s"got $got")
     assert(CommitLog.dvRowCount(t) == 6L)
+    assertNoLeakedFiles(t)
+  }
+
+  test("dvUpdate racing dvMerge on the same files: both land in one serial " +
+      "order, the change feed labels both, nothing leaks") {
+    val t = freshTable("updmerge")
+    CommitLog.append(df((1L to 6L).map(i => i -> s"r$i"): _*).coalesce(1), t) // v0
+    CommitLog.enableDv(t)                                                     // v1
+    // the merge lands between the update's snapshot read and its commit:
+    // both write vectors for the one base file and both append images, so
+    // neither can reconcile past the other — the update must reclaim what
+    // it staged and re-derive on top of the merge
+    var updateRuns = 0
+    val vu = CommitLog.dvUpdate(spark, t, col("id").isin(2L, 4L), Map("v" -> lit("u")),
+      Some { tip =>
+        updateRuns += 1
+        if (updateRuns == 1) {
+          assert(CommitLog.dvMerge(spark, df(4L -> "m4", 9L -> "m9"), t, Seq("id")) == 2L)
+        }
+        CommitLog.snapshotFiles(t, Some(tip))
+      })
+    assert(updateRuns == 2, "the update must lose the race and re-derive once")
+    assert(vu.contains(3L), s"the update lands above the merge: $vu")
+    // the serial order merge-then-update: id 4 takes the merge's image,
+    // then the update's
+    val rows = CommitLog.read(spark, t).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+    assert(rows == Seq(1L -> "r1", 2L -> "u", 3L -> "r3", 4L -> "u", 5L -> "r5",
+      6L -> "r6", 9L -> "m9"), s"got $rows")
+    val feed = CommitLog.changes(spark, t, 1L, 3L)
+      .select("id", "v", "_change_type", "_commit_version").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+    assert(feed == Set(
+      (4L, "r4", "update_preimage", 2L), (4L, "m4", "update_postimage", 2L),
+      (9L, "m9", "insert", 2L),
+      (2L, "r2", "update_preimage", 3L), (2L, "u", "update_postimage", 3L),
+      (4L, "m4", "update_preimage", 3L), (4L, "u", "update_postimage", 3L)),
+      s"got $feed")
+    assertNoLeakedFiles(t)
   }
 
   test("compact materializes vectors: clean files, native reads return") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.io.CommitLog
 
 /** SQL row-level DML on commit-log tables ([[graft.sources
@@ -523,5 +525,83 @@ class GraftLogRowLevelSpec extends SparkSpec {
       (4L, 1, "update_postimage"),
       (5L, -1, "update_postimage"), (6L, -1, "update_postimage"),
       (7L, -1, "update_postimage")), s"got $w")
+  }
+
+  // ---------------------------------------------------------------- lost races
+
+  /** Starts a watcher that commits one unrelated `alter` to `dir` the
+    * moment a new file `pick` accepts appears there: the statement under
+    * test has then derived its commit and staged its bytes but not landed
+    * them (on a bloom-declared table its commit first runs a bloom job per
+    * staged file), so it loses that version race. Returns the watcher to
+    * join. */
+  private def raceOnFirst(dir: String)(pick: String => Boolean): Thread = {
+    def names: Set[String] = {
+      val s = Files.list(Paths.get(dir))
+      try s.iterator.asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val before = names
+    val watcher = new Thread(() => {
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      var fired = false
+      while (!fired && System.nanoTime() < deadline) {
+        if ((names -- before).exists(pick)) {
+          CommitLog.setDvMaxRatio(dir, 1.0)
+          fired = true
+        } else Thread.sleep(1)
+      }
+    })
+    watcher.setDaemon(true)
+    watcher.start()
+    watcher
+  }
+
+  test("copy-on-write UPDATE that loses its race reclaims its files and their blooms") {
+    warehouse
+    spark.sql("DROP TABLE IF EXISTS rlcat.dml.rb")
+    spark.sql("CREATE TABLE rlcat.dml.rb (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('graft.bloom.column' = 'id')")
+    spark.sql("INSERT INTO rlcat.dml.rb SELECT id, concat('v', id) FROM range(8)")
+    val dir = tableDir("rb")
+    val vPre = CommitLog.currentVersion(dir)
+    val watcher = raceOnFirst(dir)(_.endsWith(".parquet"))
+    val e = intercept[Throwable] {
+      spark.sql("UPDATE rlcat.dml.rb SET v = concat(v, '!') WHERE id % 2 = 0")
+    }
+    watcher.join()
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      s"the UPDATE must fail on the write conflict, got $e")
+    assert(CommitLog.currentVersion(dir) == vPre + 1 &&
+      CommitLog.readCommit(dir, vPre + 1).op == "alter", "only the racer landed")
+    assertNoLeakedFiles(dir)
+    // re-running re-derives at the new tip
+    spark.sql("UPDATE rlcat.dml.rb SET v = concat(v, '!') WHERE id % 2 = 0")
+    val got = spark.sql("SELECT id, v FROM rlcat.dml.rb ORDER BY id")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(got == (0L until 8L).map(i => i -> (if (i % 2 == 0) s"v$i!" else s"v$i")),
+      s"got $got")
+    assertNoLeakedFiles(dir)
+  }
+
+  test("metadata DELETE that loses its race reclaims its empty guard file") {
+    warehouse
+    spark.sql("DROP TABLE IF EXISTS rlcat.dml.rt")
+    spark.sql("CREATE TABLE rlcat.dml.rt (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('graft.bloom.column' = 'id')")
+    spark.sql("INSERT INTO rlcat.dml.rt SELECT id, concat('v', id) FROM range(8)")
+    val dir = tableDir("rt")
+    val vPre = CommitLog.currentVersion(dir)
+    // dropping every file stages an empty schema-bearing guard; the racer
+    // fires on the first one, the delete re-derives and lands a second
+    val watcher = raceOnFirst(dir)(_.startsWith("empty-"))
+    spark.sql("TRUNCATE TABLE rlcat.dml.rt")
+    watcher.join()
+    assert(CommitLog.readCommit(dir, vPre + 1).op == "alter" &&
+      CommitLog.readCommit(dir, vPre + 2).op == "delete" &&
+      CommitLog.currentVersion(dir) == vPre + 2,
+      "the racer lands first, the re-derived delete on top of it")
+    assert(spark.sql("SELECT count(*) FROM rlcat.dml.rt").head.getLong(0) == 0L)
+    assertNoLeakedFiles(dir)
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +28,32 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => try spark.conf.unset(k) catch { case _: Throwable => () }
     }
+  }
+
+  /** Asserts that no writer left bytes behind in the commit-log table at
+    * `table`: every data file, key bloom and vector sidecar (`.parquet`,
+    * `.bloom`, `.dv-`, `.dvu-`) in its directory is named by some commit
+    * or checkpoint of its log. A writer that loses a version race must
+    * reclaim everything it staged. */
+  def assertNoLeakedFiles(table: String): Unit = {
+    import graft.io.LogAction
+    def names(dir: Path): Seq[String] = {
+      val s = Files.list(dir)
+      try s.iterator.asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+    val logDir = Paths.get(table, "_log")
+    val referenced = names(logDir).filter(_.endsWith(".json")).flatMap { n =>
+      LogAction.decodeFile(Files.readAllBytes(logDir.resolve(n)), n).collect {
+        case a: LogAction.Add => a.file
+        case LogAction.Dv(_, sc, _) => sc
+        case LogAction.Dvu(_, sc) => sc
+      }
+    }.toSet
+    val leaked = names(Paths.get(table)).filter { n =>
+      (n.endsWith(".parquet") || n.endsWith(".bloom") || n.contains(".dv-") ||
+        n.contains(".dvu-")) && !referenced(n.stripSuffix(".bloom"))
+    }
+    assert(leaked.isEmpty, s"$table holds files no version references: ${leaked.sorted}")
   }
 }
 
