@@ -39,10 +39,6 @@ import org.apache.spark.sql.SparkSession
   *     steady-state ones.
   *   - SPARK_GRAFT_ONLY=q1,q2: limit to named queries (dev: repeated
   *     focused timing without the full suite).
-  *   - SPARK_GRAFT_ORDER=reverse | first:<name>: run the suite in reverse
-  *     alphabetical order, or with one query moved to the front — the
-  *     suite-order experiment knobs (is a slow reading position-dependent
-  *     predecessor state or environment noise?).
   *   - SPARK_GRAFT_REQUEUE_LOAD (default 3.0, 0 disables): any query whose
   *     before/after host-load stamp exceeded the threshold is re-measured
   *     once more at the END of the run (hopefully past the burst). The
@@ -64,18 +60,8 @@ object Bench {
       require(names.nonEmpty && unknown.isEmpty,
         s"SPARK_GRAFT_ONLY lists no valid queries (unknown: ${unknown.mkString(", ")})")
     }
-    val sortedSel = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val selected = sys.env.get("SPARK_GRAFT_ORDER") match {
-      case Some("reverse") => sortedSel.reverse
-      case Some(s) if s.startsWith("first:") =>
-        val head = s.stripPrefix("first:")
-        require(sortedSel.exists(_._1 == head), s"SPARK_GRAFT_ORDER first: unknown query $head")
-        sortedSel.filter(_._1 == head) ++ sortedSel.filterNot(_._1 == head)
-      case Some(other) if other.nonEmpty =>
-        sys.error(s"SPARK_GRAFT_ORDER must be 'reverse' or 'first:<name>', got $other")
-      case _ => sortedSel
-    }
 
     // Host 1-minute loadavg, recorded before/after every query. The round-6
     // driver record carried a 30.9s reading for a query that is 1.3s in every

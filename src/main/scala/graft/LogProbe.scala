@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 
-import graft.io.{CommitLog, LogAction}
+import graft.io.{CommitLog, LogAction, Sinks}
 
 /** One-off METADATA-PLANE scale probe (NOT a gate) — the commit-log
   * analogue of [[ScaleProbe]]'s data-plane tiers:
@@ -39,9 +39,7 @@ object LogProbe {
 
   private def freshDir(root: String, name: String): String = {
     val p = Paths.get(root, name)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
+    Sinks.deleteTree(p)
     Files.createDirectories(p)
     p.toString
   }

@@ -736,9 +736,7 @@ object CommitLog {
         // under the staging contract's exception (the per-row raise
         // arrives wrapped in the job failure)
         try {
-          if (Files.exists(staging))
-            Files.walk(staging).sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => Files.deleteIfExists(p))
+          Sinks.deleteTree(staging)
         } catch { case scala.util.control.NonFatal(_) => () }
         constraintFailure(e) match {
           case Some(m) => throw new IllegalStateException(m)
@@ -773,7 +771,7 @@ object CommitLog {
   private def addAction(table: String, f: String, bloomCol: Option[String]): Add = {
     val fs = footerSummary(table, f)
     val bloomed = bloomCol.flatMap(bc =>
-      try fileBloom(SparkSession.active, table, f, bc)
+      try fs.rows.flatMap(fileBloom(SparkSession.active, table, f, bc, _))
       catch { case scala.util.control.NonFatal(_) => None }) match {
       case Some(bits) =>
         try { writeBloomSidecar(table, f, bits); true }
@@ -883,12 +881,12 @@ object CommitLog {
     * one narrow Spark job over just that column (m from the footer row
     * count, so the job never guesses), per-partition local bitsets OR-ed
     * on the driver (bounded: partitions × m/8 bytes — never the keys
-    * themselves). None (no bloom recorded, file always read — fail-safe)
-    * when the column is absent or the row count unknown. */
+    * themselves). `rows` is the footer row count [[addAction]] already
+    * read. None (no bloom recorded, file always read — fail-safe) when the
+    * column is absent. */
   private def fileBloom(spark: SparkSession, table: String, f: String,
-                        physCol: String): Option[Array[Long]] =
+                        physCol: String, rows: Long): Option[Array[Long]] =
     try {
-      val rows = footerRowCount(table, f).getOrElse(return None)
       val mBits = math.max(MinBloomBits,
         math.min(rows * BloomBitsPerKey, MaxBloomBits)) / 64 * 64
       val words = (mBits / 64).toInt
@@ -1676,13 +1674,6 @@ object CommitLog {
     commitRaw(table, op, adds ++ remove.map(Remove), expectedTip, reconcile = true,
       staged = add)
   }
-
-  /** Row count from the parquet footer alone (no data pages touched). */
-  def footerRowCount(table: String, f: String): Option[Long] =
-    try {
-      val r = Footers.open(footerPath(table, f))
-      try Some(r.getRecordCount) finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Commits freshly staged `add` files and removes `remove` through
     * [[commitRaw]] (a lost race reclaims `add`). Returns the version the

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -84,4 +84,14 @@ object Sinks {
     Files.createDirectories(p.getParent)
     p.toString
   }
+
+  /** Deletes `p` and everything under it, if it exists. The walk is closed
+    * in a `finally`: an open `Files.walk` holds its directory handles until
+    * it is closed, and some callers run in long-lived sessions. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    }
 }

@@ -72,7 +72,6 @@ object Tables {
     * apply it only under order-insensitive consumers (aggregates, joins,
     * per-row maps — not written table layouts). */
   def spread(spark: SparkSession, df: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD")) return df // A/B probe knob
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }

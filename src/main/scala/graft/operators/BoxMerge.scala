@@ -1,8 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** A8 — agglomerative bbox merge (`src/form_calcs.py:753-792`), the
   * reference's hardest operator, re-expressed as order-independent connected
   * components over the `calc_sim` predicate (`src/form_calcs.py:716-750`).
@@ -13,12 +10,13 @@ import org.apache.spark.sql.functions._
   * §2.11.2 we implement the evident intent: true connected components, class
   * conflict -> `undefined_object`.
   *
-  * Scale shape: ONE shuffle — `groupBy(key).agg(sort_array(collect_list(
-  * struct(...))))` benefits from map-side partial aggregation, and box ids
-  * are positions in the canonical (x1,y1,x2,y2,label) order, so no
-  * id-assignment window pass is needed. Clustering is O(n²) in the boxes
-  * *per tile* (domain-bounded: hundreds at most), never in the total box
-  * count, so the operator parallelizes across tiles on any cluster size.
+  * This object is the per-tile kernel; the DataFrame-level operator is
+  * [[graft.plans.MergeBoxesApi.mergeBoxes]], whose exec feeds each tile's
+  * boxes to [[clusterGroup]] in the canonical (x1,y1,x2,y2,label,chip)
+  * order, so box ids are canonical positions and no id-assignment pass is
+  * needed. Clustering works on one tile's boxes at a time (bounded by the
+  * domain: hundreds at most), never on the total box count, so the
+  * operator parallelizes across tiles on any cluster size.
   */
 object BoxMerge {
 
@@ -51,9 +49,8 @@ object BoxMerge {
     aContainsB || bContainsA || (xGap <= gap && yCovers) || (yGap <= gap && xCovers)
   }
 
-  /** Grid cell size for candidate pruning (same invariant DistributedCC
-    * uses: two similar boxes' gap-expanded bboxes intersect, so they share
-    * at least one cell). */
+  /** Grid cell size for candidate pruning: two similar boxes' gap-expanded
+    * bboxes intersect, so they share at least one cell. */
   private val CellPx = 64
 
   /** Union-find over the pairwise predicate on boxes ALREADY in canonical
@@ -131,40 +128,5 @@ object BoxMerge {
         merged = bs.size > 1,
         chip_names = bs.map(_.chip).distinct.sorted)
     }.toSeq
-  }
-
-  /** Canonical in-tile ordering (must match any external oracle that
-    * assigns ids by row_number over the same columns). `chip` is a
-    * trailing tiebreaker only; coordinate-identical boxes always land in
-    * the same cluster, so cluster output is chip-order-independent. */
-  private def canonicalSort(boxes: Seq[Box]): Seq[Box] =
-    boxes.sortBy(b => (b.x1, b.y1, b.x2, b.y2, b.label, b.chip))
-
-  /** Distributed merge: one shuffle (partial-agg collect per tile), then
-    * per-group union-find. */
-  def merge(ds: Dataset[Box], gap: Int = 5): Dataset[Cluster] = {
-    val spark: SparkSession = ds.sparkSession
-    import spark.implicits._
-    ds.toDF()
-      .groupBy("key")
-      .agg(sort_array(collect_list(struct(
-        col("x1"), col("y1"), col("x2"), col("y2"), col("label"), col("chip")))).as("boxes"))
-      .as[(String, Seq[(Int, Int, Int, Int, String, String)])]
-      .flatMap { case (key, packed) =>
-        val boxes = packed.map { case (x1, y1, x2, y2, label, chip) =>
-          Box(key, x1, y1, x2, y2, label, chip)
-        }
-        // sort_array on the struct already yields canonical order, but the
-        // contract belongs to the operator, not the packing detail
-        clusterGroup(canonicalSort(boxes), gap)
-      }
-  }
-
-  /** Convenience: merge straight from a DataFrame with
-    * (key, x1, y1, x2, y2, label, chip) columns. */
-  def mergeFrame(df: DataFrame, gap: Int = 5): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    merge(df.select("key", "x1", "y1", "x2", "y2", "label", "chip").as[Box], gap).toDF()
   }
 }

@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
   * propagation over an edge list, keyed so many independent graphs (one per
   * `key`) resolve in the same pass.
   *
-  * Used by the A8 merge escape hatch ([[DistributedCC]]) and by near-dup
-  * document clustering (d6/d7) — the "collapse LSH candidate pairs into
-  * duplicate clusters" step every corpus-scale dedup pipeline ends with
-  * (reference merge semantics: `form_calcs.py:748-792`, re-expressed as
-  * order-independent components).
+  * Used by near-dup document clustering (d6/d7) — the "collapse LSH
+  * candidate pairs into duplicate clusters" step every corpus-scale dedup
+  * pipeline ends with (reference merge semantics: `form_calcs.py:748-792`,
+  * re-expressed as order-independent components).
   *
   * Scale shape: each round propagates labels only from vertices whose label
   * changed last round (if a label did not change, every neighbor already saw

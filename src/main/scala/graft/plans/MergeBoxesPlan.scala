@@ -27,10 +27,13 @@ import graft.operators.BoxMerge
   * none, if the child is already clustered), and the operator streams
   * sorted runs: buffer one tile's rows, union-find, emit, release.
   *
-  * Output and semantics are identical to [[graft.operators.BoxMerge]]
-  * (ids = 1-based canonical positions, conflict -> undefined_object,
-  * chip_names = sorted distinct member chips per
-  * `src/form_calcs.py:770-779`).
+  * This is the engine's only DataFrame-level box merge; each tile runs the
+  * [[graft.operators.BoxMerge.clusterGroup]] kernel (ids = 1-based
+  * canonical positions, conflict -> undefined_object, chip_names = sorted
+  * distinct member chips per `src/form_calcs.py:770-779`). Every input
+  * column must be non-null: a null fails the task with an
+  * `IllegalArgumentException` naming the column, where a positional read
+  * would turn a null coordinate into 0.
   *
   * Output attributes are a constructor parameter minted fresh per operator
   * instance ([[MergeBoxesPlan.freshOutput]]): a shared object-level val
@@ -99,11 +102,21 @@ case class MergeBoxesExec(gap: Int, child: SparkPlan,
   override protected def doExecute(): RDD[InternalRow] = {
     val g = gap
     val outTypes = output.map(_.dataType).toArray
+    val inNames = child.output.map(_.name).toArray
+    val nonNull: InternalRow => InternalRow = { r =>
+      var i = 0
+      while (i < inNames.length) {
+        if (r.isNullAt(i)) throw new IllegalArgumentException(
+          s"mergeBoxes input column `${inNames(i)}` holds a null; every box needs all seven columns")
+        i += 1
+      }
+      r
+    }
     child.execute().mapPartitions { iter =>
       // downstream operators require UnsafeRow — project per partition
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(outTypes)
       new Iterator[InternalRow] {
-        private val in = iter.buffered
+        private val in = iter.map(nonNull).buffered
         private var out: Iterator[InternalRow] = Iterator.empty
 
         private def readGroup(): Unit = {
@@ -117,8 +130,8 @@ case class MergeBoxesExec(gap: Int, child: SparkPlan,
               r.getUTF8String(5).toString, r.getUTF8String(6).toString)
           }
           // rows arrive sorted on (key, x1, y1, x2, y2, label, chip) —
-          // already the canonical order, so positional ids match the
-          // library operator
+          // already the canonical order, so positional ids are canonical
+          // positions (what the oracles' row_number assigns)
           out = BoxMerge.clusterGroup(boxes.toSeq, g).iterator.map { c =>
             proj(InternalRow(
               UTF8String.fromString(c.key), c.cluster_id,

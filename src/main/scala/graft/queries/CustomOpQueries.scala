@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.operators.BoxMerge
 import graft.functions.GeoUtm
+import graft.plans.MergeBoxesApi
 import graft.sources.VocXml
 
 /** Queries exercising the engine's custom operators: A8 merge clustering,
@@ -32,8 +32,8 @@ object CustomOpQueries {
     concat(col("key"), lit("_c"), floor(col("y1") / 128).cast("int"),
       lit("_"), floor(col("x1") / 128).cast("int"))
 
-  /** The shared synthetic box feed every a8/a10 variant clusters (mirrors
-    * the `raw` CTE of a8CoreSql — one definition, four consumers). */
+  /** The synthetic box feed a8 and a10 cluster (mirrors the `raw` CTE of
+    * a8CoreSql). */
   private def a8Feed(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir).select(
       col("l_orderkey").cast("string").as("key"),
@@ -47,15 +47,17 @@ object CustomOpQueries {
       .withColumn("chip", chipOf)
 
   // ------------------------------------------------------------------ A8: merge clustering
-  private val a8MergeClusters: Q = (spark, dir) => {
-    // box identity = position in the canonical (x1,y1,x2,y2,label) order,
-    // assigned inside BoxMerge — (l_orderkey, l_linenumber) is NOT unique
-    // in the synthetic corpus, and the positional scheme needs no window
-    val raw = a8Feed(spark, dir)
-    BoxMerge.mergeFrame(raw)
+  /** A8 through the merge operator ([[graft.plans.MergeBoxesApi.mergeBoxes]]).
+    * Box identity = position in the canonical (x1,y1,x2,y2,label,chip)
+    * order, assigned inside the operator — (l_orderkey, l_linenumber) is
+    * NOT unique in the synthetic corpus, and the positional scheme needs no
+    * window. Registered as a8, a8b and a8c so earlier bench and verify
+    * records stay comparable; all three are pinned to one recursive-CTE
+    * oracle. */
+  private val a8MergeClusters: Q = (spark, dir) =>
+    MergeBoxesApi.mergeBoxes(a8Feed(spark, dir))
       .withColumn("chip_names", array_join(col("chip_names"), ","))
       .orderBy("key", "cluster_id")
-  }
 
   private val a8CoreSql =
     """raw AS (
@@ -105,26 +107,6 @@ object CustomOpQueries {
       |FROM boxes b JOIN comp c ON b.key = c.key AND b.id = c.id
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Same clustering through the first-class physical operator
-    * (MergeBoxesPlan/Exec via the planner strategy) — must hash-match the
-    * flatMap form's recursive-CTE oracle exactly. */
-  private val a8bMergeNative: Q = (spark, dir) => {
-    val raw = a8Feed(spark, dir)
-    graft.plans.MergeBoxesApi.mergeBoxes(raw)
-      .withColumn("chip_names", array_join(col("chip_names"), ","))
-      .orderBy("key", "cluster_id")
-  }
-
-  /** Same clustering a third way: skew-proof Hash-Min connected components
-    * over grid-cell candidate edges (no per-tile cardinality bound) —
-    * also pinned to the recursive-CTE oracle. */
-  private val a8cMergeUnbounded: Q = (spark, dir) => {
-    val raw = a8Feed(spark, dir)
-    graft.operators.DistributedCC.mergeUnbounded(raw)
-      .withColumn("chip_names", array_join(col("chip_names"), ","))
-      .orderBy("key", "cluster_id")
-  }
-
   // ------------------------------------------------------------------ A10: cluster chip flatten + semi-join
   /** Replays `make-complete-dataset.py:45-47` /
     * `tile-level-annotation.py:113`: flatten the merged clusters' chip-name
@@ -134,7 +116,7 @@ object CustomOpQueries {
     * operator end-to-end (explode over MergeBoxesExec's chip_names). */
   private val a10ClusterChips: Q = (spark, dir) => {
     val raw = a8Feed(spark, dir)
-    val selected = graft.plans.MergeBoxesApi.mergeBoxes(raw)
+    val selected = MergeBoxesApi.mergeBoxes(raw)
       .filter(col("merged"))
       .select(explode(col("chip_names")).as("image_name"))
       .distinct()
@@ -224,8 +206,8 @@ object CustomOpQueries {
   // ------------------------------------------------------------------ registry
   val queries: Map[String, Q] = Map(
     "a8_merge_clusters" -> a8MergeClusters,
-    "a8b_merge_native" -> a8bMergeNative,
-    "a8c_merge_unbounded" -> a8cMergeUnbounded,
+    "a8b_merge_native" -> a8MergeClusters,
+    "a8c_merge_unbounded" -> a8MergeClusters,
     "a10_cluster_chips" -> a10ClusterChips,
     "geo_utm_roundtrip" -> geoUtmRoundtrip,
     "s7_voc_roundtrip" -> s7VocRoundtrip

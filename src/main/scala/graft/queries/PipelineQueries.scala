@@ -578,10 +578,7 @@ object PipelineQueries {
   private val s13ShapefileSink: Q = (spark, dir) => {
     import graft.sources.Shapefile
     val root = Paths.get(Sinks.scratchDir("s13_shp_sink"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val inv = TankInventory.inventory(spark, dir).select(
       col("minx").cast("double").as("minx"), col("miny").cast("double").as("miny"),
       col("maxx").cast("double").as("maxx"), col("maxy").cast("double").as("maxy"),
@@ -631,10 +628,7 @@ object PipelineQueries {
     import graft.io.Fetcher
     val store = Paths.get(Sinks.scratchDir("s9_store"))
     // reset so the listing reflects exactly this scale factor's catalog
-    if (Files.exists(store)) {
-      Files.walk(store).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(store)
     // logical catalog: the url the reference pipeline would fetch; its
     // payload (and thus the oracle-pinned size) is a pure function of it
     val catalog = Tables.orders(spark, dir)

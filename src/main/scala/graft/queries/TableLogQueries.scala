@@ -71,10 +71,7 @@ object TableLogQueries {
   /** Builds the two-commit table fresh and returns its path. */
   private def buildTable(spark: SparkSession, dir: String): String = {
     val root = Paths.get(Sinks.scratchDir("commitlog_tracker"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     CommitLog.append(batch1(spark, dir), table)
     CommitLog.upsert(spark, batch2(spark, dir), table, Seq("id"))
@@ -137,10 +134,7 @@ object TableLogQueries {
     * crawl deliveries overlap. */
   private val tl3DedupIngest: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_ingest"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     val d = Tables.documents(spark, dir)
     val batch1 = d.select(col("doc_id").cast("long").as("doc_id"),
@@ -183,10 +177,7 @@ object TableLogQueries {
     * compact at the same target must be a no-op (no empty commit). */
   private val tl4Compaction: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_compact"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     val orders = Tables.orders(spark, dir)
     (0 until 4).foreach { b =>
@@ -232,10 +223,7 @@ object TableLogQueries {
     * on positive evidence. */
   private val tl5ZonemapSkip: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_zonemap"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey").cast("long").as("id"),
@@ -269,10 +257,7 @@ object TableLogQueries {
     * of all six batches even though most of the log is gone. */
   private val tl6LogCheckpoint: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_ckpt"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     val orders = Tables.orders(spark, dir)
     def batch(b: Int): DataFrame = orders.filter(col("o_orderkey") % 6 === b)
@@ -320,10 +305,7 @@ object TableLogQueries {
 
   private val tl7ZorderBox: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_zbox"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     val pts = Tables.orders(spark, dir).select(
         col("o_orderkey").as("id"),
@@ -364,10 +346,7 @@ object TableLogQueries {
     * stats computed declaratively from the batch definitions. */
   private val tl8SqlWrite: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_sqlwrite"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     batch1(spark, dir).write.format("graftlog").mode("append").save(table)     // v0 creates
     batch2(spark, dir).write.format("graftlog").mode("append").save(table)     // v1
@@ -410,10 +389,7 @@ object TableLogQueries {
     * through the real SQL surface. */
   private val tl9SqlSkipping: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_sqlskip"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey").cast("long").as("id"),
@@ -457,10 +433,7 @@ object TableLogQueries {
     * end to end on the read side. */
   private val tl10StreamRead: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_streamread"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.resolve("table").toString
     // two append-only batches with DISJOINT keys (an append stream carries
     // no upsert semantics; tl3/tl8 cover those surfaces)
@@ -508,10 +481,7 @@ object TableLogQueries {
     * definitions, so a drifting metadata sum hash-fails. */
   private val tl11MetadataCount: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_metacount"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     CommitLog.append(batch1(spark, dir), table)                      // v0
     CommitLog.upsert(spark, batch2(spark, dir), table, Seq("id"))    // v1: rewrite
@@ -552,10 +522,7 @@ object TableLogQueries {
     * the join result against a plain-SQL oracle. */
   private val tl12StatsBroadcast: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_statsdim"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     Tables.nation(spark, dir)
       .select(col("n_nationkey").cast("long").as("nationkey"),
@@ -615,10 +582,7 @@ object TableLogQueries {
     * "how big is this table" queries. */
   private val tl13AggPushdown: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_aggpush"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val table = root.toString
     // clustered on id with the column NAMED, so min/max have the full
     // zone coverage the metadata answer requires
@@ -650,10 +614,7 @@ object TableLogQueries {
     * against the upstream batch definitions. */
   private val tl14StreamPipeline: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_streampipe"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val src = root.resolve("src").toString
     val dst = root.resolve("dst").toString
     val ckpt = root.resolve("ckpt").toString
@@ -1352,10 +1313,7 @@ object TableLogQueries {
     spark.sql("DROP TABLE IF EXISTS graft.dml.t29")
     spark.sql("CREATE TABLE graft.dml.t29 (id BIGINT, status STRING, price DOUBLE, batch INT)")
     val src = Paths.get(Sinks.scratchDir("commitlog_ingest_src"))
-    if (Files.exists(src)) {
-      Files.walk(src).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(src)
     batch1(spark, dir).write.mode("overwrite").parquet(s"$src/b1")
     Tables.orders(spark, dir)
       .filter(col("o_orderkey") % 5 === 0)
@@ -1403,10 +1361,7 @@ object TableLogQueries {
     * the Delta stats-per-add design in the log's compact vocabulary. */
   private val tl30AppendSkipping: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_mstats"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val t = root.toString
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey").cast("long").as("id"),
@@ -1456,10 +1411,7 @@ object TableLogQueries {
     * timestamp-range aggregate against the oracle. */
   private val tl31TypedSkipping: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_tstats"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val t = root.toString
     val orders = Tables.orders(spark, dir).select(
       col("o_orderkey").cast("long").as("id"),
@@ -1542,10 +1494,7 @@ object TableLogQueries {
     val t = dmlTable(spark, dir, "t33", "SELECT * FROM t33_b1")
     val tdir = Paths.get(Sinks.scratchDir("commitlog_catalog_wh"), "dml", "t33").toString
     val root = Paths.get(Sinks.scratchDir("commitlog_cdfdrop"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val dst = root.resolve("dst").toString
     val ckpt = root.resolve("ckpt").toString
     // ONE live query: its schema pins at start (pre-drop, `status`
@@ -1618,10 +1567,7 @@ object TableLogQueries {
     * ingested batch is still a NO-OP (no false negatives end-to-end). */
   private val tl32BloomIngest: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_bloom"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val t = root.toString
     CommitLog.declareBloom(spark, t, "key")
     val keyed = Tables.orders(spark, dir).select(
@@ -1704,10 +1650,7 @@ object TableLogQueries {
     * stream-the-CDF-into-a-derived-table pattern, gate-verified. */
   private val tl25CdfStream: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_cdfstream"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val src = root.resolve("src").toString
     val dst = root.resolve("dst").toString
     val ckpt = root.resolve("ckpt").toString
@@ -1780,10 +1723,7 @@ object TableLogQueries {
     val t = dmlTable(spark, dir, "t25b", "SELECT * FROM t25b_b1")
     val tdir = Paths.get(Sinks.scratchDir("commitlog_catalog_wh"), "dml", "t25b").toString
     val root = Paths.get(Sinks.scratchDir("commitlog_cdfident"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val dst = root.resolve("dst").toString
     val ckpt = root.resolve("ckpt").toString
     val q = spark.readStream.table(s"$t.changes")
@@ -1846,10 +1786,7 @@ object TableLogQueries {
     * the DML moved, while the recompute form costs the whole table. */
   private val tl26CdfMaterialize: Q = (spark, dir) => {
     val root = Paths.get(Sinks.scratchDir("commitlog_ivm"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(root)
     val src = root.resolve("src").toString
     val agg = root.resolve("agg").toString
     val ckpt = root.resolve("ckpt").toString
@@ -2244,10 +2181,7 @@ object TableLogQueries {
     val tdir = Paths.get(Sinks.scratchDir("commitlog_catalog_wh"), "dml", "t40").toString
     spark.sql("CALL graft.system.enable_dv(`table` => 'dml.t40')")
     val src = Paths.get(Sinks.scratchDir("commitlog_merge_src"))
-    if (Files.exists(src)) {
-      Files.walk(src).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(src)
     batch2(spark, dir).write.mode("overwrite").parquet(s"$src/b2")
     val before = CommitLog.snapshotFiles(tdir)
     val vPre = CommitLog.currentVersion(tdir)
@@ -2531,10 +2465,7 @@ object TableLogQueries {
     val tdir = Paths.get(Sinks.scratchDir("commitlog_catalog_wh"), "dml", "t44").toString
     spark.sql("CALL graft.system.enable_dv(`table` => 'dml.t44')")
     val ckpt = Paths.get(Sinks.scratchDir("commitlog_t44_ckpt"))
-    if (Files.exists(ckpt)) {
-      Files.walk(ckpt).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Sinks.deleteTree(ckpt)
     val delivered =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String, Long)]()
     def drain(): Seq[(Long, String, String, Long)] = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{Sinks, Tables}
 import graft.multimodal.BinaryMedia
 import graft.operators.VectorSearch
 
@@ -1335,13 +1335,10 @@ object VectorQueries {
     * commit-log's atomicity means a rebuild lands as one version flip,
     * never a half-updated index. */
   private val v15IndexPersist: Q = (spark, dir) => {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     val ix = buildIvfPq(spark, dir, trainedCentroids = true)
-    val root = Paths.get(graft.io.Sinks.scratchDir("vector_index"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    val root = Paths.get(Sinks.scratchDir("vector_index"))
+    Sinks.deleteTree(root)
     def persist(df: DataFrame, name: String): DataFrame = {
       val t = root.resolve(name).toString
       graft.io.CommitLog.append(df, t)
@@ -1382,13 +1379,10 @@ object VectorQueries {
     * trade — production re-trains offline and swaps via one commit, the
     * v15 lifecycle. */
   private val v16IvfIncremental: Q = (spark, dir) => {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     val ix = buildIvfPq(spark, dir)
-    val root = Paths.get(graft.io.Sinks.scratchDir("vector_index_incr"))
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    val root = Paths.get(Sinks.scratchDir("vector_index_incr"))
+    Sinks.deleteTree(root)
     def persist(df: DataFrame, name: String): String = {
       val t = root.resolve(name).toString
       graft.io.CommitLog.append(df, t)

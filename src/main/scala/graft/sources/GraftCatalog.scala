@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.io.CommitLog
+import graft.io.{CommitLog, Sinks}
 
 /** A Spark `TableCatalog` over a warehouse directory of commit-log
   * tables, completing the SQL surface the path-based `USING graftlog`
@@ -431,8 +431,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = dirOf(ident)
     if (!isTableDir(dir)) false
     else {
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
+      Sinks.deleteTree(dir)
       true
     }
   }
@@ -521,8 +520,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (hasChildren && !cascade)
         throw new IllegalStateException(
           s"namespace ${namespace.mkString(".")} is not empty (use CASCADE)")
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
+      Sinks.deleteTree(dir)
       true
     }
   }

@@ -88,9 +88,12 @@ class GraftLogDataSource extends TableProvider with DataSourceRegister
 
   // ------------------------------------------------------------------ streaming read
   // `spark.readStream.format("graftlog")` reaches these through Spark's V1
-  // streaming-source fallback (the V2 table above advertises no
-  // MICRO_BATCH_READ, so `DataStreamReader` routes to the V1 provider —
-  // the same dual-surface layout the built-in file sources use).
+  // streaming-source fallback whenever the V2 table withholds
+  // MICRO_BATCH_READ (see `capabilities()`): a table with live deletion
+  // vectors, the path form with `readChangeFeed`, and a pinned or missing
+  // snapshot (which `resolveForStream` refuses by name). A live table with
+  // no deletion vectors streams through [[GraftLogMicroBatchStream]], and
+  // the `.changes` identifier through [[GraftLogCdfMicroBatchStream]].
 
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
                             providerName: String,
@@ -111,13 +114,7 @@ class GraftLogDataSource extends TableProvider with DataSourceRegister
       ignoreChanges = opts.get("ignorechanges").exists(_.toBoolean),
       startingVersion = GraftLogDataSource.streamStartVersion(t.path, opts)
         .getOrElse(0L),
-      maxVersionsPerTrigger = opts.get("maxversionspertrigger").map { v =>
-        try v.trim.toLong
-        catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
-            s"graftlog: maxVersionsPerTrigger must be a positive count, got '$v'", e)
-        }
-      })
+      maxVersionsPerTrigger = GraftLogDataSource.maxVersionsPerTrigger(opts))
   }
 
   // ------------------------------------------------------------------ streaming write
@@ -188,20 +185,12 @@ private[graft] final class GraftLogNativeScan(
         "(spark.readStream.table(\"<cat>.<ns>.<t>.changes\")) or the path " +
         "form (spark.readStream.format(\"graftlog\")" +
         ".option(\"readChangeFeed\", true).load(dir))")
-    def longOpt(key: String, what: String): Option[Long] =
-      streamOpts.get(key).map { v =>
-        try v.trim.toLong
-        catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
-            s"graftlog: $what must be a number, got '$v'", e)
-        }
-      }
     new GraftLogMicroBatchStream(
       SparkSession.active, path, tableSchema, req, filters,
       ignoreChanges = streamOpts.get("ignorechanges").exists(_.toBoolean),
       startingVersion = GraftLogDataSource.streamStartVersion(path, streamOpts)
         .getOrElse(0L),
-      maxVersionsPerTrigger = longOpt("maxversionspertrigger", "maxVersionsPerTrigger"))
+      maxVersionsPerTrigger = GraftLogDataSource.maxVersionsPerTrigger(streamOpts))
   }
 
   /** Spark's own V2 parquet scan over the pruned file list; built lazily
@@ -478,8 +467,7 @@ object GraftLogDataSource {
                 schema0, checkpointLocation,
                 startingVersion = GraftLogDataSource
                   .streamStartVersion(path, opts).getOrElse(0L),
-                maxVersionsPerTrigger =
-                  longOpt("maxversionspertrigger", "maxVersionsPerTrigger"))
+                maxVersionsPerTrigger = GraftLogDataSource.maxVersionsPerTrigger(opts))
             }
           }
         }
@@ -1247,6 +1235,18 @@ object GraftLogDataSource {
     }.orElse(opts.get("startingtimestamp").map(ts =>
       CommitLog.versionFrom(path, parseTs(ts))))
   }
+
+  /** The `maxVersionsPerTrigger` reader option, shared by every stream
+    * surface: at most this many commits per micro-batch (the stream's
+    * [[VersionPacer]] refuses a count below 1). Keys arrive lowercased. */
+  private[sources] def maxVersionsPerTrigger(opts: Map[String, String]): Option[Long] =
+    opts.get("maxversionspertrigger").map { v =>
+      try v.trim.toLong
+      catch {
+        case e: NumberFormatException => throw new IllegalArgumentException(
+          s"graftlog: maxVersionsPerTrigger must be a positive count, got '$v'", e)
+      }
+    }
 
   /** Epoch millis, an ISO-8601 instant, or an ISO local date-time/date
     * (interpreted as UTC, the engine's session zone). */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.CommitLog
+import graft.io.{CommitLog, Sinks}
 
 /** A commit-log version as a streaming offset. Serialized as the bare
   * version number, so a checkpoint written by one engine build replays in
@@ -24,6 +24,69 @@ object GraftLogOffset {
   def versionOf(o: Offset): Long = o match {
     case GraftLogOffset(v) => v
     case other => other.json.trim.toLong
+  }
+}
+
+/** Version pacing shared by the log's three streaming readers (the V1
+  * [[GraftLogStreamSource]], the V2 [[GraftLogMicroBatchStream]] and the V2
+  * change feed [[GraftLogCdfMicroBatchStream]]). `offered` is the highest
+  * version offered as a batch end. It is driver-local: after a restart it
+  * re-seeds from the offsets the engine hands back ([[seen]]), since the
+  * engine replays the in-flight batch before asking for new offsets.
+  * `Trigger.AvailableNow` pins the log head once at query start
+  * ([[pinHead]]); the engine then keeps triggering until the offset stops
+  * advancing, so a drain still honors `maxVersionsPerTrigger` batch by
+  * batch. */
+private[sources] final class VersionPacer(path: String, val startingVersion: Long,
+                                          maxVersionsPerTrigger: Option[Long]) {
+  require(startingVersion >= 0,
+    s"graftlog: startingVersion must be >= 0, got $startingVersion")
+  maxVersionsPerTrigger.foreach(m => require(m > 0,
+    s"graftlog: maxVersionsPerTrigger must be positive, got $m"))
+
+  private var offered: Long = startingVersion - 1
+  private var availableNowCap: Option[Long] = None
+
+  def pinHead(): Unit = availableNowCap = Some(CommitLog.currentVersion(path))
+
+  /** Re-seeds the cursor from a version the engine already holds. */
+  def seen(version: Long): Unit = offered = math.max(offered, version)
+
+  /** Moves the cursor to the next batch end: at most
+    * `maxVersionsPerTrigger` past it, never past the (pinned) head. Returns
+    * the cursor; an unchanged value means an empty trigger. */
+  def advance(): Long = {
+    val current = CommitLog.currentVersion(path)
+    val head = availableNowCap.fold(current)(math.min(_, current))
+    offered = math.max(offered,
+      maxVersionsPerTrigger.fold(head)(m => math.min(head, offered + m)))
+    offered
+  }
+}
+
+/** The offset protocol of the two V2 micro-batch streams over a
+  * [[VersionPacer]]: the read pacing is the stream's own
+  * `maxVersionsPerTrigger` option, so the engine-side limit stays
+  * `allAvailable` and `latestOffset` always returns the cursor. */
+private[sources] trait PacedMicroBatchStream
+    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset => COffset, ReadLimit}
+
+  protected def pacer: VersionPacer
+
+  override def initialOffset(): COffset = GraftLogOffset(pacer.startingVersion - 1)
+  override def deserializeOffset(json: String): COffset = GraftLogOffset(json.trim.toLong)
+  override def stop(): Unit = ()
+  override def prepareForTriggerAvailableNow(): Unit = pacer.pinHead()
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+
+  override def latestOffset(): COffset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) is the admission-controlled form")
+
+  override def latestOffset(start: COffset, limit: ReadLimit): COffset = {
+    if (start != null) pacer.seen(start.json.trim.toLong)
+    GraftLogOffset(pacer.advance())
   }
 }
 
@@ -80,39 +143,19 @@ final class GraftLogStreamSource(
     changeFeed: Boolean = false) extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  require(startingVersion >= 0,
-    s"graftlog: startingVersion must be >= 0, got $startingVersion")
-  maxVersionsPerTrigger.foreach(m => require(m > 0,
-    s"graftlog: maxVersionsPerTrigger must be positive, got $m"))
+  private val pacer = new VersionPacer(path, startingVersion, maxVersionsPerTrigger)
 
   override def schema: StructType = schema0
 
-  // Rate-limit cursor: the highest version this source has OFFERED as a
-  // batch end. Driver-local; after a restart it re-seeds from the first
-  // getBatch's start offset (the engine always replays the in-flight
-  // batch before asking for new offsets).
-  private var offered: Long = startingVersion - 1
+  // without SupportsTriggerAvailableNow a V1 source drains AvailableNow in
+  // one unlimited batch
+  override def prepareForTriggerAvailableNow(): Unit = pacer.pinHead()
 
-  // Trigger.AvailableNow contract: pin the log head ONCE at query start;
-  // the engine then keeps triggering until getOffset stops advancing, so
-  // a drain still honors maxVersionsPerTrigger batch by batch (without
-  // this trait a V1 source falls back to one giant unlimited batch).
-  private var availableNowCap: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(CommitLog.currentVersion(path))
-
+  /** The next batch end; with nothing new the last offered version again
+    * (an empty trigger), or None before the first deliverable commit. */
   override def getOffset: Option[Offset] = {
-    val head = availableNowCap
-      .fold(CommitLog.currentVersion(path))(math.min(_, CommitLog.currentVersion(path)))
-    val target = maxVersionsPerTrigger match {
-      case Some(m) => math.min(head, offered + m)
-      case None    => head
-    }
-    if (target > offered) { offered = target; Some(GraftLogOffset(offered)) }
-    // nothing new: repeat the last offered version (a stable offset means
-    // an empty trigger), or None before the first deliverable commit
-    else if (offered >= startingVersion) Some(GraftLogOffset(offered))
-    else None
+    val v = pacer.advance()
+    if (v >= startingVersion) Some(GraftLogOffset(v)) else None
   }
 
   // SupportsAdmissionControl (via SupportsTriggerAvailableNow): the engine
@@ -130,14 +173,14 @@ final class GraftLogStreamSource(
     // re-seed the pacing cursor from the engine's committed offset (this
     // is what makes restart-with-rate-limit resume from the checkpoint,
     // not from startingVersion)
-    if (start != null) offered = math.max(offered, start.json.trim.toLong)
+    if (start != null) pacer.seen(start.json.trim.toLong)
     getOffset.orNull
   }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val endV = GraftLogOffset.versionOf(end)
     val startV = start.map(GraftLogOffset.versionOf).getOrElse(startingVersion - 1L)
-    offered = math.max(offered, endV) // restart re-seed (start==checkpointed offset)
+    pacer.seen(endV) // restart re-seed (start==checkpointed offset)
     if (changeFeed) {
       // change-row mode: the batch IS the commit window's CDF. changes()
       // skips layout-only commits and expresses rewrites as delete+insert,
@@ -325,50 +368,19 @@ final class GraftLogMicroBatchStream(
     pushed: Array[org.apache.spark.sql.sources.Filter],
     ignoreChanges: Boolean,
     startingVersion: Long,
-    maxVersionsPerTrigger: Option[Long])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+    maxVersionsPerTrigger: Option[Long]) extends PacedMicroBatchStream {
 
-  import org.apache.spark.sql.connector.read.streaming.{Offset => COffset, ReadLimit}
+  import org.apache.spark.sql.connector.read.streaming.{Offset => COffset}
 
-  require(startingVersion >= 0,
-    s"graftlog: startingVersion must be >= 0, got $startingVersion")
-  maxVersionsPerTrigger.foreach(m => require(m > 0,
-    s"graftlog: maxVersionsPerTrigger must be positive, got $m"))
+  protected val pacer = new VersionPacer(path, startingVersion, maxVersionsPerTrigger)
 
-  // rate-limit cursor + AvailableNow head pin — same protocol as the V1
-  // source (re-seeded from the engine's start offset on restart)
-  private var offered: Long = startingVersion - 1
-  private var availableNowCap: Option[Long] = None
-
-  override def initialOffset(): COffset = GraftLogOffset(startingVersion - 1)
-  override def deserializeOffset(json: String): COffset =
-    GraftLogOffset(json.trim.toLong)
   override def commit(end: COffset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(CommitLog.currentVersion(path))
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): COffset = throw new UnsupportedOperationException(
-    "latestOffset(Offset, ReadLimit) is the admission-controlled form")
-
-  override def latestOffset(start: COffset, limit: ReadLimit): COffset = {
-    if (start != null) offered = math.max(offered, start.json.trim.toLong)
-    val head = availableNowCap
-      .fold(CommitLog.currentVersion(path))(math.min(_, CommitLog.currentVersion(path)))
-    val target = maxVersionsPerTrigger.fold(head)(m => math.min(head, offered + m))
-    if (target > offered) offered = target
-    GraftLogOffset(offered)
-  }
 
   override def planInputPartitions(start: COffset, end: COffset)
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val startV = start.json.trim.toLong
     val endV = end.json.trim.toLong
-    offered = math.max(offered, endV)
+    pacer.seen(endV)
     GraftLogStreamSource
       .initialSnapshotFiles(path, startV, startingVersion, endV)
       .getOrElse(GraftLogStreamSource.deltaFiles(path, startV, endV, ignoreChanges)) match {
@@ -432,16 +444,11 @@ final class GraftLogCdfMicroBatchStream(
     pinned: StructType,
     checkpointLocation: String,
     startingVersion: Long,
-    maxVersionsPerTrigger: Option[Long])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+    maxVersionsPerTrigger: Option[Long]) extends PacedMicroBatchStream {
 
-  import org.apache.spark.sql.connector.read.streaming.{Offset => COffset, ReadLimit}
+  import org.apache.spark.sql.connector.read.streaming.{Offset => COffset}
 
-  require(startingVersion >= 0,
-    s"graftlog: startingVersion must be >= 0, got $startingVersion")
-  maxVersionsPerTrigger.foreach(m => require(m > 0,
-    s"graftlog: maxVersionsPerTrigger must be positive, got $m"))
+  protected val pacer = new VersionPacer(path, startingVersion, maxVersionsPerTrigger)
 
   // parquet materializations are written/read under fully-nullable field
   // flags (FileFormatWriter relaxes nullability on write anyway; claiming
@@ -456,16 +463,9 @@ final class GraftLogCdfMicroBatchStream(
       java.nio.file.Paths.get(new java.net.URI(checkpointLocation))
     else java.nio.file.Paths.get(checkpointLocation)
 
-  private var offered: Long = startingVersion - 1
-  private var availableNowCap: Option[Long] = None
-
-  override def initialOffset(): COffset = GraftLogOffset(startingVersion - 1)
-  override def deserializeOffset(json: String): COffset =
-    GraftLogOffset(json.trim.toLong)
-
   /** NIO directory streams must be CLOSED — this path runs every trigger
     * of a deliberately months-running stream, and an unclosed
-    * `Files.list`/`Files.walk` leaks a directory handle until GC. */
+    * `Files.list` leaks a directory handle until GC. */
   private def useStream[A](s: java.util.stream.Stream[java.nio.file.Path])
                           (body: java.util.stream.Stream[java.nio.file.Path] => A): A =
     try body(s) finally s.close()
@@ -484,11 +484,7 @@ final class GraftLogCdfMicroBatchStream(
         val parts = d.getFileName.toString.split('_')
         val endV = parts.lift(1).flatMap(_.toLongOption)
           .orElse(parts.lastOption.flatMap(_.toLongOption))
-        if (endV.exists(_ < threshold)) {
-          useStream(java.nio.file.Files.walk(d))(
-            _.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        if (endV.exists(_ < threshold)) Sinks.deleteTree(d)
       }
     }
   }
@@ -498,30 +494,11 @@ final class GraftLogCdfMicroBatchStream(
   override def commit(end: COffset): Unit =
     reclaimBelow(end.json.trim.toLong)
 
-  override def stop(): Unit = ()
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(CommitLog.currentVersion(path))
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): COffset = throw new UnsupportedOperationException(
-    "latestOffset(Offset, ReadLimit) is the admission-controlled form")
-
-  override def latestOffset(start: COffset, limit: ReadLimit): COffset = {
-    if (start != null) offered = math.max(offered, start.json.trim.toLong)
-    val head = availableNowCap
-      .fold(CommitLog.currentVersion(path))(math.min(_, CommitLog.currentVersion(path)))
-    val target = maxVersionsPerTrigger.fold(head)(m => math.min(head, offered + m))
-    if (target > offered) offered = target
-    GraftLogOffset(offered)
-  }
-
   override def planInputPartitions(start: COffset, end: COffset)
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
     val startV = start.json.trim.toLong
     val endV = end.json.trim.toLong
-    offered = math.max(offered, endV)
+    pacer.seen(endV)
     if (endV <= startV) return Array.empty
     // a batch is only ever planned FROM the last committed offset, so
     // every materialization ending at or below startV is committed —

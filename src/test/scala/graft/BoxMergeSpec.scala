@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.BoxMerge
 import graft.operators.BoxMerge.{Box, Cluster}
+import graft.plans.MergeBoxesApi
 
 /** Properties the reference's greedy order-dependent merge lacks
   * (SURVEY.md §2.11.2, §5.3): permutation invariance, idempotence,
@@ -218,13 +219,14 @@ class BoxMergeSpec extends AnyFunSuite {
     val boxes = (0 until 50).flatMap { t =>
       randomBoxes(rng, 10).map(_.copy(key = s"t$t"))
     }
-    val dist = BoxMerge.merge(boxes.toDS()).collect().toSeq
+    val merged = MergeBoxesApi.mergeBoxes(boxes.toDF())
+    val dist = merged.as[Cluster].collect().toSeq
     val local = boxes.groupBy(_.key).toSeq.flatMap { case (_, bs) =>
       BoxMerge.clusterGroup(bs.sortBy(b => (b.x1, b.y1, b.x2, b.y2, b.label, b.chip)), 5)
     }
     assert(canon(dist) == canon(local))
     // plan shape: exactly one exchange feeds the merge
-    val plan = BoxMerge.merge(boxes.toDS()).queryExecution.executedPlan.toString
-    assert(plan.contains("Exchange"))
+    val plan = merged.queryExecution.executedPlan.toString
+    assert(plan.split("Exchange").length - 1 == 1, plan)
   }
 }

@@ -3,20 +3,21 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BoxMerge, TextPipeline, VectorSearch}
+import graft.plans.MergeBoxesApi
 
 /** Degenerate-input behaviour for the custom operators. */
 class EdgeCaseSpec extends SparkSpec {
 
   test("BoxMerge on an empty dataset yields no clusters") {
     import spark.implicits._
-    val empty = spark.emptyDataset[BoxMerge.Box]
-    assert(BoxMerge.merge(empty).count() == 0)
+    val empty = spark.emptyDataset[BoxMerge.Box].toDF()
+    assert(MergeBoxesApi.mergeBoxes(empty).count() == 0)
   }
 
   test("BoxMerge single box is its own unmerged cluster") {
     import spark.implicits._
-    val one = Seq(BoxMerge.Box("t", 1, 2, 3, 4, "water_tower", "c0")).toDS()
-    val c = BoxMerge.merge(one).collect().head
+    val one = Seq(BoxMerge.Box("t", 1, 2, 3, 4, "water_tower", "c0")).toDF()
+    val c = MergeBoxesApi.mergeBoxes(one).as[BoxMerge.Cluster].collect().head
     assert(!c.merged && c.n_boxes == 1 && c.cluster_id == 1)
     assert((c.minx, c.miny, c.maxx, c.maxy) == (1, 2, 3, 4))
   }

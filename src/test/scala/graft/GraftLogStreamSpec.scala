@@ -203,6 +203,72 @@ class GraftLogStreamSpec extends SparkSpec {
     assert(batches.forall(_.numInputRows == 1L))
   }
 
+  /** Drains `stream` through foreachBatch under Trigger.AvailableNow;
+    * returns the ids of each non-empty batch in batch order, and the
+    * description of the reader that served them. */
+  private def pacedDrain(stream: org.apache.spark.sql.DataFrame,
+                         ckpt: String): (Seq[Seq[Long]], String) = {
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
+    val q = stream.writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        val ids = df.collect().map(_.getLong(0)).toSeq.sorted
+        if (ids.nonEmpty) batches.add((id, ids))
+        ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000L), "AvailableNow drain timed out")
+    (batches.iterator().asScala.toSeq.sortBy(_._1).map(_._2),
+      q.recentProgress.flatMap(_.sources.map(_.description)).mkString(" "))
+  }
+
+  test("maxVersionsPerTrigger paces the V1 source over live deletion vectors") {
+    val root = freshDir("rate_v1")
+    val t = root.resolve("t").toString
+    CommitLog.append(Seq((0L, "a"), (1L, "b")).toDF("id", "v"), t)            // v0
+    CommitLog.enableDv(t)                                                     // v1
+    assert(CommitLog.dvDelete(spark, t,
+      org.apache.spark.sql.functions.col("id") === 1L).nonEmpty)              // v2
+    (3 to 5).foreach(i => CommitLog.append(Seq((i.toLong, s"v$i")).toDF("id", "v"), t))
+    val (batches, reader) = pacedDrain(
+      spark.readStream.format("graftlog")
+        .option("startingVersion", 3).option("maxVersionsPerTrigger", 1).load(t),
+      root.resolve("ckpt").toString)
+    assert(reader.contains("GraftLogStreamSource"), reader)
+    assert(batches == Seq(Seq(3L), Seq(4L), Seq(5L)), s"one commit per batch, got $batches")
+  }
+
+  test("maxVersionsPerTrigger paces the V1 source in change-feed mode") {
+    val root = freshDir("rate_v1cdf")
+    val t = root.resolve("t").toString
+    (0 until 3).foreach(i => CommitLog.append(Seq((i.toLong, s"v$i")).toDF("id", "v"), t))
+    val (batches, reader) = pacedDrain(
+      spark.readStream.format("graftlog")
+        .option("readChangeFeed", true).option("maxVersionsPerTrigger", 1).load(t),
+      root.resolve("ckpt").toString)
+    assert(reader.contains("GraftLogStreamSource"), reader)
+    assert(batches == Seq(Seq(0L), Seq(1L), Seq(2L)), s"one commit per batch, got $batches")
+  }
+
+  test("maxVersionsPerTrigger paces the .changes identifier stream") {
+    val root = freshDir("rate_cdfid")
+    spark.conf.set("spark.sql.catalog.ratecdf", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.ratecdf.warehouse", root.resolve("wh").toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ratecdf.s")
+    spark.sql("DROP TABLE IF EXISTS ratecdf.s.t")
+    spark.sql("CREATE TABLE ratecdf.s.t AS SELECT 0L AS id, 'v0' AS v")
+    val dir = root.resolve("wh").resolve("s").resolve("t").toString
+    val from = CommitLog.currentVersion(dir) + 1
+    (1 to 3).foreach(i => spark.sql(s"INSERT INTO ratecdf.s.t SELECT ${i}L, 'v$i'"))
+    val (batches, reader) = pacedDrain(
+      spark.readStream.option("startingVersion", from).option("maxVersionsPerTrigger", 1)
+        .table("ratecdf.s.t.changes"),
+      root.resolve("ckpt").toString)
+    assert(reader.contains("GraftLogCdfMicroBatchStream"), reader)
+    assert(batches == Seq(Seq(1L), Seq(2L), Seq(3L)), s"one commit per batch, got $batches")
+  }
+
   test("checkpointed restart resumes at the committed offset, exactly once") {
     val root = freshDir("restart")
     val t = root.resolve("t").toString

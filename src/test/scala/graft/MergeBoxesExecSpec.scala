@@ -3,9 +3,26 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.BoxMerge
+import graft.operators.BoxMerge.{Box, Cluster}
 import graft.plans.MergeBoxesApi
 
 class MergeBoxesExecSpec extends SparkSpec {
+
+  /** Driver-side reference: collect the boxes, group by key, sort each
+    * group canonically and run the clustering kernel. */
+  private def reference(df: org.apache.spark.sql.DataFrame): Seq[Cluster] = {
+    import spark.implicits._
+    df.select("key", "x1", "y1", "x2", "y2", "label", "chip").as[Box].collect().toSeq
+      .groupBy(_.key).toSeq.flatMap { case (_, bs) =>
+        BoxMerge.clusterGroup(bs.sortBy(b => (b.x1, b.y1, b.x2, b.y2, b.label, b.chip)), 5)
+      }
+      .sortBy(c => (c.key, c.cluster_id))
+  }
+
+  private def native(df: org.apache.spark.sql.DataFrame): Seq[Cluster] = {
+    import spark.implicits._
+    MergeBoxesApi.mergeBoxes(df).as[Cluster].orderBy("key", "cluster_id").collect().toSeq
+  }
 
   private def feed = {
     import spark.implicits._
@@ -18,13 +35,8 @@ class MergeBoxesExecSpec extends SparkSpec {
   }
 
   test("native exec matches the library operator exactly") {
-    import spark.implicits._
     val df = feed
-    val native = MergeBoxesApi.mergeBoxes(df)
-      .orderBy("key", "cluster_id").collect().toSeq
-    val library = BoxMerge.mergeFrame(df)
-      .orderBy("key", "cluster_id").collect().toSeq
-    assert(native == library)
+    assert(native(df) == reference(df))
   }
 
   test("planner inserts exactly one exchange plus the required sort") {
@@ -42,7 +54,7 @@ class MergeBoxesExecSpec extends SparkSpec {
   }
 
   test("key filters push through the merge to the source; cluster filters stay above") {
-    import graft.operators.BoxMerge
+    import spark.implicits._
     val merged = MergeBoxesApi.mergeBoxes(feed)
     val keyFiltered = merged.filter(col("key") === "t3")
     val optimized = keyFiltered.queryExecution.optimizedPlan.toString
@@ -52,9 +64,8 @@ class MergeBoxesExecSpec extends SparkSpec {
     assert(optimized.substring(idx).contains("Filter"),
       s"key filter not pushed below the merge:\n$optimized")
     // results agree with filtering the input instead
-    val viaInput = BoxMerge.mergeFrame(feed.filter(col("key") === "t3"))
-      .orderBy("cluster_id").collect().toSeq
-    assert(keyFiltered.orderBy("cluster_id").collect().toSeq == viaInput)
+    val viaInput = reference(feed.filter(col("key") === "t3"))
+    assert(keyFiltered.as[Cluster].orderBy("cluster_id").collect().toSeq == viaInput)
     // a cluster-derived filter must NOT be pushed
     val clusterFiltered = MergeBoxesApi.mergeBoxes(feed).filter(col("merged"))
     val opt2 = clusterFiltered.queryExecution.optimizedPlan.toString
@@ -71,9 +82,26 @@ class MergeBoxesExecSpec extends SparkSpec {
       ("hot", x1, y1, x1 + 10 + rng.nextInt(40), y1 + 10 + rng.nextInt(40), "water_tower",
         s"c${rng.nextInt(4)}")
     }.toDF("key", "x1", "y1", "x2", "y2", "label", "chip")
-    val native = MergeBoxesApi.mergeBoxes(dense).orderBy("cluster_id").collect().toSeq
-    val library = BoxMerge.mergeFrame(dense).orderBy("cluster_id").collect().toSeq
-    assert(native == library)
+    assert(native(dense) == reference(dense))
+  }
+
+  test("a null in any input column fails the merge, naming the column") {
+    import spark.implicits._
+    val box = Seq(("t", 0, 0, 30, 30, "water_tower", "c0"), ("t", 10, 0, 60, 30, "water_tower", "c1"))
+      .toDF("key", "x1", "y1", "x2", "y2", "label", "chip")
+    val outcomes = box.columns.toSeq.map { c =>
+      val withNull = box.withColumn(c, when(col("chip") === "c1", lit(null)).otherwise(col(c))
+        .cast(box.schema(c).dataType))
+      c -> scala.util.Try(MergeBoxesApi.mergeBoxes(withNull).collect().toSeq)
+    }
+    val unnamed = outcomes.filterNot {
+      case (c, scala.util.Failure(e)) =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(t =>
+          t.isInstanceOf[IllegalArgumentException] &&
+            t.getMessage.contains(s"column `$c` holds a null"))
+      case _ => false
+    }
+    assert(unnamed.isEmpty, s"a null must fail naming its column; got $unnamed")
   }
 
   test("empty input yields an empty result through the exec") {
