@@ -19,8 +19,8 @@ import graft.io.{CommitLog, LogAction, Sinks}
   *   - pure log replay (`snapshotFiles` — checkpoint + tail probe),
   *   - snapshot `read().count()` (replay + the N-small-files scan the
   *     compact procedure exists to fix),
-  *   - full-window `changes().count()` (constant-width plan, N manifest
-  *     entries),
+  *   - full-window `changes().count()` (constant-width plan, N
+  *     stamp-map entries),
   *   - one ALTER at the tip (replay + one log write),
   *   - a cold CDF stream catching up over the whole history.
   *

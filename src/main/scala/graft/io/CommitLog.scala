@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A minimal transactional table format for the tracker lifecycle
@@ -79,19 +80,11 @@ object CommitLog {
     * listing exists for history inspection. */
   def versions(table: String): Seq[Long] =
     if (!Files.isDirectory(logDir(table))) Seq.empty
-    else listDir(logDir(table))
+    else Sinks.listDir(logDir(table))
       .map(_.getFileName.toString)
       .filter(_.endsWith(".json"))
       .flatMap(n => n.stripSuffix(".json").toLongOption)
       .sorted
-
-  /** `Files.list` with the stream CLOSED (an unclosed NIO stream leaks a
-    * directory handle until GC — and several callers here run per commit
-    * or per vacuum on long-lived tables). */
-  private def listDir(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator.asScala.toSeq finally s.close()
-  }
 
   /** The log tip, found WITHOUT a directory listing: versions are dense
     * (every commit claims tip+1 by atomic no-overwrite rename), so probing
@@ -362,17 +355,22 @@ object CommitLog {
     * schema: `mergeSchema` unions every file's footer (Spark's parallel
     * merge); the single-schema read declares the schema Spark would infer
     * from the first file by path, read from its footer on the driver
-    * ([[Footers.read]]) — no inference job per read. */
+    * ([[readSchema]]) — no inference job per read. */
   private def reader(spark: SparkSession, table: String, files: Seq[String],
                      asOf: Option[Long], mergeSchema: Boolean): DataFrame = {
     val paths = files.map(f => Paths.get(table, f).toString)
-    declaredSchema(table, asOf) match {
-      case Some(s) => spark.read.schema(toPhysical(s)).parquet(paths: _*)
-      case None if mergeSchema =>
-        spark.read.option("mergeSchema", true).parquet(paths: _*)
-      case None => Footers.read(spark, paths)
-    }
+    if (mergeSchema && declaredSchema(table, asOf).isEmpty)
+      spark.read.option("mergeSchema", true).parquet(paths: _*)
+    else spark.read.schema(readSchema(spark, table, files, asOf)).parquet(paths: _*)
   }
+
+  /** The schema a single-schema read of `files` declares: the log's
+    * declared schema under physical names, else the one Spark would infer,
+    * from the footer of the first file by path ([[Footers.read]]). */
+  private def readSchema(spark: SparkSession, table: String, files: Seq[String],
+                         asOf: Option[Long]): org.apache.spark.sql.types.StructType =
+    declaredSchema(table, asOf).fold(
+      Footers.schema(spark, files.map(f => Paths.get(table, f).toString).min))(toPhysical)
 
   // ------------------------------------------------------------------ column mapping
   /** Field-metadata key carrying a column's PHYSICAL name — the name its
@@ -744,14 +742,14 @@ object CommitLog {
         }
     }
     finally conf.set(tsKey, prevTs)
-    val parts = listDir(staging)
+    val parts = Sinks.listDir(staging)
       .filter(_.getFileName.toString.endsWith(".parquet"))
     val named = parts.map { p =>
       val name = p.getFileName.toString
       Files.move(p, Paths.get(table, name), StandardCopyOption.ATOMIC_MOVE)
       name
     }
-    val leftovers = listDir(staging) // _SUCCESS, .crc
+    val leftovers = Sinks.listDir(staging) // _SUCCESS, .crc
     leftovers.foreach(Files.delete)
     Files.delete(staging)
     named
@@ -771,7 +769,7 @@ object CommitLog {
   private def addAction(table: String, f: String, bloomCol: Option[String]): Add = {
     val fs = footerSummary(table, f)
     val bloomed = bloomCol.flatMap(bc =>
-      try fs.rows.flatMap(fileBloom(SparkSession.active, table, f, bc, _))
+      try fs.footer.flatMap(fileBloom(SparkSession.active, table, f, bc, _))
       catch { case scala.util.control.NonFatal(_) => None }) match {
       case Some(bits) =>
         try { writeBloomSidecar(table, f, bits); true }
@@ -881,16 +879,19 @@ object CommitLog {
     * one narrow Spark job over just that column (m from the footer row
     * count, so the job never guesses), per-partition local bitsets OR-ed
     * on the driver (bounded: partitions × m/8 bytes — never the keys
-    * themselves). `rows` is the footer row count [[addAction]] already
-    * read. None (no bloom recorded, file always read — fail-safe) when the
-    * column is absent. */
+    * themselves). `footer` is the one [[addAction]] already read: its row
+    * count sizes the bloom and its schema declares the read, so the file's
+    * footer is not opened again. None (no bloom recorded, file always read
+    * — fail-safe) when the column is absent. */
   private def fileBloom(spark: SparkSession, table: String, f: String,
-                        physCol: String, rows: Long): Option[Array[Long]] =
+                        physCol: String, footer: ParquetMetadata): Option[Array[Long]] =
     try {
+      val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
       val mBits = math.max(MinBloomBits,
         math.min(rows * BloomBitsPerKey, MaxBloomBits)) / 64 * 64
       val words = (mBits / 64).toInt
-      val df = Footers.read(spark, Seq(Paths.get(table, f).toString))
+      val df = spark.read.schema(Footers.schemaOf(spark, footerPath(table, f), footer))
+        .parquet(Paths.get(table, f).toString)
       if (!df.columns.exists(_.equalsIgnoreCase(physCol))) return None
       val hashes = df.select(bloomHashExpr(
         org.apache.spark.sql.functions.col(s"`$physCol`")))
@@ -1252,16 +1253,19 @@ object CommitLog {
     * [[DvSidecars]] LRU, so the closure never grows with the candidates'
     * suppressed rows. Returns ((file, sidecar, suppressed rows), (file,
     * annotation)). */
-  private def writeVectors(spark: SparkSession, table: String, scan: DataFrame,
+  private def writeVectors(table: String, scan: DataFrame,
                            oldSc: Map[String, String], annotate: Boolean)
       : (Seq[(String, String, Long)], Seq[(String, String)]) = {
     import org.apache.spark.sql.functions.{col, collect_list}
-    import spark.implicits._
+    // positional reads of the grouped rows (file, positions), like
+    // [[fileBloom]]: no encoder derived, no row deserialized to an object
     val written = scan
       .groupBy(col(DvFileCol))
-      .agg(collect_list(col(DvPosCol)).as("_graft_dv_new"))
-      .as[(String, Seq[Long])]
-      .map { case (f, fresh) =>
+      .agg(collect_list(col(DvPosCol)))
+      .queryExecution.toRdd
+      .map { r =>
+        val f = r.getUTF8String(0).toString
+        val fresh = ArraySeq.unsafeWrapArray(r.getArray(1).toLongArray())
         val (name, n) = writeMergedVector(table, f, oldSc.get(f), fresh)
         (f, name, n, if (annotate) Some(writeUpdateAnnotation(table, f, fresh)) else None)
       }
@@ -1310,7 +1314,7 @@ object CommitLog {
       if (cands.isEmpty) None
       else {
         val (scan, oldSc) = positionScan(spark, table, state, tip, cands)(_.filter(cond))
-        val (written, _) = writeVectors(spark, table, scan, oldSc, annotate = false)
+        val (written, _) = writeVectors(table, scan, oldSc, annotate = false)
         if (written.isEmpty) None
         else Some(landDml(spark, table, "delete", tip, written, Nil, Nil))
       }
@@ -1349,7 +1353,7 @@ object CommitLog {
         // a checkpointed intermediate; matched rows ≪ candidates)
         val matched = scan.persist()
         try {
-          val (written, _) = writeVectors(spark, table, matched, oldSc, annotate = false)
+          val (written, _) = writeVectors(table, matched, oldSc, annotate = false)
           if (written.isEmpty) None
           else {
             // ONE select from the matched rows, so every SET right-hand
@@ -1414,7 +1418,7 @@ object CommitLog {
           try {
             // every matched suppression in a merge is an update: the tasks
             // also land the `.dvu-` update-preimage annotations
-            val (written, dvus) = writeVectors(spark, table, matched, oldSc, annotate = true)
+            val (written, dvus) = writeVectors(table, matched, oldSc, annotate = true)
             val (postAdded, insAdded) =
               if (written.isEmpty) (Seq.empty[String], stage(src, table))
               else {
@@ -1441,6 +1445,7 @@ object CommitLog {
   private val MaxStringBoundBytes = 32
 
   private final case class FooterStats(
+      footer: Option[ParquetMetadata],
       rows: Option[Long],
       mstats: Map[String, ColStat],
       sstats: Map[String, (ArraySeq[Byte], ArraySeq[Byte])])
@@ -1578,14 +1583,14 @@ object CommitLog {
         // the cross-row-group fold, and a hi with no bounded truncation
         // drops its column
         val capped = acc.toSeq.take(MaxMStatsColumns)
-        FooterStats(rows,
+        FooterStats(Some(r.getFooter), rows,
           capped.collect { case (n, Left(cs)) => n -> cs }.toMap,
           capped.collect { case (n, Right((lo, hi))) =>
             truncHi(hi).map(h => n ->
               (ArraySeq.unsafeWrapArray(truncLo(lo)), ArraySeq.unsafeWrapArray(h)))
           }.flatten.toMap)
       } finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => FooterStats(None, Map.empty, Map.empty) }
+    } catch { case scala.util.control.NonFatal(_) => FooterStats(None, None, Map.empty, Map.empty) }
 
   /** A data file's Hadoop path for [[Footers.open]]. */
   private def footerPath(table: String, f: String): org.apache.hadoop.fs.Path =
@@ -2571,12 +2576,12 @@ object CommitLog {
     * Plan shape is CONSTANT-WIDTH however many commits the window holds —
     * a months-long window over a busy table (thousands of commits inside
     * the vacuum horizon) must not build a thousand-way nested union
-    * (driver-side analysis cost, not data cost). All touched files are
-    * read in ONE scan at the window head's declared schema (additive
-    * evolution NULL-fills older eras, exactly what the per-commit
-    * alignment did), a broadcast file→(version, side) manifest stamps each
-    * row — a file added in one commit and removed in a later one
-    * contributes to both — and then:
+    * (driver-side analysis cost, not data cost). Touched files are read
+    * at the window head's declared schema (additive evolution NULL-fills
+    * older eras, exactly what the per-commit alignment did), at most two
+    * scans, and a driver-built file→(version, sign) stamp map
+    * ([[graft.plans.CdfStamps]]) stamps each row — a file added in one
+    * commit and removed in a later one contributes to both:
     *   - commits touching ONE side (pure appends / pure removes) pass
     *     through stamped, no shuffle;
     *   - rewrite commits (add + remove) take a sign-sum multiset diff:
@@ -2625,8 +2630,8 @@ object CommitLog {
     // keeps plain delete/insert labels (pre-round-14 logs, the group-based
     // SQL MERGE). A vacuumed `.dvu-` sidecar drops its annotation here
     // (existence-checked), degrading labels, never rows.
-    val updateVersions = Seq.newBuilder[Long]
-    val annotRows = Seq.newBuilder[(String, Long, String, Boolean)]
+    val updateVersions = Set.newBuilder[Long]
+    val annotations = Map.newBuilder[(String, Long), (Option[String], Boolean)]
     for (v <- (fromV + 1) to toV) {
       val c = readCommit(table, v)
       val dvActs = if (c.dv.isEmpty) Nil else dvActionsOf(table, v)
@@ -2637,8 +2642,8 @@ object CommitLog {
         val dvuOk = dvuOf.filter { case (_, sc) =>
           Files.exists(Paths.get(table, sc))
         }
-        (dvuOk.keySet ++ postSet).toSeq.sorted.foreach { f =>
-          annotRows += ((f, v, dvuOk.get(f).orNull, postSet(f)))
+        (dvuOk.keySet ++ postSet).foreach { f =>
+          annotations += (f, v) -> ((dvuOk.get(f), postSet(f)))
         }
       }
       // alter commits carry no rows; a DROP COLUMN alter never has a
@@ -2667,163 +2672,99 @@ object CommitLog {
     val all = entries.result()
     if (all.isEmpty)
       // only layout/marker commits in the window: zero changes, full schema
-      return read(spark, table, Some(toV)).limit(0)
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(0L))
-        .withColumn("_commit_timestamp",
-          lit(null).cast(org.apache.spark.sql.types.TimestampType))
-        .limit(0)
+      return read(spark, table, Some(toV)).limit(0).select(col("*"),
+        lit("insert").as("_change_type"), lit(0L).as("_commit_version"),
+        lit(null).cast(org.apache.spark.sql.types.TimestampType).as("_commit_timestamp"))
 
-    import spark.implicits._
-    def variantKey(f: String, dv: Option[String]): String = f + "#" + dv.getOrElse("")
-    // ONE scan serves every (file, vector-state) variant in the window:
-    // each row joins (broadcast, ∝ variants — file NAMES, not positions)
-    // to its file's variant rows, a per-task sidecar probe drops the
-    // positions that variant suppresses, and the variant key labels the
-    // result. A wide merge-on-read commit touching N files is N manifest
-    // rows in one constant-shape plan — the previous one-union-branch-
-    // per-variant form grew the plan O(N) and made the feed unusable
-    // after a wide MoR commit. A file appearing under TWO vector states
-    // (its rows before and after a dv commit) duplicates through the
-    // join by design — those are distinct logical contents.
-    val variants = all.map(e => (e.file, e.dv)).distinct
-    val varFiles = variants.map(_._1).distinct
-    val annots = annotRows.result()
-    // the common window holds NO vector state at all (plain appends /
-    // rewrites): serve it without the row-index columns or the variant
-    // join — the per-micro-batch CDF streams pay this shape once per
-    // trigger, so the vector machinery must cost zero when unused.
-    // Annotations force the pos-tagged branch even with zero dv variants
-    // (a graft.dv.maxRatio commit that materializes EVERY touched file
-    // carries `.dvu-`/cdfpost annotations but no dv actions) — the kind
-    // join below needs DvFileCol/DvPosCol on the scan
-    val scan =
-      if (variants.forall(_._2.isEmpty) && annots.isEmpty)
-        readFiles(spark, table, varFiles, mergeSchema = false,
-            Some(toV), suppressDv = false)
-          .withColumn("_graft_cdf_file",
-            concat(element_at(split(input_file_name(), "/"), -1), lit("#")))
-      else {
-        // DvFileCol/DvPosCol stay attached through the manifest join: the
-        // update-kind classification below probes (file, version, pos)
-        val variantDf = broadcast(variants.map { case (f, dv) => (f, dv.orNull) }
-          .toDF(DvFileCol, "_graft_cdf_dv"))
-        readFilesWithPos(spark, table, varFiles, Some(toV))
-          .join(variantDf, Seq(DvFileCol))
-          .filter(!org.apache.spark.sql.GraftSqlShim.column(
-            graft.plans.DvPosSuppressed(
-              org.apache.spark.sql.GraftSqlShim.expression(col("_graft_cdf_dv")),
-              org.apache.spark.sql.GraftSqlShim.expression(col(DvPosCol)), table)))
-          .withColumn("_graft_cdf_file",
-            concat(col(DvFileCol), lit("#"),
-              coalesce(col("_graft_cdf_dv"), lit(""))))
-          .drop("_graft_cdf_dv")
-      }
-    val dataCols = scan.columns
-      .filterNot(c => c == "_graft_cdf_file" || c == DvFileCol || c == DvPosCol)
-      .toSeq
-    require(!dataCols.exists(c => c.startsWith("_graft_cdf_") || c == "_n"),
-      s"changes($table): table columns collide with CDF internals: $dataCols")
-    val manifest = broadcast(all.map(e =>
-        (variantKey(e.file, e.dv), e.v, e.sign, e.diff))
-      .toDF("_graft_cdf_file", "_graft_cdf_v", "_graft_cdf_sign", "_graft_cdf_diff"))
-    val stamped0 = scan.join(manifest, "_graft_cdf_file")
-    // per-row update kind: "u" marks a row of an annotated 'update'/'merge'
-    // commit as an UPDATE image — a −1 row whose position is in that
-    // version's `.dvu-` update-position sidecar (probed per task, like the
-    // variant filter above), or a +1 row of a `cdfpost`-marked image file.
-    // The kind joins on (file, version) against a broadcast of the
-    // annotations (∝ annotated files, names only). The scan branch above
-    // is forced pos-tagged whenever annotations exist, so
-    // DvFileCol/DvPosCol are guaranteed here.
-    val stamped =
-      if (annots.isEmpty)
-        stamped0.withColumn("_graft_cdf_kind", lit(null).cast("string"))
-      else {
-        val kindDf = broadcast(annots
-          .toDF(DvFileCol, "_graft_cdf_v", "_graft_cdf_dvu", "_graft_cdf_post"))
-        stamped0.join(kindDf, Seq(DvFileCol, "_graft_cdf_v"), "left")
-          .withColumn("_graft_cdf_kind",
-            when(col("_graft_cdf_sign") > 0 &&
-                coalesce(col("_graft_cdf_post"), lit(false)), lit("u"))
-              .when(col("_graft_cdf_sign") < 0 &&
-                org.apache.spark.sql.GraftSqlShim.column(
-                  graft.plans.DvPosSuppressed(
-                    org.apache.spark.sql.GraftSqlShim.expression(col("_graft_cdf_dvu")),
-                    org.apache.spark.sql.GraftSqlShim.expression(col(DvPosCol)),
-                    table)), lit("u")))
-          .drop("_graft_cdf_dvu", "_graft_cdf_post")
-      }
-    val outCols = dataCols.map(col) :+ col("_change_type") :+ col("_commit_version")
-
-    // single-sided commits: rows pass through stamped — no shuffle
-    val direct = stamped.filter(!col("_graft_cdf_diff"))
-      .withColumn("_change_type",
-        when(col("_graft_cdf_sign") > 0, lit("insert")).otherwise(lit("delete")))
-      .withColumn("_commit_version", col("_graft_cdf_v").cast("long"))
-      .select(outCols: _*)
-    // rewrite commits: sign-sum multiset diff per (version, kind, row).
-    // Kind joins the key so an update image never cancels against an
-    // identical plain insert/delete of the same commit; an IDENTITY update
-    // (pre == post, both kind "u") still cancels to zero change rows — the
-    // engine's documented multiset semantics, unchanged. The |n|
-    // re-expansion assumes no single commit rewrites millions of copies of
-    // ONE identical row (the sequence() array would be that long) — the
-    // same pathology exceptAll would have materialized as a hash bucket.
-    val diffed = stamped.filter(col("_graft_cdf_diff"))
-      .groupBy(col("_graft_cdf_v") +: col("_graft_cdf_kind") +: dataCols.map(col): _*)
-      .agg(sum(col("_graft_cdf_sign")).as("_n"))
-      .filter(col("_n") =!= 0)
-      .withColumn("_change_type",
-        when(col("_graft_cdf_kind") === "u",
-          when(col("_n") > 0, lit("update_postimage"))
-            .otherwise(lit("update_preimage")))
-          .otherwise(
-            when(col("_n") > 0, lit("insert")).otherwise(lit("delete"))))
-      .withColumn("_commit_version", col("_graft_cdf_v").cast("long"))
-      .withColumn("_graft_cdf_dup", explode(sequence(lit(1L), abs(col("_n")))))
-      .select(outCols: _*)
-    val unioned = direct.unionByName(diffed)
-    // 'update' commits: EVERY surviving change row is an update image —
-    // relabel wholesale (idempotent over rows the kind path already
-    // labeled; covers the copy-on-write rewrite and the Scala dvUpdate,
-    // which carry no annotations)
-    val updVs = updateVersions.result()
-    val relabeled =
-      if (updVs.isEmpty) unioned
-      else {
-        // broadcast (version → is-update) join, not a literal isin list:
-        // a window spanning thousands of update commits keeps a
-        // constant-width plan (same shape as the annotation join above)
-        val updDf = broadcast(updVs.map(v => (v, true))
-          .toDF("_commit_version", "_graft_cdf_upd"))
-        unioned.join(updDf, Seq("_commit_version"), "left")
-          .withColumn("_change_type",
-            when(coalesce(col("_graft_cdf_upd"), lit(false)),
-              when(col("_change_type") === "delete", lit("update_preimage"))
-                .when(col("_change_type") === "insert", lit("update_postimage"))
-                .otherwise(col("_change_type")))
-              .otherwise(col("_change_type")))
-          .select(outCols: _*)
-      }
+    // Everything a row's stamps depend on is known here, on the driver:
+    // its file's (vector, version, sign) entries, the annotations of
+    // (file, version), the 'update' versions and the commit times. A map
+    // file → stamps ([[graft.plans.CdfStamps]]) carries it all in the
+    // task closure, so stamping is a per-row lookup above the scan: no
+    // join, no broadcast, and a plan whose shape and printed width do not
+    // grow with the commits or files in the window. A wide merge-on-read
+    // commit touching N files is N map entries.
+    //
     // Delta-parity `_commit_timestamp`: every change row carries its
     // commit's wall clock (the log file's mtime, running-max monotonized
     // exactly as [[versionAt]] resolves it — equal across one commit's
-    // rows, non-decreasing across versions), via a broadcast
-    // (version → millis) join — constant plan width however many commits
-    // the window holds
-    val tsPairs = {
+    // rows, non-decreasing across versions)
+    val millisOf = {
       var last = 0L
       ((fromV + 1) to toV).map { v =>
-        val t = commitTimeMillis(table, v).getOrElse(last)
-        last = math.max(last, t)
+        last = math.max(last, commitTimeMillis(table, v).getOrElse(last))
         v -> last
+      }.toMap
+    }
+    val updVs = updateVersions.result()
+    val annotOf = annotations.result()
+    def stampsOf(es: Seq[Entry]) = es.groupBy(_.file).map { case (f, fes) =>
+      f -> fes.map { e =>
+        val (dvu, post) = annotOf.getOrElse((f, e.v), (None, false))
+        graft.plans.CdfStamp(e.dv, e.v, e.sign, updVs(e.v), millisOf(e.v),
+          post = e.sign > 0 && post, dvu = if (e.sign < 0) dvu else None)
       }
     }
-    val tsDf = broadcast(tsPairs.toDF("_commit_version", "_graft_cdf_ms"))
-    relabeled.join(tsDf, Seq("_commit_version"), "left")
-      .withColumn("_commit_timestamp", timestamp_millis(col("_graft_cdf_ms")))
-      .select((outCols :+ col("_commit_timestamp")): _*)
+    // ONE schema serves both branches below: the window-end era's
+    // (additive evolution NULL-fills older files)
+    val schema = readSchema(spark, table, all.map(_.file).distinct, Some(toV))
+    // the scan serves physical names; the feed serves the window-end
+    // era's logical ones (positional, as [[toLogical]])
+    val dataCols = declaredSchema(table, Some(toV)).filter(hasNameMapping)
+      .fold(schema.fieldNames.toSeq)(_.fieldNames.toSeq)
+    require(!dataCols.exists(c => c.startsWith("_graft_cdf_") || c == "_n"),
+      s"changes($table): table columns collide with CDF internals: $dataCols")
+    def c(name: String) = col("`" + name.replace("`", "``") + "`")
+    val shim = org.apache.spark.sql.GraftSqlShim
+    // the files of one branch, each row stamped by the branch's stamps.
+    // Row positions are read only when some stamp probes a vector: the
+    // per-micro-batch CDF streams pay this shape once per trigger, so the
+    // vector machinery must cost zero when unused
+    def stamped(of: Map[String, Seq[graft.plans.CdfStamp]]): DataFrame = {
+      val probes = of.valuesIterator.flatten.exists(s => s.dv.nonEmpty || s.dvu.nonEmpty)
+      val pos = if (probes) col("_metadata.row_index") else lit(null).cast("long")
+      spark.read.schema(schema).parquet(of.keys.toSeq.map(f => Paths.get(table, f).toString): _*)
+        .select(schema.fieldNames.toSeq.zip(dataCols).map { case (p, l) => c(p).as(l) } :+
+          inline(shim.column(graft.plans.CdfStamps(
+            shim.expression(col("_metadata.file_name")), shim.expression(pos), table, of))): _*)
+    }
+    def changeType(image: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
+      when(image, when(n > 0, lit("update_postimage")).otherwise(lit("update_preimage")))
+        .otherwise(when(n > 0, lit("insert")).otherwise(lit("delete")))
+    val upd = c("_graft_cdf_upd")
+    val stampCols = Seq(c("_graft_cdf_v").as("_commit_version"),
+      timestamp_millis(c("_graft_cdf_ms")).as("_commit_timestamp"))
+    // each branch reads only its own files, and a window without one
+    // side builds no plan for it: a window of appends runs no shuffle
+    val (diffEntries, directEntries) = all.partition(_.diff)
+    // single-sided commits: rows pass through stamped — no shuffle.
+    // 'update' commits label EVERY change row an update image (the
+    // copy-on-write rewrite and the Scala dvUpdate carry no annotations)
+    val direct = Option.when(directEntries.nonEmpty)(stamped(stampsOf(directEntries))
+      .select(dataCols.map(c) ++
+        (changeType(upd, c("_graft_cdf_sign")).as("_change_type") +: stampCols): _*))
+    // rewrite commits: sign-sum multiset diff per (version, kind, row),
+    // `sum(±1) = n_new − n_old`, |n| copies out — identical semantics to
+    // per-commit `exceptAll` pairs (rows a rewrite merely carried cancel
+    // to 0 and never appear). The update-image mark `_graft_cdf_u` joins
+    // the key so an image never cancels against an identical plain
+    // insert/delete of the same commit; an IDENTITY update (pre == post,
+    // both marked) still cancels to zero change rows — the engine's
+    // documented multiset semantics. The update flag and commit time ride
+    // the key too (both functions of the version). The |n| re-expansion
+    // assumes no single commit rewrites millions of copies of ONE
+    // identical row — the same pathology exceptAll would have
+    // materialized as a hash bucket.
+    val n = c("_n")
+    val diffed = Option.when(diffEntries.nonEmpty)(stamped(stampsOf(diffEntries))
+      .groupBy(Seq(c("_graft_cdf_v"), c("_graft_cdf_u"), upd, c("_graft_cdf_ms")) ++
+        dataCols.map(c): _*)
+      .agg(sum(c("_graft_cdf_sign")).as("_n"))
+      .filter(n =!= 0)
+      .select(inline(array_repeat(struct(dataCols.map(c) ++
+        (changeType(c("_graft_cdf_u") || upd, n).as("_change_type") +: stampCols): _*),
+        abs(n).cast("int")))))
+    (direct ++ diffed).reduce(_ union _)
   }
 
   /** Zone-map stats restricted to files whose recorded range is ON
@@ -3107,7 +3048,7 @@ object CommitLog {
     // data files — the same retention horizon, one knob.
     val dvLive = state.dvs.values.map(_._1).toSet
     val cutoff = System.currentTimeMillis() - retainMillis
-    val onDisk = listDir(Paths.get(table))
+    val onDisk = Sinks.listDir(Paths.get(table))
       .filter(p => Files.isRegularFile(p))
       .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
       .map(_.getFileName.toString)
@@ -3265,7 +3206,7 @@ object CommitLog {
     lastCheckpoint(table) match {
       case None => Seq.empty
       case Some(cp) =>
-        val old = listDir(logDir(table))
+        val old = Sinks.listDir(logDir(table))
           .filter { p =>
             val n = p.getFileName.toString
             n.endsWith(".json") && !n.endsWith(".checkpoint.json") &&

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
@@ -40,10 +41,13 @@ object Footers {
   def schema(spark: SparkSession, path: String): StructType = {
     val p = new Path(path)
     val r = open(p)
-    val footer = try r.getFooter finally r.close()
+    schemaOf(spark, p, try r.getFooter finally r.close())
+  }
+
+  /** [[schema]] of a footer the caller already read from `p`. */
+  def schemaOf(spark: SparkSession, p: Path, footer: ParquetMetadata): StructType =
     GraftParquetShim.readSchema(Seq(new Footer(p, footer)), spark).getOrElse(
       sys.error(s"parquet file $p: footer yields no schema"))
-  }
 
   /** `spark.read.parquet(paths)` with the schema Spark would infer
     * declared up front: without `mergeSchema`, Spark's inference sorts the

@@ -2,6 +2,8 @@ package graft.io
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,6 +85,14 @@ object Sinks {
     val p = Paths.get(System.getProperty("java.io.tmpdir"), "graft_scratch", name)
     Files.createDirectories(p.getParent)
     p.toString
+  }
+
+  /** The entries of directory `dir`, listed through a stream closed before
+    * return: an open `Files.list` holds its directory handle until it is
+    * closed, and some callers run in long-lived sessions. */
+  def listDir(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator.asScala.toList finally s.close()
   }
 
   /** Deletes `p` and everything under it, if it exists. The walk is closed

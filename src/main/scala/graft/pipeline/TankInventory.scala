@@ -160,26 +160,60 @@ object TankInventory {
   /** Crosstab over an already-materialized inventory frame — the
     * write-once-read-four lifecycle derives all four reports from ONE
     * persisted inventory (the reference writes the GeoJSON once and its
-    * report script reads it, `distribution_by_county_state.py:27`). */
+    * report script reads it, `distribution_by_county_state.py:27`). The
+    * margin row (`dim` = -1) is the grand-total grouping set of the same
+    * aggregation as the cells, so the inventory is read once and nothing
+    * is cached. */
   def crosstabFrom(inv: DataFrame, dim: String, percent: Boolean): DataFrame = {
-    val aggs = Classes.map(c => count(when(col("object_class") === c, 1)).as(c))
-    // cache the per-dim counts: the margin row reads them again, and
-    // without the cache the whole inventory pipeline would run twice
-    val base = inv.groupBy(dim).agg(aggs.head, aggs.tail: _*)
-      .withColumn("total", Classes.map(col).reduce(_ + _))
-      .cache()
-    val marginAggs = Classes.map(c => sum(col(c)).as(c)) :+ sum(col("total")).as("total")
-    val margin = base.groupBy().agg(marginAggs.head, marginAggs.tail: _*)
-      .withColumn(dim, lit(-1))
-    val all = base.unionByName(margin.select(base.columns.map(col).toIndexedSeq: _*))
-    val out =
-      if (!percent) all
-      else {
-        val grand = base.agg(sum(col("total")).as("grand"))
-        all.crossJoin(broadcast(grand))
-          .select(col(dim) +:
-            (Classes :+ "total").map(c => (col(c) / col("grand")).as(c)): _*)
-      }
-    out.orderBy(col("total").desc, col(dim))
+    val margin = col("_gid") === 1
+    val key = when(margin, lit(-1)).otherwise(col(dim)).as(dim)
+    classCounts(inv, Seq(dim))
+      .select(key +: (Classes :+ "total").map(c => cell(c, percent, margin)): _*)
+      .orderBy(col("total").desc, col(dim))
   }
+
+  /** All four distribution reports — {county, state} x {count, percent},
+    * margins included — from ONE aggregation over `inv`, tagged by
+    * `report` (`county_count`, `state_count`, `county_pct`, `state_pct`)
+    * and keyed by `dim_key` (-1 on the margin rows). Rows equal the four
+    * [[crosstabFrom]] outputs with every cell cast to double, so count
+    * and percent reports share one schema. */
+  def reports(inv: DataFrame): DataFrame = {
+    val counts = classCounts(inv, Seq("county_key", "state_key"))
+    // grouping_id(county_key, state_key): 1 = county cells, 2 = state
+    // cells, 3 = the grand-total row, the margin of both
+    val gid = col("_gid")
+    val tags = when(gid === 1, array(lit("county_count"), lit("county_pct")))
+      .when(gid === 2, array(lit("state_count"), lit("state_pct")))
+      .otherwise(array(Seq("county_count", "state_count", "county_pct", "state_pct").map(lit): _*))
+    val key = when(gid === 1, col("county_key")).when(gid === 2, col("state_key"))
+      .otherwise(lit(-1)).cast("int")
+    val pct = col("report").endsWith("_pct")
+    counts.select(Seq(explode(tags).as("report"), key.as("dim_key"), gid) ++
+        (Classes :+ "total").map(col): _*)
+      .select(col("report") +: col("dim_key") +:
+        (Classes :+ "total").map(c =>
+          when(pct, cell(c, percent = true, gid === 3))
+            .otherwise(col(c).cast("double")).as(c)): _*)
+  }
+
+  /** Per-class counts and their total for each of `dims` alone plus the
+    * grand total, as ONE `GROUPING SETS` aggregation; `_gid` is the row's
+    * `grouping_id` over `dims` (all bits set on the grand-total row). */
+  private def classCounts(inv: DataFrame, dims: Seq[String]): DataFrame = {
+    val aggs = Classes.map(c => count(when(col("object_class") === c, 1)).as(c)) :+
+      grouping_id(dims.map(col): _*).as("_gid")
+    inv.groupingSets(dims.map(d => Seq(col(d))) :+ Seq.empty, dims.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumn("total", Classes.map(col).reduce(_ + _))
+  }
+
+  /** A crosstab cell: the count, or its share of the grand total (pandas
+    * `normalize='all'` divides every cell, margins included). The grand
+    * total is the `total` of the row `grand` marks, spread to every row by
+    * a window over the aggregation's few rows. */
+  private def cell(c: String, percent: Boolean,
+                   grand: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    if (!percent) col(c)
+    else (col(c) / max(when(grand, col("total"))).over()).as(c)
 }

@@ -164,21 +164,16 @@ object PipelineQueries {
     * `distribution_by_county_state.py:27` read). The e3/e3b/e3c/e3d gate
     * queries each rebuild E1 because gate queries must be self-contained;
     * this is the lifecycle a production run uses instead — the expensive
-    * pipeline runs once, the four reports are cheap scans of its output.
-    * All cells cast to double so count and percent reports union into one
-    * tagged frame (counts are integers, exact in double). */
+    * pipeline runs once, and the four reports are one aggregation of its
+    * output ([[TankInventory.reports]]). Every cell is a double so count
+    * and percent reports share one tagged frame (counts are integers,
+    * exact in double). */
   private val e3ePersistedCrosstabs: Q = (spark, dir) => {
     val path = Sinks.scratchDir("e3e_inventory")
-    TankInventory.inventory(spark, dir).write.mode("overwrite").parquet(path)
-    val inv = spark.read.parquet(path)
-    val reports = Seq(
-      ("county_key", false, "county_count"), ("state_key", false, "state_count"),
-      ("county_key", true, "county_pct"), ("state_key", true, "state_pct"))
-    reports.map { case (dim, pct, tag) =>
-      TankInventory.crosstabFrom(inv, dim, pct)
-        .select(lit(tag).as("report") +: col(dim).cast("int").as("dim_key") +:
-          (TankInventory.Classes :+ "total").map(c => col(c).cast("double").as(c)): _*)
-    }.reduce(_ unionByName _)
+    val built = TankInventory.inventory(spark, dir)
+    built.write.mode("overwrite").parquet(path)
+    // the schema just written: the read starts no inference job
+    TankInventory.reports(spark.read.schema(built.schema).parquet(path))
       .orderBy("report", "dim_key")
   }
 

@@ -2,8 +2,6 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1958,12 +1956,7 @@ object TableLogQueries {
       .collect().map(_.getString(0))
     require(removed.exists(_.contains(".dv-")),
       "tl36: vacuum must reclaim the spent dv sidecars")
-    val leftover = {
-      val s = Files.list(Paths.get(tdir))
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .exists(_.contains(".dv-"))
-      finally s.close()
-    }
+    val leftover = Sinks.listDir(Paths.get(tdir)).exists(_.getFileName.toString.contains(".dv-"))
     require(!leftover, "tl36: no sidecar may survive materialization + vacuum")
     // DML keeps working after materialization (still merge-on-read — the
     // opt-in is a table property, not a per-statement state)
@@ -2240,11 +2233,8 @@ object TableLogQueries {
     spark.sql(s"INSERT INTO $t VALUES (999999905, 'stray', 1.0, 9)")
     val vBad = CommitLog.currentVersion(tdir)
     require(vBad > vGood, "tl41: the damage must land commits")
-    def parquetCount: Int = {
-      val s = Files.list(Paths.get(tdir))
-      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
+    def parquetCount: Int =
+      Sinks.listDir(Paths.get(tdir)).count(_.getFileName.toString.endsWith(".parquet"))
     val diskBefore = parquetCount
     val res = spark.sql(
       s"CALL graft.system.restore(`table` => 'dml.t41', version => $vGood)").head()

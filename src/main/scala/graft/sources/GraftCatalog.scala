@@ -79,7 +79,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = dirOf(namespace)
     if (!Files.isDirectory(dir)) throw new NoSuchNamespaceException(namespace)
-    Files.list(dir).iterator().asScala
+    Sinks.listDir(dir)
       .filter(isTableDir)
       .map(p => Identifier.of(namespace, p.getFileName.toString))
       .toArray
@@ -475,7 +475,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ------------------------------------------------------------------ namespaces
   override def listNamespaces(): Array[Array[String]] =
-    Files.list(warehouse).iterator().asScala
+    Sinks.listDir(warehouse)
       .filter(p => Files.isDirectory(p) && !isTableDir(p))
       .map(p => Array(p.getFileName.toString))
       .toArray
@@ -484,7 +484,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (namespace.isEmpty) return listNamespaces()
     val dir = dirOf(namespace)
     if (!Files.isDirectory(dir)) throw new NoSuchNamespaceException(namespace)
-    Files.list(dir).iterator().asScala
+    Sinks.listDir(dir)
       .filter(p => Files.isDirectory(p) && !isTableDir(p))
       .map(p => namespace :+ p.getFileName.toString)
       .toArray
@@ -516,7 +516,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = dirOf(namespace)
     if (!namespaceExists(namespace) || namespace.isEmpty) false
     else {
-      val hasChildren = Files.list(dir).iterator().asScala.nonEmpty
+      val hasChildren = Sinks.listDir(dir).nonEmpty
       if (hasChildren && !cascade)
         throw new IllegalStateException(
           s"namespace ${namespace.mkString(".")} is not empty (use CASCADE)")

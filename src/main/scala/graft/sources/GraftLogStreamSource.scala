@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.NoSuchFileException
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.types.StructType
@@ -463,13 +461,6 @@ final class GraftLogCdfMicroBatchStream(
       java.nio.file.Paths.get(new java.net.URI(checkpointLocation))
     else java.nio.file.Paths.get(checkpointLocation)
 
-  /** NIO directory streams must be CLOSED — this path runs every trigger
-    * of a deliberately months-running stream, and an unclosed
-    * `Files.list` leaks a directory handle until GC. */
-  private def useStream[A](s: java.util.stream.Stream[java.nio.file.Path])
-                          (body: java.util.stream.Stream[java.nio.file.Path] => A): A =
-    try body(s) finally s.close()
-
   /** Reclaims materializations of windows ending BELOW `threshold` — a
     * committed batch is never re-planned (restart replays only past the
     * last COMMITTED offset), so those dirs are garbage; without this a
@@ -480,7 +471,7 @@ final class GraftLogCdfMicroBatchStream(
   private def reclaimBelow(threshold: Long): Unit = {
     val root = ckptDir.resolve("_graft_cdf")
     if (java.nio.file.Files.isDirectory(root)) {
-      useStream(java.nio.file.Files.list(root))(_.iterator.asScala.toList).foreach { d =>
+      Sinks.listDir(root).foreach { d =>
         val parts = d.getFileName.toString.split('_')
         val endV = parts.lift(1).flatMap(_.toLongOption)
           .orElse(parts.lastOption.flatMap(_.toLongOption))
@@ -531,8 +522,7 @@ final class GraftLogCdfMicroBatchStream(
     if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
       GraftLogStreamSource.alignedWindowChanges(spark, path, startV, endV, pinned)
         .write.mode("overwrite").parquet(dir.toString)
-    val files = useStream(java.nio.file.Files.list(dir))(_.iterator.asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq)
+    val files = Sinks.listDir(dir).map(_.toString).filter(_.endsWith(".parquet"))
     if (files.isEmpty) Array.empty
     else GraftSqlShim.parquetScan(spark, files, scanSchema, scanSchema,
       Array.empty).toBatch.planInputPartitions()

@@ -37,6 +37,12 @@ object GraftSqlShim {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Relations cached in the session's `CacheManager` (its entry count
+    * is `private[sql]`) — for asserting that an operator leaves no cache
+    * behind. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[ClassicSparkSession].sharedState.cacheManager.numCachedEntries
+
   /** A registered catalog plugin by name (`catalogManager` is
     * `private[sql]`). */
   def catalogPlugin(spark: SparkSession,

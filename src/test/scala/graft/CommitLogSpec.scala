@@ -706,6 +706,58 @@ class CommitLogSpec extends SparkSpec {
     intercept[Exception] { rows(0L, 1L) }
   }
 
+  test("a change window holding a rewrite, a dv commit and an append runs in two jobs") {
+    val t = freshTable("cdfjobs")
+    CommitLog.append(df(1L -> "a", 2L -> "b"), t)                      // v0
+    CommitLog.enableDv(t)                                               // v1
+    CommitLog.upsert(spark, df(2L -> "B", 3L -> "c"), t, Seq("id"))    // v2
+    CommitLog.dvDelete(spark, t, col("id") === 1L)                      // v3
+    CommitLog.append(df(4L -> "d"), t)                                  // v4
+    val feed = CommitLog.changes(spark, t, 0L, CommitLog.currentVersion(t))
+    val (rows, jobs) = jobsDuring(feed.collect())
+    assert(rows.map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version"),
+      r.getAs[Long]("id"), r.getAs[String]("v"))).toSet == Set(
+      ("delete", 2L, 2L, "b"), ("insert", 2L, 2L, "B"), ("insert", 2L, 3L, "c"),
+      ("delete", 3L, 1L, "a"), ("insert", 4L, 4L, "d")))
+    // the diff's shuffle stage and the result stage; the stamps ride the
+    // task closure, so no local frame is broadcast through a job of its own
+    assert(jobs <= 2, s"changes() collect ran $jobs jobs")
+  }
+
+  test("widening a change window to 200 files leaves the plan's size flat") {
+    import org.apache.spark.sql.execution.ExplainMode
+    val t = freshTable("cdfplan")
+    val staging = Paths.get(t, ".bulk")
+    Files.createDirectories(Paths.get(t))
+    spark.range(200)
+      .select(col("id"), col("id").as("pid"), concat(lit("r"), col("id")).as("v"))
+      .write.partitionBy("pid").parquet(staging.toString)
+    (0 until 200).foreach { i =>
+      val p = Files.list(staging.resolve(s"pid=$i")).iterator.asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(p, Paths.get(t, f"bulk-$i%03d.parquet"))
+      CommitLog.replaceFiles(t, Seq.empty, Seq(f"bulk-$i%03d.parquet"), None, op = "append")
+    }
+    CommitLog.upsert(spark, df(7L -> "R7"), t, Seq("id"))
+    val head = CommitLog.currentVersion(t)
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def shape(fromV: Long): (Int, Int, Int) = {
+      val feed = CommitLog.changes(spark, t, fromV, head)
+      val n = feed.collect().length
+      val plan = feed.queryExecution.executedPlan
+      // numbers (expression ids, counts) and the scan's abbreviated file
+      // listing vary between any two plans; what is left must not grow
+      val text = feed.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        .replaceAll("(?m)^Location: .*$", "Location").replaceAll("\\d+", "0")
+      (n, helper.collect(plan) { case p => p }.size, text.length)
+    }
+    val (narrowRows, narrowNodes, narrowChars) = shape(head - 2)
+    val (wideRows, wideNodes, wideChars) = shape(-1L)
+    assert(narrowRows == 3 && wideRows == 202, s"rows: $narrowRows, $wideRows")
+    assert(wideNodes == narrowNodes, s"executed plan nodes: 2 files $narrowNodes, 200 files $wideNodes")
+    assert(wideChars == narrowChars, s"explain length: 2 files $narrowChars, 200 files $wideChars")
+  }
+
   test("metadata-only min/max: exact from full zone coverage, undefined otherwise") {
     import spark.implicits._
     val t = freshTable("metaminmax")

@@ -136,32 +136,8 @@ class ConstraintSpec extends SparkSpec {
     CommitLog.append(df(1L -> 5L), plain)
     CommitLog.append(df(1L -> 5L), ck)
     CommitLog.addConstraint(spark, ck, "qty_pos", "qty > 0")
-    def jobsDuring(body: => Unit): Int = {
-      // count ONLY jobs tagged with this measurement's group id — a
-      // concurrent/background job (UI polling, another suite's leak)
-      // must never skew the comparison — and drain the listener bus
-      // instead of sleep-polling for delivery
-      val group = s"constraint-jobs-${java.util.UUID.randomUUID()}"
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          if (e.properties != null &&
-              group == e.properties.getProperty("spark.jobGroup.id"))
-            n.incrementAndGet()
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        spark.sparkContext.setJobGroup(group, "constraint job-count probe")
-        try body finally spark.sparkContext.clearJobGroup()
-        org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
-      } finally spark.sparkContext.removeSparkListener(l)
-      n.get
-    }
-    val plainJobs = jobsDuring(CommitLog.append(df(2L -> 3L), plain))
-    val checkedJobs = jobsDuring(CommitLog.append(df(2L -> 3L), ck))
+    val (_, plainJobs) = jobsDuring(CommitLog.append(df(2L -> 3L), plain))
+    val (_, checkedJobs) = jobsDuring(CommitLog.append(df(2L -> 3L), ck))
     assert(checkedJobs == plainJobs,
       s"constraint validation must ride the staging write, not run its own " +
         s"probe job: unconstrained=$plainJobs constrained=$checkedJobs")

@@ -41,29 +41,6 @@ class FooterSchemaSpec extends SparkSpec {
       s"$what: footer schema depends on the path order")
   }
 
-  /** Jobs started from this thread while `body` runs (job-group tagged,
-    * so jobs of other threads never count). */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val group = s"footer-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id"))
-          n.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(group, "footer job-count probe")
-      val out = try body finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private val corpus = Seq("customer", "documents", "embeddings", "events", "lineitem",
     "nation", "orders", "part", "region", "supplier")
 

@@ -49,6 +49,25 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("e3 reports: one aggregation equals the four crosstabs, and no crosstab stays cached") {
+    val cached = () => org.apache.spark.sql.GraftSqlShim.cachedEntries(spark)
+    val reports = TankInventory.reports(inv).collect()
+    val cachedBefore = cached()
+    for ((dim, name) <- Seq("county_key" -> "county", "state_key" -> "state");
+         percent <- Seq(false, true)) {
+      val tag = s"${name}_${if (percent) "pct" else "count"}"
+      val want = TankInventory.crosstab(spark, sf0001, dim, percent).collect()
+        .map(r => r.getInt(0) -> (1 to 5).map(i => r.get(i) match {
+          case n: java.lang.Long => n.toDouble
+          case x: java.lang.Double => x.toDouble
+        })).sortBy(_._1).toSeq
+      val got = reports.filter(_.getString(0) == tag)
+        .map(r => r.getInt(1) -> (2 to 6).map(r.getDouble)).sortBy(_._1).toSeq
+      assert(got == want, tag)
+    }
+    assert(cached() == cachedBefore, "a crosstab left a cached relation behind")
+  }
+
   test("e1 inventory: chip_names is a sorted list of this tile's chips") {
     val bad = inv.select(col("tile_id"), col("chip_names"))
       .collect().filter { r =>

@@ -30,6 +30,31 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` and counts the Spark jobs it started. Only jobs tagged
+    * with this measurement's job group count, so a concurrent or
+    * background job never skews it, and the listener bus is drained
+    * instead of sleep-polled for delivery. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val group = s"jobs-probe-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (e.properties != null &&
+            group == e.properties.getProperty("spark.jobGroup.id"))
+          n.incrementAndGet()
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, "job-count probe")
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Asserts that no writer left bytes behind in the commit-log table at
     * `table`: every data file, key bloom and vector sidecar (`.parquet`,
     * `.bloom`, `.dv-`, `.dvu-`) in its directory is named by some commit
