@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generic distributed connected components: frontier-based Hash-Min label
@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   * (`nbrMin`, `cand`) are left to AQE, which sizes them from runtime stats,
   * so a pathological expander graph degrades to a plain hash join instead
   * of an OOM. That safety depends on adaptive execution being on, which
-  * [[connectedComponents]] asserts up front.
+  * [[connectedComponents]] asserts up front. AQE's partition coalescing
+  * also sets each round's shuffle width from runtime sizes, so the
+  * operator writes no session conf.
   */
 object GraphCC {
 
@@ -58,38 +60,6 @@ object GraphCC {
     val edges = detachStats(pairs.select("key", "id_a", "id_b").unionByName(
         pairs.select(col("key"), col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint())
-
-    // Right-size the fixpoint's shuffles from the MEASURED graph size
-    // (guide §2: partitioning derived from input size, not a constant):
-    // every intermediate — the seed included — is O(|V| + |E|) rows of
-    // three ints, so at the session's full width each of the O(diameter)
-    // rounds pays (width × per-task overhead) regardless of data, which
-    // dominates the fixpoint on per-key-small graphs. Both sides are
-    // counted (|E| from the just-checkpointed edge table, |V| from the
-    // vertex projection — dedup graphs are isolated-vertex-heavy, so an
-    // |E|-only width would under-size the label-table join at scale);
-    // ~64k rows per partition, ceiling = the session width — this only
-    // ever SHRINKS. The conf is session-global: restored in `finally`.
-    // SINGLE-THREADED-SESSION ASSUMPTION (ADVICE r15): Bench/Verify run
-    // queries sequentially, so no concurrent query can observe the
-    // narrowed width or clobber the restore; a server embedding this
-    // operator under concurrent queries should run it in spark.newSession.
-    val graphRows = math.max(edges.count(), vertices.count())
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    val loopParts = math.max(1L, math.min(prevParts.toLong,
-      (graphRows + 65535L) / 65536L))
-    spark.conf.set(partsKey, loopParts.toString)
-    try connectedComponentsLoop(spark, vertices, edges, maxIter, broadcastThreshold)
-    finally spark.conf.set(partsKey, prevParts)
-  }
-
-  private def connectedComponentsLoop(spark: SparkSession,
-                                      vertices: DataFrame, edges: DataFrame,
-                                      maxIter: Int,
-                                      broadcastThreshold: Long): DataFrame = {
-    import org.apache.spark.sql.GraftSqlShim.detachStats
-
     // Seed round = round 1 of Hash-Min: comp(v) = min(v, min neighbor id).
     // The neighbor-min aggregation is inlined into the seed join — no
     // separate materialization: its size is unknown, so join strategy is

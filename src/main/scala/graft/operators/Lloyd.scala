@@ -32,13 +32,15 @@ import org.apache.spark.sql.functions._
   * (That equivalence is what lets a fixed-depth unrolled SQL oracle check
   * a convergence-stopped run: surplus oracle iterations are no-ops.)
   *
-  * Scale shape: per iteration, ONE narrow pass over the corpus (broadcast
-  * k×d milli-centroid table, fused zip_with distance, argmin window keyed
-  * by vec_id) and ONE (centroid, dim)-keyed aggregation of k·d cells with
-  * map-side partials; the driver materializes only k·d longs per round.
-  * No shuffle grows with corpus size. The `.collect()` is the k·d centroid
-  * state (≤ a few thousand values) — the documented driver-side index-build
-  * loop, not a data collect. */
+  * Scale shape (MLlib KMeans's): the `qvec` scan is planned ONCE, and
+  * each round is ONE `treeAggregate` over it whose closure carries that
+  * round's k×d milli-centroids and folds dense per-partition partials —
+  * k counts and k·d sums — so no shuffle grows with corpus size and the
+  * driver materializes only k·(d+1) longs per round. A round runs no
+  * Catalyst query, no codegen and no encoder; the loop is one job per
+  * round plus the seed collect. The k·d centroid state (≤ a few thousand
+  * values) is the documented driver-side index-build loop, not a data
+  * collect. */
 object Lloyd {
 
   /** Final trainer state: centroid ids with their milli-precision
@@ -82,63 +84,68 @@ object Lloyd {
     require(seeds.length == k,
       s"expected $k seed vectors with vec_id < $k, found ${seeds.length}")
     val ids = seeds.map(_._1)
+    require(k > 0 && ids.distinct.length == k,
+      s"expected $k > 0 distinct seed vec_ids, got ${ids.mkString(", ")}")
+    val d = seeds.head._2.length
+    require(seeds.forall(_._2.length == d),
+      s"seed vectors differ in length: ${seeds.map(_._2.length).distinct.mkString(", ")}")
     var cent: Array[Array[Long]] = seeds.map(_._2.map(_.toLong * 1000L).toArray)
     var lastUpd = Map.empty[(Long, Int), (Long, Long)]
     var it = 0
     var converged = false
-    // Right-size the per-round shuffle: map-side partials collapse each
-    // input partition to <= k·d cells, so the reduce side carries
-    // (input partitions × k·d) tiny rows — width derived from the INPUT
-    // partitioning (≈ one reduce task per 8 map partitions), never wider
-    // than the session setting. A gate-scale coalesced corpus trains at
-    // width 1 instead of paying the full session width per round; a
-    // 10⁹-vector corpus keeps proportional width. Restored in finally.
-    // SINGLE-THREADED-SESSION ASSUMPTION (ADVICE r15): Bench/Verify run
-    // queries sequentially; a concurrent-query embedding should train
-    // inside spark.newSession instead.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    val loopParts = math.max(1, math.min(prevParts.toInt,
-      qvecs.rdd.getNumPartitions / 8 + 1))
-    spark.conf.set(partsKey, loopParts.toString)
-    try {
-    // NOTE on shape: each round is ONE narrow pass — the per-row argmin
-    // runs inside whole-stage codegen via the native
-    // [[graft.plans.NearestCentroidMilli]] expression (the centroid table
-    // rides along as k·d longs of expression state), so nothing joins and
-    // the only shuffle is the k·d-cell centroid update with map-side
-    // partials. The earlier composed form (broadcast crossJoin +
-    // interpreted HOF distance + groupBy(vec_id) argmin) re-shuffled the
-    // WHOLE CORPUS once per round — vec_id is unique, so partial
-    // aggregation collapsed nothing — which is a per-round corpus-sized
-    // exchange at 10⁹ vectors and was 3× the gate cost at bench scale.
-    // Assignment parallelism follows the input partitioning: a 10⁹-vector
-    // corpus keeps its partitioning, gate-scale tables coalesce to one.
+    // planned once: every round re-runs this RDD, never a new query
+    val scan = qvecs.select("qvec").queryExecution.toRdd
     while (it < maxIters && !converged) {
-      val nearest = org.apache.spark.sql.GraftSqlShim.column(
-        graft.plans.NearestCentroidMilli(
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("qvec"), ids, cent))
-      val upd = qvecs
-        .select(nearest.getField("centroid_id").as("centroid_id"),
-          posexplode(col("qvec")).as(Seq("dim", "qx")))
-        .groupBy("centroid_id", "dim")
-        .agg(count(lit(1)).as("n"), sum(col("qx").cast("long")).as("s"))
-        .as[(Long, Int, Long, Long)].collect()
-      lastUpd = upd.map { case (cid, dim, n, s) => (cid, dim) -> (n, s) }.toMap
-      val next = ids.zip(cent).map { case (id, c) =>
-        c.indices.map { dim =>
-          lastUpd.get((id, dim)) match {
-            // exact round-half-up of 1000·s/n: floor((2000s + n) / 2n)
-            case Some((n, s)) => Math.floorDiv(2000L * s + n, 2L * n)
-            case None => c(dim) // empty cluster: carry the old centroid
+      val c = cent
+      // per centroid: n assigned, then Σqx per dim (k + k·d dense longs)
+      val (n, s) = scan.treeAggregate((new Array[Long](k), new Array[Long](k * d)))(
+        { case (acc @ (ns, ss), row) =>
+          if (!row.isNullAt(0)) { // a null vector joins no cluster
+            val q = row.getArray(0)
+            if (q.numElements() != d) throw new IllegalArgumentException(
+              s"Lloyd: vector has ${q.numElements()} dims, centroids have $d")
+            // argmin under exact integer L2; only a strict improvement
+            // wins, so ties go to the lowest (ascending) centroid id
+            var best = 0
+            var bestD = Long.MaxValue
+            var j = 0
+            while (j < k) {
+              val cm = c(j)
+              var dist = 0L
+              var i = 0
+              while (i < d) {
+                val v = 1000L * q.getInt(i) - cm(i)
+                dist += v * v
+                i += 1
+              }
+              if (dist < bestD) { bestD = dist; best = j }
+              j += 1
+            }
+            ns(best) += 1
+            var i = 0
+            while (i < d) { ss(best * d + i) += q.getInt(i); i += 1 }
           }
-        }.toArray
+          acc
+        },
+        { case (acc @ (ns, ss), (ns2, ss2)) =>
+          var i = 0
+          while (i < k) { ns(i) += ns2(i); i += 1 }
+          i = 0
+          while (i < k * d) { ss(i) += ss2(i); i += 1 }
+          acc
+        })
+      lastUpd = (for (j <- 0 until k if n(j) > 0; dim <- 0 until d)
+        yield (ids(j), dim) -> (n(j), s(j * d + dim))).toMap
+      // exact round-half-up of 1000·s/n: floor((2000s + n) / 2n); an
+      // empty cluster carries its old centroid
+      val next = Array.tabulate(k) { j =>
+        if (n(j) == 0) c(j)
+        else Array.tabulate(d)(dim => Math.floorDiv(2000L * s(j * d + dim) + n(j), 2L * n(j)))
       }
       it += 1
       converged = next.zip(cent).forall { case (a, b) => java.util.Arrays.equals(a, b) }
       cent = next
     }
-    } finally spark.conf.set(partsKey, prevParts)
     Trained(ids, cent, lastUpd, it, converged)
   }
 }

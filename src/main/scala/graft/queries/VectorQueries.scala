@@ -679,8 +679,8 @@ object VectorQueries {
     * all-integer loop; `LloydSpec` pins it explicitly. */
   private val v15bLloydCentroids: Q = (spark, dir) => {
     import spark.implicits._
-    // gate-scale corpus is tiny: one partition makes each Lloyd round a
-    // ~3-task job (Lloyd.train's parallelism note)
+    // gate-scale corpus is tiny: one cached partition makes each Lloyd
+    // round a one-task job over the cache
     val qvecs = quantizedVecs(Tables.embeddings(spark, dir)).coalesce(1).cache()
     try {
       val trained = graft.operators.Lloyd.train(spark, qvecs, k = 8, maxIters = LloydIters)
@@ -909,10 +909,10 @@ object VectorQueries {
 
   private val d13SemanticDedup: Q = (spark, dir) => {
     // cells feeds THREE consumers (pair join, CC vertex set, final join)
-    // plus GraphCC's vertex count — checkpointing materializes the
-    // crossJoin × window subtree once AND flattens the lineage each
-    // consumer re-plans (the uncheckpointed form re-planned the whole
-    // subtree per consumer; A/B r16: 2.63 -> 1.52 s min-of-3).
+    // — checkpointing materializes the crossJoin × window subtree once
+    // AND flattens the lineage each consumer re-plans (the uncheckpointed
+    // form re-planned the whole subtree per consumer; A/B r16: 2.63 ->
+    // 1.52 s min-of-3).
     // Fault tolerance: localCheckpoint keeps the blocks on the executors
     // that computed them and drops the lineage, so losing one of those
     // executors fails the query instead of recomputing the cells — the

@@ -52,6 +52,14 @@ class GraphCCSpec extends SparkSpec {
     assert(got == Map(("k", 5L) -> 5L, ("k", 7L) -> 7L))
   }
 
+  test("a one-edge graph runs within its job budget") {
+    // edge checkpoint, then two rounds' AQE stages; no graph-size pre-count
+    import spark.implicits._
+    val (_, jobs) = jobsDuring(GraphCC.connectedComponents(
+      Seq(("k", 1L), ("k", 2L)).toDF("key", "id"), Seq(("k", 1L, 2L)).toDF("key", "id_a", "id_b")))
+    assert(jobs <= 12, s"connectedComponents ran $jobs jobs")
+  }
+
   test("non-broadcast fallback path (threshold 0) produces identical labels") {
     import spark.implicits._
     // a mix of chains, stars, and isolated vertices across keys

@@ -78,6 +78,30 @@ class LloydSpec extends SparkSpec {
     assert(empties.nonEmpty, "fixture should drain at least one cluster")
   }
 
+  test("a round is one job: seed collect plus one per round") {
+    val (t, jobs) = jobsDuring(
+      Lloyd.train(spark, qvecs(240, 4, 8).coalesce(1), k = 4, maxIters = 8))
+    assert(t.iterations > 1)
+    assert(jobs == 1 + t.iterations, s"${t.iterations} rounds ran $jobs jobs")
+  }
+
+  test("a vector whose length differs from the centroids' fails naming both lengths") {
+    val bad = qvecs(40, 4, 8).union(Seq((99L, Seq(1, 2, 3))).toDF("vec_id", "qvec"))
+    val e = intercept[Exception](Lloyd.train(spark, bad, k = 4, maxIters = 2))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(c =>
+      c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("vector has 3 dims, centroids have 8")), e)
+  }
+
+  test("a row with a null qvec joins no cluster") {
+    val base = qvecs(240, 4, 8)
+    val withNull = base.union(Seq((999L, null: Seq[Int])).toDF("vec_id", "qvec"))
+    val t = Lloyd.train(spark, withNull, k = 4, maxIters = 8)
+    val ref = Lloyd.train(spark, base, k = 4, maxIters = 8)
+    assert(t.lastUpdate == ref.lastUpdate && t.iterations == ref.iterations)
+    assert(t.centroidsMilli.zip(ref.centroidsMilli).forall { case (a, b) => a.sameElements(b) })
+  }
+
   test("trained centroid frame serves exact cm/1000 doubles") {
     val t = Lloyd.train(spark, qvecs(80, 4, 8), k = 4, maxIters = 8)
     val served = t.centroidFrame(spark)
