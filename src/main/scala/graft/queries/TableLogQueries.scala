@@ -420,8 +420,8 @@ object TableLogQueries {
       |FROM orders WHERE o_orderkey BETWEEN 0 AND 300""".stripMargin
 
   // ------------------------------------------------------------------ tl10: streaming read
-  /** tl10: the commit log as a Structured-Streaming SOURCE
-    * ([[graft.sources.GraftLogStreamSource]]) — offsets are log versions,
+  /** tl10: the commit log as a Structured-Streaming SOURCE (the snapshot
+    * stream, [[graft.sources.GraftLogMicroBatchStream]]) — offsets are log versions,
     * each micro-batch delivers exactly one commit's files
     * (`maxVersionsPerTrigger=1`), compaction commits deliver nothing (the
     * stream must not re-deliver rewritten rows), and `Trigger.AvailableNow`
@@ -1710,9 +1710,9 @@ object TableLogQueries {
 
   /** tl25b: identifier-surface CDF STREAMING — the `.changes` metadata
     * table (`spark.readStream.table("graft.ns.t.changes")`, the
-    * Iceberg-metadata-table shape): the V2 micro-batch stream serves each
-    * offset window's [[CommitLog.changes]] as a native columnar scan of
-    * a per-window materialization under the checkpoint. Same protocol as
+    * Iceberg-metadata-table shape): the relation's V1 fallback table plans
+    * the path form's change-feed source, which serves each offset window's
+    * [[CommitLog.changes]] as the batch's DataFrame. Same protocol as
     * tl25's path form: drain, run DML mid-stream (REQUIREd incremental),
     * drain, and the accumulated feed must multiset-equal the batch
     * `changes()` twin — plus the BATCH identifier surface (`spark.read

@@ -14,8 +14,7 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, Suppo
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, InsertableRelation, StreamSinkProvider, StreamSourceProvider, TableScan}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, InsertableRelation, StreamSourceProvider, TableScan}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -73,7 +72,7 @@ import graft.io.CommitLog
   * would otherwise open).
   */
 class GraftLogDataSource extends TableProvider with DataSourceRegister
-    with StreamSourceProvider with StreamSinkProvider {
+    with StreamSourceProvider {
 
   override def shortName(): String = "graftlog"
 
@@ -87,13 +86,15 @@ class GraftLogDataSource extends TableProvider with DataSourceRegister
     GraftLogDataSource.consumeCached(properties)
 
   // ------------------------------------------------------------------ streaming read
-  // `spark.readStream.format("graftlog")` reaches these through Spark's V1
-  // streaming-source fallback whenever the V2 table withholds
-  // MICRO_BATCH_READ (see `capabilities()`): a table with live deletion
-  // vectors, the path form with `readChangeFeed`, and a pinned or missing
-  // snapshot (which `resolveForStream` refuses by name). A live table with
-  // no deletion vectors streams through [[GraftLogMicroBatchStream]], and
-  // the `.changes` identifier through [[GraftLogCdfMicroBatchStream]].
+  // `spark.readStream.format("graftlog")` resolves `sourceSchema` eagerly
+  // for every path-form stream, so `resolveForStream` is where a pinned or
+  // missing snapshot is refused at analysis. The V1 source itself serves
+  // change feeds only: the path form with `readChangeFeed` (whose relation
+  // withholds MICRO_BATCH_READ) and the `.changes` identifier (through its
+  // V1 fallback table, [[GraftLogDataSource.resolveChanges]]). A snapshot
+  // stream plans the V2 [[GraftLogMicroBatchStream]] from the table's scan.
+  // Streaming writes plan the V2 [[GraftLogStreamingWrite]]; a relation
+  // without STREAMING_WRITE (a change feed) has no sink to fall back to.
 
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
                             providerName: String,
@@ -106,48 +107,15 @@ class GraftLogDataSource extends TableProvider with DataSourceRegister
                             parameters: Map[String, String]): org.apache.spark.sql.execution.streaming.Source = {
     val t = GraftLogDataSource.resolveForStream(parameters)
     val opts = parameters.map { case (k, v) => k.toLowerCase -> v }
+    require(opts.get("readchangefeed").exists(_.toBoolean),
+      s"graftlog: the V1 stream source serves change feeds only; a snapshot " +
+        s"stream of ${t.path} plans the V2 micro-batch stream")
     new GraftLogStreamSource(
       ctx.sparkSession, t.path,
       schema.getOrElse(t.schema0),
-      mergeSchema = t.mergeSchema,
-      changeFeed = opts.get("readchangefeed").exists(_.toBoolean),
-      ignoreChanges = opts.get("ignorechanges").exists(_.toBoolean),
       startingVersion = GraftLogDataSource.streamStartVersion(t.path, opts)
         .getOrElse(0L),
       maxVersionsPerTrigger = GraftLogDataSource.maxVersionsPerTrigger(opts))
-  }
-
-  // ------------------------------------------------------------------ streaming write
-  /** `df.writeStream.format("graftlog")` — exactly-once micro-batch
-    * appends (txn-marked, replay-skipped) or Complete-mode atomic
-    * replaces; see [[GraftLogStreamSink]]. */
-  override def createSink(ctx: SQLContext, parameters: Map[String, String],
-                          partitionColumns: Seq[String],
-                          outputMode: OutputMode): org.apache.spark.sql.execution.streaming.Sink = {
-    val opts = parameters.map { case (k, v) => k.toLowerCase -> v }
-    val path = opts.getOrElse("path", throw new IllegalArgumentException(
-      "graftlog sink requires a path: .writeStream.format(\"graftlog\").start(\"/table/dir\")"))
-    require(partitionColumns.isEmpty,
-      "graftlog sink does not support partitionBy — cluster with CommitLog.appendClustered instead")
-    val complete = outputMode == OutputMode.Complete()
-    require(complete || outputMode == OutputMode.Append(),
-      s"graftlog sink supports Append (txn-exact appends) and Complete " +
-        s"(atomic replace) output modes, got $outputMode")
-    // query identity for the txn markers: explicit txnAppId, else the
-    // checkpoint location (stable across restarts, distinct per query).
-    // A path-derived constant is REFUSED: two distinct queries (or a
-    // restart with a fresh temp checkpoint, whose batchIds restart at 0)
-    // would share one txn identity, and their batches 0..N would be
-    // silently skipped as replays of each other's — silent data loss.
-    val txnPrefix = opts.get("txnappid")
-      .orElse(opts.get("checkpointlocation"))
-      .getOrElse(throw new IllegalArgumentException(
-        "graftlog sink needs a stable query identity for exactly-once txn " +
-          "markers: set option(\"txnAppId\", ...) or a durable " +
-          "option(\"checkpointLocation\", ...). A temp checkpoint restarts " +
-          "batchIds at 0, so a path-derived fallback would skip a fresh " +
-          "run's batches as replays of the previous run's."))
-    new GraftLogStreamSink(path, txnPrefix, complete)
   }
 }
 
@@ -168,30 +136,9 @@ private[graft] final class GraftLogNativeScan(
     streamOpts: Map[String, String] = Map.empty)
     extends Scan with SupportsReportStatistics {
 
-  /** `spark.readStream.table(...)` / any MICRO_BATCH_READ route — the
-    * native streaming read ([[GraftLogMicroBatchStream]]); reader options
-    * (`startingVersion`, `maxVersionsPerTrigger`, `ignoreChanges`) arrive
-    * through the scan builder's option map. */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // the snapshot table's V2 micro-batch form is a FILE stream (per-batch
-    // parquet scans), and a reader OPTION cannot add the CDF columns to a
-    // catalog table's analysis-time schema — refuse here rather than
-    // silently streaming snapshot rows to a caller who asked for changes,
-    // and point at the two surfaces that DO serve change-row streams
-    require(!streamOpts.get("readchangefeed").exists(_.toBoolean),
-      "graftlog: readChangeFeed does not apply to a snapshot-table stream " +
-        "— stream changes via the `.changes` metadata table " +
-        "(spark.readStream.table(\"<cat>.<ns>.<t>.changes\")) or the path " +
-        "form (spark.readStream.format(\"graftlog\")" +
-        ".option(\"readChangeFeed\", true).load(dir))")
-    new GraftLogMicroBatchStream(
-      SparkSession.active, path, tableSchema, req, filters,
-      ignoreChanges = streamOpts.get("ignorechanges").exists(_.toBoolean),
-      startingVersion = GraftLogDataSource.streamStartVersion(path, streamOpts)
-        .getOrElse(0L),
-      maxVersionsPerTrigger = GraftLogDataSource.maxVersionsPerTrigger(streamOpts))
-  }
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    GraftLogDataSource.snapshotStream(path, tableSchema, req, filters, streamOpts)
 
   /** Spark's own V2 parquet scan over the pruned file list; built lazily
     * at first planning use (one driver-side file-status listing). The
@@ -274,12 +221,13 @@ object GraftLogDataSource {
 
   /** A resolved snapshot: table path + pinned version + read options.
     * `snapshotVersion == -1` marks a not-yet-created table — write-only
-    * (the first append/overwrite creates it), accepting any schema. */
-  final case class GraftLogTable(path: String, snapshotVersion: Long,
-                                 mergeSchema: Boolean, timeTravel: Boolean,
-                                 schema0: StructType,
-                                 changeFeed: Option[(Long, Long)] = None,
-                                 cdfStream: Boolean = false)
+    * (the first append/overwrite creates it), accepting any schema. Not
+    * final: the `.changes` relation adds its V1 fallback table
+    * ([[resolveChanges]]). */
+  case class GraftLogTable(path: String, snapshotVersion: Long,
+                           mergeSchema: Boolean, timeTravel: Boolean,
+                           schema0: StructType,
+                           changeFeed: Option[(Long, Long)] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -357,22 +305,9 @@ object GraftLogDataSource {
           org.apache.spark.sql.connector.expressions.Expressions.bucket(b, c)
       }.toArray
     override def capabilities(): util.Set[TableCapability] =
-      if (isCdf && cdfStream) // the `.changes` metadata table: batch +
-        // micro-batch change-row streaming, still read-only
-        util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-      else if (isCdf) // a change feed is a derived, read-only relation
+      if (isCdf) // a change feed is a derived, read-only relation; it
+        // streams through the V1 change-feed source, not MICRO_BATCH_READ
         util.EnumSet.of(TableCapability.BATCH_READ)
-      else if (exists && !timeTravel &&
-          CommitLog.dvFor(path, Some(snapshotVersion)).nonEmpty)
-        // LIVE deletion vectors: the native micro-batch stream plans raw
-        // file partitions and would over-deliver suppressed rows, so the
-        // capability is withheld — `readStream.format("graftlog")` then
-        // routes to the V1 source, whose initial-snapshot batch applies
-        // the vectors per-task (a fresh stream on a checkpointed vectored
-        // table stays ∝ live data). Batch + write surfaces are unchanged.
-        util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-          TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
-          TableCapability.STREAMING_WRITE)
       else if (exists && !timeTravel)
         util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
           TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
@@ -393,11 +328,10 @@ object GraftLogDataSource {
       // the change-feed relation: a derived computation (per-commit
       // multiset diffs), served through the V1 bridge — the diff itself
       // is a full distributed Catalyst plan; only the hand-off is V1.
-      // The `.changes` metadata-table form ALSO serves micro-batch
-      // streaming ([[GraftLogCdfMicroBatchStream]]), and its batch window
-      // is re-pinned from reader options (the path form folded its
-      // options into the pinned window at resolve; re-deriving here from
-      // the same options is identical).
+      // The `.changes` metadata-table form re-pins its batch window from
+      // reader options (the path form folded its options into the pinned
+      // window at resolve; re-deriving here from the same options is
+      // identical).
       changeFeed.foreach { case (fromV0, toV0) =>
         val opts = options.asCaseSensitiveMap().asScala
           .map { case (k, v) => k.toLowerCase -> v }.toMap
@@ -440,35 +374,11 @@ object GraftLogDataSource {
                 override def sqlContext: SQLContext = context
                 override def schema: StructType = schema0
                 override def buildScan(): RDD[Row] =
-                  GraftLogStreamSource.alignToPinned(path,
+                  CommitLog.alignToPinned(path,
                       CommitLog.changes(context.sparkSession, path, fromV, toV),
                       schema0, Some(toV))
                     .rdd
               }.asInstanceOf[T]
-
-            /** `spark.readStream.table("graft.ns.t.changes")`: change-row
-              * micro-batch streaming through the catalog identifier — the
-              * stream follows the LIVE log from `startingVersion`
-              * (default 0, the whole history), so the pinned batch window
-              * does not apply and `endingVersion` is refused. */
-            override def toMicroBatchStream(checkpointLocation: String)
-                : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-              require(cdfStream,
-                "graftlog: this change-feed relation is batch-only — " +
-                  "stream changes via readStream.table(\"<cat>.<ns>.<t>.changes\") " +
-                  "or the path form readStream.format(\"graftlog\")" +
-                  ".option(\"readChangeFeed\", true).load(dir)")
-              require(!opts.contains("endingversion") &&
-                  !opts.contains("endingtimestamp"),
-                "graftlog: endingVersion/endingTimestamp are batch CDF " +
-                  "options — a change-feed stream follows the live log " +
-                  "(stop the query to bound it)")
-              new GraftLogCdfMicroBatchStream(SparkSession.active, path,
-                schema0, checkpointLocation,
-                startingVersion = GraftLogDataSource
-                  .streamStartVersion(path, opts).getOrElse(0L),
-                maxVersionsPerTrigger = GraftLogDataSource.maxVersionsPerTrigger(opts))
-            }
           }
         }
       }
@@ -591,7 +501,7 @@ object GraftLogDataSource {
               val fsSet = fs.toSet
               val dvSc = dvd.filter { case (f, _) => fsSet(f) }
               new GraftDvNativeScan(path, snapshotVersion, schema0,
-                required, pushed, fs, dvSc)
+                required, pushed, fs, dvSc, streamOpts)
             } else new GraftLogNativeScan(path, snapshotVersion, schema0, required,
               pushed, fs, streamOpts)
         }
@@ -707,10 +617,9 @@ object GraftLogDataSource {
               }
             }
           /** `df.writeStream.toTable(...)` and every STREAMING_WRITE
-            * route: exactly-once txn-marked epoch commits, identity
-            * convention shared with the V1 sink (txnAppId, else the
-            * checkpoint location) so both surfaces' markers interop;
-            * Complete mode (truncate) = atomic replacement per epoch. */
+            * route: exactly-once txn-marked epoch commits (identity:
+            * txnAppId, else the checkpoint location); Complete mode
+            * (truncate) = atomic replacement per epoch. */
           override def toStreaming
               : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
             // last resort is the streaming QUERY id — persisted in the
@@ -1151,12 +1060,21 @@ object GraftLogDataSource {
   /** The `.changes` METADATA TABLE (Iceberg-style `ns.t.changes`
     * identifier): the table's change data feed as a read-only relation —
     * batch (window re-pinned from `startingVersion`/`endingVersion`
-    * reader options; default the full history) AND micro-batch streaming
+    * reader options; default the full history) AND streaming
     * (`spark.readStream.table("cat.ns.t.changes")`). The schema is the
     * head snapshot's plus `_change_type`/`_commit_version`. This is the
     * identifier-surface twin of the path form's `readChangeFeed` option —
     * an OPTION cannot add columns to a catalog table's analysis-time
-    * schema, a metadata IDENTIFIER can. */
+    * schema, a metadata IDENTIFIER can.
+    *
+    * The relation withholds MICRO_BATCH_READ and carries a V1 fallback
+    * table naming the path form with `readChangeFeed`, so its stream is
+    * the same [[GraftLogStreamSource]] the path form plans (and
+    * `resolveForStream` refuses the same options on both). Only this
+    * relation carries the fallback: Spark builds the V1 streaming relation
+    * eagerly for every table that has one. The fallback's identifier
+    * carries a database and its location stays unset — a location would
+    * reach `createSource` as a `file:` URI instead of the table path. */
   def resolveChanges(path: String): GraftLogTable = {
     val head = CommitLog.currentVersion(path)
     require(head >= 0,
@@ -1167,8 +1085,20 @@ object GraftLogDataSource {
       .add("_change_type", org.apache.spark.sql.types.StringType)
       .add("_commit_version", LongType)
       .add("_commit_timestamp", org.apache.spark.sql.types.TimestampType)
-    GraftLogTable(path, head, mergeSchema = false, timeTravel = false,
-      cdfSchema, changeFeed = Some((-1L, head)), cdfStream = true)
+    new GraftLogTable(path, head, mergeSchema = false, timeTravel = false,
+        cdfSchema, changeFeed = Some((-1L, head)))
+        with org.apache.spark.sql.GraftV1FallbackTable {
+      override def v1Table: org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+        import org.apache.spark.sql.catalyst.catalog._
+        CatalogTable(
+          identifier = org.apache.spark.sql.catalyst.TableIdentifier("changes", Some(this.path)),
+          tableType = CatalogTableType.EXTERNAL,
+          storage = CatalogStorageFormat.empty.copy(
+            properties = Map("path" -> this.path, "readChangeFeed" -> "true")),
+          schema = schema0,
+          provider = Some("graftlog"))
+      }
+    }
   }
 
   /** Resolution for the STREAMING read path: the table must exist (a
@@ -1214,10 +1144,10 @@ object GraftLogDataSource {
     t
   }
 
-  /** Streaming start resolution, shared by every stream surface (the V1
-    * path source, the V2 snapshot micro-batch, the `.changes` identifier
-    * stream): an explicit `startingVersion`, or `startingTimestamp`
-    * resolved to the FIRST commit at or after that moment
+  /** Streaming start resolution, shared by both stream readers (the V1
+    * change-feed source and the V2 snapshot micro-batch stream): an
+    * explicit `startingVersion`, or `startingTimestamp` resolved to the
+    * FIRST commit at or after that moment
     * ([[CommitLog.versionFrom]] — the Delta streaming contract); the two
     * are mutually exclusive. None when neither is given (caller defaults
     * to 0, the whole history). Keys arrive lowercased. */
@@ -1236,8 +1166,8 @@ object GraftLogDataSource {
       CommitLog.versionFrom(path, parseTs(ts))))
   }
 
-  /** The `maxVersionsPerTrigger` reader option, shared by every stream
-    * surface: at most this many commits per micro-batch (the stream's
+  /** The `maxVersionsPerTrigger` reader option, shared by both stream
+    * readers: at most this many commits per micro-batch (the stream's
     * [[VersionPacer]] refuses a count below 1). Keys arrive lowercased. */
   private[sources] def maxVersionsPerTrigger(opts: Map[String, String]): Option[Long] =
     opts.get("maxversionspertrigger").map { v =>
@@ -1247,6 +1177,28 @@ object GraftLogDataSource {
           s"graftlog: maxVersionsPerTrigger must be a positive count, got '$v'", e)
       }
     }
+
+  /** The snapshot stream behind both native scans' `toMicroBatchStream`
+    * (`spark.readStream.table(...)` and every other MICRO_BATCH_READ
+    * route); reader options (`startingVersion`, `maxVersionsPerTrigger`,
+    * `ignoreChanges`) arrive through the scan builder's option map. A
+    * reader OPTION cannot add the CDF columns to a catalog table's
+    * analysis-time schema, so `readChangeFeed` is refused here rather than
+    * silently streaming snapshot rows to a caller who asked for changes. */
+  private[sources] def snapshotStream(path: String, tableSchema: StructType,
+                                      required: StructType, filters: Array[Filter],
+                                      opts: Map[String, String]): GraftLogMicroBatchStream = {
+    require(!opts.get("readchangefeed").exists(_.toBoolean),
+      "graftlog: readChangeFeed does not apply to a snapshot-table stream " +
+        "— stream changes via the `.changes` metadata table " +
+        "(spark.readStream.table(\"<cat>.<ns>.<t>.changes\")) or the path " +
+        "form (spark.readStream.format(\"graftlog\")" +
+        ".option(\"readChangeFeed\", true).load(dir))")
+    new GraftLogMicroBatchStream(path, tableSchema, required, filters,
+      ignoreChanges = opts.get("ignorechanges").exists(_.toBoolean),
+      startingVersion = streamStartVersion(path, opts).getOrElse(0L),
+      maxVersionsPerTrigger = maxVersionsPerTrigger(opts))
+  }
 
   /** Epoch millis, an ISO-8601 instant, or an ISO local date-time/date
     * (interpreted as UTC, the engine's session zone). */

@@ -594,7 +594,8 @@ private final class GraftDeltaWriter(
 private[sources] final class GraftDvNativeScan(
     path: String, version: Long, tableSchema: StructType,
     required: StructType, filters: Array[Filter], fileNames: Seq[String],
-    dvs: Map[String, (String, Long)] = Map.empty)
+    dvs: Map[String, (String, Long)] = Map.empty,
+    streamOpts: Map[String, String] = Map.empty)
     extends org.apache.spark.sql.connector.read.Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -693,15 +694,12 @@ private[sources] final class GraftDvNativeScan(
           mapping, required, dataFields.length)
     }
 
-  /** A vectored snapshot cannot seed a stream: its micro-batches replay
-    * the log, which has no way to re-suppress already-served rows when a
-    * later vector lands. Same contract as the previous fallback. */
+  /** A vectored (or row-identity) table streams like any other: the
+    * snapshot stream applies the live vectors to its initial-snapshot
+    * batch and refuses later vector commits without `ignoreChanges`. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    throw new IllegalStateException(
-      s"graftlog: cannot snapshot-stream $path while it has live " +
-        "deletion vectors — CALL graft.system.compact(...) to " +
-        "materialize them first")
+    GraftLogDataSource.snapshotStream(path, tableSchema, required, filters, streamOpts)
 }
 
 private[sources] final case class GraftDvInputPartition(

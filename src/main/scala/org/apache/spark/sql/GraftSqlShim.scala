@@ -90,16 +90,6 @@ object GraftSqlShim {
       ds.queryExecution.toRdd, ds.schema, isStreaming = true)
   }
 
-  /** The inverse of [[asStreamingBatch]]: re-flag the micro-batch frame a
-    * V1 `Sink.addBatch` receives (still marked streaming, so batch writes
-    * refuse it) as a plain batch frame over the same rows — the sink-side
-    * idiom Spark's own sinks use before handing data to a batch writer. */
-  def asBatchFrame(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[ClassicDataset[Row]]
-    ds.sparkSession.internalCreateDataFrame(
-      ds.queryExecution.toRdd, ds.schema, isStreaming = false)
-  }
-
   /** Spark's own V2 parquet scan over an explicit file list — the native
     * (columnar, whole-stage-codegen) batch read the graftlog DataSource
     * delegates to. The session's internal state (`sessionState`,
@@ -169,6 +159,11 @@ object GraftSqlShim {
       new org.apache.spark.util.SerializableConfiguration(job.getConfiguration), schema)
   }
 }
+
+/** A V2 table that streams through a V1 source: Spark plans the
+  * `CatalogTable` it names when the table withholds MICRO_BATCH_READ
+  * (`V2TableWithV1Fallback` is `private[sql]`). */
+trait GraftV1FallbackTable extends org.apache.spark.sql.connector.catalog.V2TableWithV1Fallback
 
 /** Serializable row predicate built by [[GraftSqlShim.rowCheck]]; `ok`
   * is called per row on executors (codegen'd predicate, interpreted

@@ -8,12 +8,16 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.CommitLog
 
-/** The commit log as a Structured-Streaming SOURCE
-  * ([[graft.sources.GraftLogStreamSource]]): offsets are log versions,
-  * batches deliver exactly the committed files, compactions deliver
-  * nothing, update commits fail loudly without `ignoreChanges`, rate
-  * limiting bounds commits per trigger, and a checkpointed restart
-  * resumes exactly where the offset log says — never re-delivering. */
+/** The commit log as a Structured-Streaming source and sink. Snapshot
+  * streams (path form, catalog identifier, vectored or not) run on the V2
+  * [[graft.sources.GraftLogMicroBatchStream]]; change feeds (path form
+  * with `readChangeFeed`, the `.changes` identifier) on the V1
+  * [[graft.sources.GraftLogStreamSource]]; writes on the V2
+  * `GraftLogStreamingWrite`. Offsets are log versions, batches deliver
+  * exactly the committed files, compactions deliver nothing, update
+  * commits fail loudly without `ignoreChanges`, rate limiting bounds
+  * commits per trigger, and a checkpointed restart resumes exactly where
+  * the offset log says — never re-delivering. */
 class GraftLogStreamSpec extends SparkSpec {
 
   import spark.implicits._
@@ -27,6 +31,10 @@ class GraftLogStreamSpec extends SparkSpec {
     Files.createDirectories(root)
     root
   }
+
+  /** Every message on an exception's cause chain. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
 
   /** Drains the table through an AvailableNow query into a memory sink;
     * returns the collected (id, v) rows. */
@@ -72,9 +80,58 @@ class GraftLogStreamSpec extends SparkSpec {
         .trigger(Trigger.AvailableNow()).start()
       try q.processAllAvailable() finally q.stop()
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains(".changes")), msgs(e).mkString(" | "))
+  }
+
+  test("change-feed streams refuse ignoreChanges and endingVersion on both surfaces") {
+    val root = freshDir("cdfrefuse")
+    spark.conf.set("spark.sql.catalog.cdfr", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.cdfr.warehouse", root.resolve("wh").toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS cdfr.s")
+    spark.sql("DROP TABLE IF EXISTS cdfr.s.t")
+    spark.sql("CREATE TABLE cdfr.s.t AS SELECT 1L AS id")
+    val dir = root.resolve("wh").resolve("s").resolve("t").toString
+    val forms: Seq[(String, Map[String, String] => org.apache.spark.sql.DataFrame)] = Seq(
+      "path form" -> (o => spark.readStream.format("graftlog")
+        .option("readChangeFeed", "true").options(o).load(dir)),
+      ".changes identifier" -> (o => spark.readStream.options(o).table("cdfr.s.t.changes")))
+    // the path form refuses at analysis (its V1 relation resolves the
+    // schema eagerly), the identifier when the query starts
+    for ((form, open) <- forms) {
+      def refusal(opts: Map[String, String]): Seq[String] = msgs(intercept[Exception] {
+        val q = open(opts).writeStream.format("memory").queryName("cdf_refuse")
+          .trigger(Trigger.AvailableNow()).start()
+        try q.processAllAvailable() finally q.stop()
+      })
+      val ic = refusal(Map("ignoreChanges" -> "true"))
+      assert(ic.exists(_.contains("ignoreChanges does not apply to a change-feed stream")),
+        s"$form: ${ic.mkString(" | ")}")
+      val ev = refusal(Map("endingVersion" -> "0"))
+      assert(ev.exists(_.contains("endingVersion/endingTimestamp are batch CDF options")),
+        s"$form: ${ev.mkString(" | ")}")
+    }
+  }
+
+  test("a streaming write through a change-feed relation is refused and lands nothing") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = freshDir("cdfwrite")
+    val t = root.resolve("t").toString
+    CommitLog.append(Seq((1L, "a")).toDF("id", "v"), t) // v0
+    val mem = MemoryStream[(Long, String)]
+    mem.addData((9L, "z"))
+    val e = intercept[Exception] {
+      val q = mem.toDF().toDF("id", "v").writeStream.format("graftlog")
+        .option("readChangeFeed", true)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .start(t)
+      try q.processAllAvailable() finally q.stop()
+    }
+    // a change feed withholds STREAMING_WRITE and the source has no V1 sink
+    assert(msgs(e).exists(_.contains("does not support streamed")), msgs(e).mkString(" | "))
+    assert(CommitLog.currentVersion(t) == 0L, "the refused write must not commit")
+    assert(CommitLog.read(spark, t).collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq == Seq((1L, "a")))
   }
 
   test(".changes metadata table: identifier CDF streaming, mid-stream DML + rename") {
@@ -130,13 +187,12 @@ class GraftLogStreamSpec extends SparkSpec {
     assert((first ++ resumed).sorted == batchFeed,
       s"stream feed must equal batch changes(): ${(first ++ resumed).sorted} vs $batchFeed")
 
-    // committed windows' materializations are reclaimed (a months-running
-    // stream must not accumulate one cache dir per trigger)
+    // the feed is computed per batch, never materialized under the
+    // checkpoint (a months-running stream leaves nothing to reclaim)
     val cacheRoot = root.resolve("ckpt").resolve("sources")
       .resolve("0").resolve("_graft_cdf")
-    val remaining = java.nio.file.Files.list(cacheRoot).count()
-    assert(remaining == 1L,
-      s"only the last committed window's materialization may remain, found $remaining")
+    assert(!java.nio.file.Files.exists(cacheRoot),
+      s"a change-feed stream must not materialize windows under $cacheRoot")
 
     // batch identifier surface: full history + windowed via reader options
     assert(spark.read.table("cdfm.s.t.changes").count() == batchFeed.length.toLong)
@@ -223,7 +279,7 @@ class GraftLogStreamSpec extends SparkSpec {
       q.recentProgress.flatMap(_.sources.map(_.description)).mkString(" "))
   }
 
-  test("maxVersionsPerTrigger paces the V1 source over live deletion vectors") {
+  test("maxVersionsPerTrigger paces the snapshot stream over live deletion vectors") {
     val root = freshDir("rate_v1")
     val t = root.resolve("t").toString
     CommitLog.append(Seq((0L, "a"), (1L, "b")).toDF("id", "v"), t)            // v0
@@ -235,7 +291,7 @@ class GraftLogStreamSpec extends SparkSpec {
       spark.readStream.format("graftlog")
         .option("startingVersion", 3).option("maxVersionsPerTrigger", 1).load(t),
       root.resolve("ckpt").toString)
-    assert(reader.contains("GraftLogStreamSource"), reader)
+    assert(reader.contains("GraftLogMicroBatchStream"), reader)
     assert(batches == Seq(Seq(3L), Seq(4L), Seq(5L)), s"one commit per batch, got $batches")
   }
 
@@ -265,8 +321,29 @@ class GraftLogStreamSpec extends SparkSpec {
       spark.readStream.option("startingVersion", from).option("maxVersionsPerTrigger", 1)
         .table("ratecdf.s.t.changes"),
       root.resolve("ckpt").toString)
-    assert(reader.contains("GraftLogCdfMicroBatchStream"), reader)
+    assert(reader.contains("GraftLogStreamSource"), reader)
     assert(batches == Seq(Seq(1L), Seq(2L), Seq(3L)), s"one commit per batch, got $batches")
+  }
+
+  test("readStream.table on a catalog table with live deletion vectors " +
+      "streams the vector-applied snapshot") {
+    val root = freshDir("dvtable")
+    spark.conf.set("spark.sql.catalog.dvcat", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.dvcat.warehouse", root.resolve("wh").toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS dvcat.s")
+    spark.sql("DROP TABLE IF EXISTS dvcat.s.t")
+    spark.sql("CREATE TABLE dvcat.s.t (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('graft.dv.enabled' = 'true')")
+    spark.sql("INSERT INTO dvcat.s.t VALUES (0, 'a'), (1, 'b'), (2, 'c'), (3, 'd')")
+    spark.sql("DELETE FROM dvcat.s.t WHERE id = 2")
+    val dir = root.resolve("wh").resolve("s").resolve("t").toString
+    assert(CommitLog.dvRowCount(dir) == 1L, "the DELETE must land as a live vector")
+    CommitLog.checkpoint(dir)
+    val (batches, reader) = pacedDrain(spark.readStream.table("dvcat.s.t"),
+      root.resolve("ckpt").toString)
+    assert(reader.contains("GraftLogMicroBatchStream"), reader)
+    assert(batches == Seq(Seq(0L, 1L, 3L)),
+      s"one snapshot batch without the deleted row, got $batches")
   }
 
   test("checkpointed restart resumes at the committed offset, exactly once") {
@@ -617,14 +694,12 @@ class GraftLogStreamSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
 
-    // a crash-replayed batch carries the same txn marker and is skipped
-    val sink = new graft.sources.GraftLogStreamSink(t, "sinktest", complete = false)
-    sink.addBatch(1L, Seq((3L, "c")).toDF("id", "v"))
-    assert(CommitLog.read(spark, t).count() == 3L,
-      "a replayed batchId must be recognized and skipped")
-    // a NEW batch from the same query still lands
-    sink.addBatch(2L, Seq((4L, "d")).toDF("id", "v"))
-    assert(CommitLog.read(spark, t).count() == 4L)
+    // a crash-replayed epoch carries the same txn marker (txnAppId:epoch)
+    // and commits nothing
+    assert(Seq(0L, 1L).forall(e =>
+        CommitLog.txnCommitFiles(t, Seq.empty, s"sinktest:$e").isEmpty),
+      s"replayed epochs must be recognized: ${CommitLog.transactions(t)}")
+    assert(CommitLog.currentVersion(t) == 1L && CommitLog.read(spark, t).count() == 3L)
   }
 
   test("native sink: Complete mode replaces the snapshot atomically per batch") {
