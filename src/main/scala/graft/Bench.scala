@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE final JSON metric line for the driver,
   * PLUS one compact progress line per query as it completes.
@@ -75,14 +73,26 @@ object Bench {
         math.rint(l * 100) / 100
       } catch { case _: Throwable => -1.0 }
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+    // name -> exception class of the query's last failed run, recorded
+    // beside its -1 so a failed record explains itself without a re-run
+    val causes = scala.collection.mutable.Map.empty[String, String]
+    def runOnce(name: String): Double =
       try {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        SparkEntry.queries(name)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()                  // no cross-run cache reuse
         dt
-      } catch { case _: Throwable => -1.0 }
+      } catch { case e: Throwable => causes(name) = e.getClass.getName; -1.0 }
+    // (min, max) seconds: one timed run in fast mode, else an untimed warm
+    // run (codegen/JIT/IO) then two timed ones
+    def measure(name: String): (Double, Double) =
+      if (fast) { val t = runOnce(name); (t, t) }
+      else {
+        runOnce(name)
+        val a = runOnce(name); val b = runOnce(name)
+        if (a < 0 || b < 0) (-1.0, -1.0) else (math.min(a, b), math.max(a, b))
+      }
 
     def jsonMap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -109,15 +119,32 @@ object Bench {
     // writer can flag retries that were THEMSELVES burst-contaminated)
     val requeueLoad = sys.env.getOrElse("SPARK_GRAFT_REQUEUE_LOAD", "3.0").toDouble
 
-    def record(done: Seq[(String, Double, Double, Double, Double)], partial: Boolean): String = {
-      // effective seconds: the retry replaces the original only when BOTH
-      // are valid and the retry is faster (a burst can hit the retry too)
-      def effective(n: String, lo: Double): Double = requeued.get(n) match {
-        case Some((r, _, _, _)) if r >= 0 && lo >= 0 => math.min(lo, r)
-        case Some((r, _, _, _)) if lo < 0 => r
-        case _ => lo
+    // effective seconds: the retry replaces the original only when BOTH
+    // are valid and the retry is faster (a burst can hit the retry too)
+    def effective(done: Seq[(String, Double, Double, Double, Double)]): Seq[(String, Double)] =
+      done.map { case (n, lo, _, _, _) =>
+        n -> (requeued.get(n) match {
+          case Some((r, _, _, _)) if r >= 0 && lo >= 0 => math.min(lo, r)
+          case Some((r, _, _, _)) if lo < 0 => r
+          case _ => lo
+        })
       }
-      val results = done.map { case (n, lo, _, _, _) => n -> effective(n, lo) }
+    // the fields the record and the summary line open with: the run's
+    // conditions and its failures, each failed query's exception class
+    // beside its -1. A -1 must NOT shrink the summed total (a broken run
+    // would otherwise look faster).
+    def head(results: Seq[(String, Double)]): String = {
+      val failed = results.collect { case (k, v) if v < 0 => k }
+      val total = results.collect { case (_, v) if v >= 0 => v }.sum
+      val cause = failed.map(n => "\"" + n + "\":\"" + causes.getOrElse(n, "") + "\"")
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
+        s""""cpus":$cpus,""" + (if (fast) """"mode":"fast",""" else "") +
+        s""""n_failed":${failed.size},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""failed_cause":${cause.mkString("{", ",", "}")},"""
+    }
+
+    def record(done: Seq[(String, Double, Double, Double, Double)], partial: Boolean): String = {
+      val results = effective(done)
       val maxResults = done.map { case (n, _, hi, _, _) => n -> hi }
       // per-query [loadBefore, loadAfter] — the variance canary
       val loadJson = done.map { case (n, _, _, lb, la) =>
@@ -135,16 +162,8 @@ object Bench {
           ",\"sec\":" + r + ",\"max\":" + rMax + ",\"load\":[" + lb + "," + la + "]" +
           (if (residual) ",\"burst_residual\":true" else "") + "}"
       }.mkString("{", ",", "}")
-      val failed = results.collect { case (k, v) if v < 0 => k }
-      // a failed query is a -1 sentinel in the per-query map; it must NOT
-      // shrink the summed total (a broken run would otherwise look faster)
-      val total = results.collect { case (_, v) if v >= 0 => v }.sum
-      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        s""""n_selected":${selected.size},""" +
+      head(results) + s""""n_selected":${selected.size},""" +
         (if (partial) """"partial":true,""" else "") +
-        (if (fast) """"mode":"fast",""" else "") +
-        s""""n_failed":${failed.size},"failed":$failedJson,""" +
         s""""queries":${jsonMap(results)},""" +
         s""""queries_max":${jsonMap(maxResults)},""" +
         s""""load":$loadJson,""" +
@@ -164,15 +183,9 @@ object Bench {
       }
 
     val done = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double, Double)]
-    selected.zipWithIndex.foreach { case ((name, fn), i) =>
+    selected.zipWithIndex.foreach { case ((name, _), i) =>
       val loadBefore = loadAvg()
-      val (lo, hi) =
-        if (fast) { val t = runOnce(fn); (t, t) }
-        else {
-          runOnce(fn)                               // untimed warm: codegen/JIT/IO
-          val a = runOnce(fn); val b = runOnce(fn)
-          if (a < 0 || b < 0) (-1.0, -1.0) else (math.min(a, b), math.max(a, b))
-        }
+      val (lo, hi) = measure(name)
       val loadAfter = loadAvg()
       done += ((name, lo, hi, loadBefore, loadAfter))
       // per-query progress line: compact, bounded, and shaped differently
@@ -189,15 +202,8 @@ object Bench {
         case (n, _, _, lb, la) if math.max(lb, la) > requeueLoad => n
       }
       flagged.foreach { name =>
-        val fn = SparkEntry.queries(name)
         val lb = loadAvg()
-        val (lo, hi) =
-          if (fast) { val t = runOnce(fn); (t, t) }
-          else {
-            runOnce(fn)
-            val a = runOnce(fn); val b = runOnce(fn)
-            if (a < 0 || b < 0) (-1.0, -1.0) else (math.min(a, b), math.max(a, b))
-          }
+        val (lo, hi) = measure(name)
         val la = loadAvg()
         requeued += name -> ((lo, hi, lb, la))
         println(s"""{"requeue":"$name","sec":$lo,"max":$hi,"load":[$lb,$la]}""")
@@ -205,16 +211,7 @@ object Bench {
       }
     }
 
-    val results = done.toSeq.map { case (n, lo, _, _, _) =>
-      n -> (requeued.get(n) match {
-        case Some((r, _, _, _)) if r >= 0 && lo >= 0 => math.min(lo, r)
-        case Some((r, _, _, _)) if lo < 0 => r
-        case _ => lo
-      })
-    }
-    val failed = results.collect { case (k, v) if v < 0 => k }
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val results = effective(done.toSeq)
     flush(done.toSeq, partial = false)
     // stop Spark BEFORE the metric line so nothing can interleave after
     // it — the driver parses the LAST stdout tail, and round 7's record
@@ -226,10 +223,7 @@ object Bench {
     // fits; the complete per-query map is persisted to BENCH_FULL.json.
     val headlineRs = results.filter { case (k, _) => headline.contains(k) }
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        (if (fast) """"mode":"fast",""" else "") +
-        s""""n_failed":${failed.size},"failed":$failedJson,""" +
-        s""""n_requeued":${requeued.size},""" +
+      head(results) + s""""n_requeued":${requeued.size},""" +
         s""""queries":${jsonMap(if (only.isEmpty) headlineRs else results)},""" +
         s""""sf":"$sfDir"}"""
     // Sentinel-prefixed copy FIRST (a wrapper can grep ^GRAFT_BENCH_RESULT

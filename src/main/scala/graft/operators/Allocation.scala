@@ -55,7 +55,9 @@ object Allocation {
         case Some(d) =>
           val path = s"$d/remaining_r$r"
           Sinks.checkpointState(rest, path)
-          spark.read.parquet(path)          // state is re-read: real checkpoint
+          // state is re-read (a real checkpoint) under the schema it was
+          // written with, so the read starts no inference job
+          spark.read.schema(rest.schema).parquet(path)
         case None => rest.localCheckpoint()
       }
     }

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.SpatialOps
 import graft.io.{Sinks, Tables}
@@ -289,9 +290,12 @@ object PipelineQueries {
     * this query pins the numbers. */
   private val ioPartitionedPrune: Q = (spark, dir) => {
     val path = Sinks.scratchDir("partitioned_documents")
-    Tables.documents(spark, dir)
-      .write.mode("overwrite").partitionBy("lang").parquet(path)
-    spark.read.parquet(path)
+    val docs = Tables.documents(spark, dir)
+    docs.write.mode("overwrite").partitionBy("lang").parquet(path)
+    // the schema the writer laid out: data columns, then the partition
+    // column — declared, so the read starts no inference job
+    spark.read.schema(StructType(docs.schema.filterNot(_.name == "lang") :+ docs.schema("lang")))
+      .parquet(path)
       .filter(col("lang").isin("en", "zh") && col("n_chars") > 100)
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))

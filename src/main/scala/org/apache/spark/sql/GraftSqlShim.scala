@@ -62,22 +62,13 @@ object GraftSqlShim {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** Re-bind a materialized (localCheckpoint'd) DataFrame to its RDD through
-    * a fresh LogicalRDD that carries NO inherited statistics or constraints.
-    *
-    * Spark's checkpoint preserves the origin plan's stats; in an iterative
-    * algorithm (label propagation, allocation rounds) each round's join
-    * multiplies the inherited sizeInBytes estimates, so the BigInt estimate
-    * doubles in bit-length every round — after ~30 rounds Catalyst spends
-    * its time doing million-digit multiplications in `computeStats`.
-    * Dropping the origin stats resets the estimate to the default constant
-    * and keeps round cost flat. */
-  def detachStats(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[ClassicDataset[Row]]
-    val session = ds.sparkSession
-    ofRows(session, org.apache.spark.sql.execution.LogicalRDD(
-      ds.queryExecution.analyzed.output, ds.queryExecution.toRdd)(session))
-  }
+  /** DataFrame over an RDD of Catalyst rows whose fields follow `schema`
+    * (`internalCreateDataFrame` is `private[sql]`) — how an operator that
+    * runs its rounds as RDD jobs hands its result back to Spark SQL. */
+  def internalFrame(spark: SparkSession,
+                    rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                    schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[ClassicSparkSession].internalCreateDataFrame(rows, schema)
 
   /** Re-flag a batch DataFrame as a STREAMING one — what a V1
     * `Source.getBatch` must return (`MicroBatchExecution` asserts

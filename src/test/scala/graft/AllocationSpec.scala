@@ -38,6 +38,16 @@ class AllocationSpec extends SparkSpec {
     assert(byAnnotator.forall(_ == 50))
   }
 
+  test("the parquet state-dir route allocates exactly as the checkpoint route") {
+    val order = Seq("o_orderdate", "o_orderkey")
+    val viaCheckpoint = Allocation.allocateRounds(spark, orders, order, 100, Seq("a", "b"),
+      rounds = 2)
+    val viaState = Allocation.allocateRounds(spark, orders, order, 100, Seq("a", "b"),
+      rounds = 2, stateDir = Some(graft.io.Sinks.scratchDir("spec_allocation_state")))
+    assert(viaState.schema == viaCheckpoint.schema)
+    assert(viaState.exceptAll(viaCheckpoint).isEmpty && viaCheckpoint.exceptAll(viaState).isEmpty)
+  }
+
   test("GraftExtensions injects cosine_sim into a session builder") {
     // the shared session already exists, so build the extensions object and
     // apply it to a fresh extension registry; then confirm the same builder

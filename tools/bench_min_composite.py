@@ -35,6 +35,8 @@ def main() -> None:
             attempts.append(json.load(f))
 
     names = set(attempts[0]["queries"])
+    if len({a.get("cpus") for a in attempts}) != 1:
+        sys.exit("attempts ran at different core counts — merge one count per record")
     for a in attempts[1:]:
         if set(a["queries"]) != names:
             sys.exit("attempts cover different query sets — rerun on one tree")
@@ -42,17 +44,22 @@ def main() -> None:
     queries, provenance = {}, {}
     for q in sorted(names):
         vals = [a["queries"][q] for a in attempts]
-        best = min(range(len(vals)), key=lambda i: vals[i])
+        # a failed run reads -1: it never wins over a timed one
+        timed = [i for i in range(len(vals)) if vals[i] >= 0]
+        best = min(timed or range(len(vals)), key=lambda i: vals[i])
         queries[q] = vals[best]
         provenance[q] = best + 1
 
     rec = dict(attempts[0])  # keys like unit/sf/n_queries carry over
     rec["metric"] = "total"
-    rec["value"] = sum(queries.values())
+    failed = [q for q in sorted(queries) if queries[q] < 0]
+    rec["value"] = sum(v for v in queries.values() if v >= 0)
     rec["queries"] = queries
     rec["n_queries"] = len(queries)
-    rec["n_failed"] = 0
-    rec["failed"] = []
+    rec["n_failed"] = len(failed)
+    rec["failed"] = failed
+    rec["failed_cause"] = {
+        q: attempts[provenance[q] - 1].get("failed_cause", {}).get(q, "") for q in failed}
     rec["composite"] = (
         f"per-query minimum across {len(attempts)} attempts "
         "(see tools/bench_min_composite.py)")
