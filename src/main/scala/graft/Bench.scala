@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
+
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE final JSON metric line for the driver,
   * PLUS one compact progress line per query as it completes.
@@ -48,9 +50,9 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val fast = sys.env.get("SPARK_GRAFT_BENCH_FAST").exists(v => v == "1" || v == "true")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local(cpus)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>
@@ -94,8 +96,6 @@ object Bench {
         if (a < 0 || b < 0) (-1.0, -1.0) else (math.min(a, b), math.max(a, b))
       }
 
-    def jsonMap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val headline = Seq(
       "e1_inventory", "e3_inventory_crosstab", "e3e_persisted_crosstabs",
       "a8_merge_clusters", "a8c_merge_unbounded", "d2_lsh_pairs",
@@ -133,43 +133,55 @@ object Bench {
     // conditions and its failures, each failed query's exception class
     // beside its -1. A -1 must NOT shrink the summed total (a broken run
     // would otherwise look faster).
-    def head(results: Seq[(String, Double)]): String = {
+    def head(g: JsonGenerator, results: Seq[(String, Double)]): Unit = {
       val failed = results.collect { case (k, v) if v < 0 => k }
-      val total = results.collect { case (_, v) if v >= 0 => v }.sum
-      val cause = failed.map(n => "\"" + n + "\":\"" + causes.getOrElse(n, "") + "\"")
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        s""""cpus":$cpus,""" + (if (fast) """"mode":"fast",""" else "") +
-        s""""n_failed":${failed.size},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""failed_cause":${cause.mkString("{", ",", "}")},"""
+      g.writeStringField("metric", "total")
+      g.writeNumberField("value", results.collect { case (_, v) if v >= 0 => v }.sum)
+      g.writeStringField("unit", "sec")
+      g.writeNumberField("n_queries", results.size)
+      g.writeNumberField("cpus", cpus)
+      if (fast) g.writeStringField("mode", "fast")
+      g.writeNumberField("n_failed", failed.size)
+      g.writeArrayFieldStart("failed")
+      failed.foreach(g.writeString)
+      g.writeEndArray()
+      g.writeObjectFieldStart("failed_cause")
+      failed.foreach(n => g.writeStringField(n, causes.getOrElse(n, "")))
+      g.writeEndObject()
     }
 
-    def record(done: Seq[(String, Double, Double, Double, Double)], partial: Boolean): String = {
-      val results = effective(done)
-      val maxResults = done.map { case (n, _, hi, _, _) => n -> hi }
-      // per-query [loadBefore, loadAfter] — the variance canary
-      val loadJson = done.map { case (n, _, _, lb, la) =>
-        "\"" + n + "\":[" + lb + "," + la + "]"
-      }.mkString("{", ",", "}")
-      val origByName = done.map { case (n, lo, _, _, _) => n -> lo }.toMap
-      // burst_residual: this query's RETRY ran under load above the
-      // threshold too, so even min(orig, retry) may still be inflated —
-      // the record self-describes its residual contamination instead of
-      // passing a warm-min-looking number off as quiet (round-8 example:
-      // gr2b retried at loadavg 11-14)
-      val requeuedJson = requeued.map { case (n, (r, rMax, lb, la)) =>
-        val residual = requeueLoad > 0 && math.max(lb, la) > requeueLoad
-        "\"" + n + "\":{\"orig\":" + origByName.getOrElse(n, -1.0) +
-          ",\"sec\":" + r + ",\"max\":" + rMax + ",\"load\":[" + lb + "," + la + "]" +
-          (if (residual) ",\"burst_residual\":true" else "") + "}"
-      }.mkString("{", ",", "}")
-      head(results) + s""""n_selected":${selected.size},""" +
-        (if (partial) """"partial":true,""" else "") +
-        s""""queries":${jsonMap(results)},""" +
-        s""""queries_max":${jsonMap(maxResults)},""" +
-        s""""load":$loadJson,""" +
-        s""""requeued":$requeuedJson,""" +
-        s""""sf":"$sfDir"}"""
-    }
+    def record(done: Seq[(String, Double, Double, Double, Double)], partial: Boolean): String =
+      Bench.json { g =>
+        val results = effective(done)
+        head(g, results)
+        g.writeNumberField("n_selected", selected.size)
+        if (partial) g.writeBooleanField("partial", true)
+        Bench.numbers(g, "queries", results)
+        Bench.numbers(g, "queries_max", done.map { case (n, _, hi, _, _) => n -> hi })
+        // per-query [loadBefore, loadAfter] — the variance canary
+        g.writeObjectFieldStart("load")
+        done.foreach { case (n, _, _, lb, la) => Bench.pair(g, n, lb, la) }
+        g.writeEndObject()
+        // burst_residual: this query's RETRY ran under load above the
+        // threshold too, so even min(orig, retry) may still be inflated —
+        // the record self-describes its residual contamination instead of
+        // passing a warm-min-looking number off as quiet (round-8 example:
+        // gr2b retried at loadavg 11-14)
+        val origByName = done.map { case (n, lo, _, _, _) => n -> lo }.toMap
+        g.writeObjectFieldStart("requeued")
+        requeued.foreach { case (n, (r, rMax, lb, la)) =>
+          g.writeObjectFieldStart(n)
+          g.writeNumberField("orig", origByName.getOrElse(n, -1.0))
+          g.writeNumberField("sec", r)
+          g.writeNumberField("max", rMax)
+          Bench.pair(g, "load", lb, la)
+          if (requeueLoad > 0 && math.max(lb, la) > requeueLoad)
+            g.writeBooleanField("burst_residual", true)
+          g.writeEndObject()
+        }
+        g.writeEndObject()
+        g.writeStringField("sf", sfDir)
+      }
     def flush(done: Seq[(String, Double, Double, Double, Double)], partial: Boolean): Unit =
       outPath.foreach { o =>
         // atomic-rename rewrite: a kill mid-write can't leave a torn file
@@ -191,7 +203,14 @@ object Bench {
       // per-query progress line: compact, bounded, and shaped differently
       // from the final metric line (no "metric" key) so tail-grabs stay
       // unambiguous. This is the kill-survivable stdout evidence.
-      println(s"""{"query":"$name","sec":$lo,"max":$hi,"load":[$loadBefore,$loadAfter],"i":${i + 1},"n":${selected.size}}""")
+      println(Bench.json { g =>
+        g.writeStringField("query", name)
+        g.writeNumberField("sec", lo)
+        g.writeNumberField("max", hi)
+        Bench.pair(g, "load", loadBefore, loadAfter)
+        g.writeNumberField("i", i + 1)
+        g.writeNumberField("n", selected.size)
+      })
       flush(done.toSeq, partial = true)
     }
     // -------------------------------------------------------------- burst re-queue
@@ -206,7 +225,12 @@ object Bench {
         val (lo, hi) = measure(name)
         val la = loadAvg()
         requeued += name -> ((lo, hi, lb, la))
-        println(s"""{"requeue":"$name","sec":$lo,"max":$hi,"load":[$lb,$la]}""")
+        println(Bench.json { g =>
+          g.writeStringField("requeue", name)
+          g.writeNumberField("sec", lo)
+          g.writeNumberField("max", hi)
+          Bench.pair(g, "load", lb, la)
+        })
         flush(done.toSeq, partial = true)
       }
     }
@@ -222,14 +246,45 @@ object Bench {
     // (BENCH_r02.json parsed:null). Print a compact headline line that always
     // fits; the complete per-query map is persisted to BENCH_FULL.json.
     val headlineRs = results.filter { case (k, _) => headline.contains(k) }
-    val summary =
-      head(results) + s""""n_requeued":${requeued.size},""" +
-        s""""queries":${jsonMap(if (only.isEmpty) headlineRs else results)},""" +
-        s""""sf":"$sfDir"}"""
+    val summary = Bench.json { g =>
+      head(g, results)
+      g.writeNumberField("n_requeued", requeued.size)
+      Bench.numbers(g, "queries", if (only.isEmpty) headlineRs else results)
+      g.writeStringField("sf", sfDir)
+    }
     // Sentinel-prefixed copy FIRST (a wrapper can grep ^GRAFT_BENCH_RESULT
     // and can never land on a mid-run requeue/progress line), then the bare
     // JSON as the very last stdout write for any naive last-line parser.
     println(s"GRAFT_BENCH_RESULT $summary")
     println(summary)
+  }
+
+  private val factory = new JsonFactory()
+
+  /** One JSON object, its fields written by `fields`: every name and
+    * string is escaped, and doubles print as `Double.toString` does. */
+  private def json(fields: JsonGenerator => Unit): String = {
+    val out = new java.io.StringWriter
+    val g = factory.createGenerator(out)
+    g.writeStartObject()
+    fields(g)
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
+
+  /** `"name": {query: seconds, ...}` */
+  private def numbers(g: JsonGenerator, name: String, rs: Seq[(String, Double)]): Unit = {
+    g.writeObjectFieldStart(name)
+    rs.foreach { case (k, v) => g.writeNumberField(k, v) }
+    g.writeEndObject()
+  }
+
+  /** `"name": [a, b]` */
+  private def pair(g: JsonGenerator, name: String, a: Double, b: Double): Unit = {
+    g.writeArrayFieldStart(name)
+    g.writeNumber(a)
+    g.writeNumber(b)
+    g.writeEndArray()
   }
 }

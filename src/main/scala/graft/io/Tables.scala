@@ -1,5 +1,7 @@
 package graft.io
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,15 +14,26 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Load one corpus table from a scale-factor directory. A table that is
-    * one parquet file declares its footer's schema ([[Footers.read]]: no
-    * inference job); a table written as a directory of part files (the
-    * scale probe's expanded corpora) keeps Spark's directory inference. */
+  /** Load one corpus table from a scale-factor directory. Every read
+    * declares the schema of one footer, read on the driver, so no read
+    * starts Spark's inference job: a table that is one parquet file
+    * declares its own ([[Footers.read]]); a table written as a directory
+    * of part files (the scale probe's expanded corpora) declares the
+    * schema of its first part file in path order, the file Spark's
+    * inference reads when it does not merge schemas. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    if (java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path)))
-      Footers.read(spark, Seq(path))
-    else spark.read.parquet(path)
+    val path = Paths.get(s"$sfDir/$name.parquet")
+    if (Files.isRegularFile(path)) Footers.read(spark, Seq(path.toString))
+    else {
+      // the data files Spark lists: names starting with `_` or `.` are
+      // markers and checksums
+      val parts = Sinks.listDir(path).filter { p =>
+        val n = p.getFileName.toString
+        Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
+      }
+      require(parts.nonEmpty, s"table $name: no data file in $path")
+      spark.read.schema(Footers.schema(spark, parts.map(_.toString).min)).parquet(path.toString)
+    }
   }
 
   def lineitem(spark: SparkSession, d: String): DataFrame   = table(spark, d, "lineitem")

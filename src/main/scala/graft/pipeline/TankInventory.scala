@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.io.Tables
 
@@ -12,8 +16,10 @@ import graft.io.Tables
   *
   * The reference re-scans its XML corpus four times and nests loops for the
   * spatial join; here the box feed is read once, the merge is one shuffle on
-  * the tile key, the county table is broadcast, and everything else is
-  * column arithmetic inside codegen. Domain inputs are synthesized
+  * the tile key, the county table is collected to the driver once and
+  * scanned per cluster by one native expression
+  * ([[graft.plans.CountyArgmax]]), and everything else is column
+  * arithmetic inside codegen. Domain inputs are synthesized
   * deterministically from the driver corpus so a DuckDB oracle can replay
   * every relational step, including the WGS84 columns — the
   * [[graft.functions.GeoPortable]] transform is bit-identical between the
@@ -51,8 +57,8 @@ object TankInventory {
   }
 
   /** NW-corner UTM georef for a tile id (zone 16 grid). */
-  private def nwX(tid: org.apache.spark.sql.Column) = lit(300000) + (tid % 40) * 5000
-  private def nwY(tid: org.apache.spark.sql.Column) = lit(3600000) + floor(tid / 40) * 5000
+  private def nwX(tid: Column) = lit(300000) + (tid % 40) * 5000
+  private def nwY(tid: Column) = lit(3600000) + floor(tid / 40) * 5000
 
   /** 25 rectangular counties tiling the UTM extent, 5 per state (the
     * reference keys its distribution reports by `state_fips` and
@@ -99,49 +105,35 @@ object TankInventory {
       .withColumn("geo_ok",
         col("lat").between(30.0, 36.0) && col("lon").between(-91.0, -85.0))
 
-    // 4. greatest-overlap county assignment (J8: counties broadcast,
-    //    exact rect overlap, argmax via row_number)
-    val k = counties(spark, dir)
-    val overlap =
-      greatest(lit(0.0), least(col("ex2"), col("kx2")) - greatest(col("ex1"), col("kx1"))) *
-        greatest(lit(0.0), least(col("ey2"), col("ky2")) - greatest(col("ey1"), col("ky1")))
-    val joined = wgs.join(broadcast(k), overlap > 0.0)
-      .withColumn("overlap_m2", overlap)
-    // Greatest-overlap argmax as ONE aggregation with map-side partials
-    // instead of window(row_number)+filter: the broadcast join leaves the
-    // candidate rows on their producing partitions, so partial max_by
-    // collapses each cluster's <= |counties| candidates BEFORE the
-    // exchange — the shuffle carries one row per cluster, not one per
-    // overlapping county, and the window's full per-partition sort
-    // disappears (guide §2.3 "aggregate before you shuffle", §2.4).
-    // Identical rows: max_by's key (overlap_m2, -county_key) is the
-    // window's (overlap DESC, county_key ASC) order, and county_key is
-    // unique per candidate so the argmax is deterministic.
-    val payload = struct(
-      col("minx"), col("miny"), col("maxx"), col("maxy"),
-      col("n_boxes"), col("object_class"), col("merged"),
-      col("chip_names"), col("cx_utm"), col("cy_utm"), col("diameter_m"),
-      col("lat"), col("lon"), col("county_key"), col("state_key"),
-      col("overlap_m2"), col("geo_ok"))
-    joined.groupBy("tile_id", "cluster_id")
-      .agg(max_by(payload,
-        struct(col("overlap_m2"), (-col("county_key")).as("nk"))).as("b"))
+    // 4. greatest-overlap county assignment (J8): the county table is
+    //    collected to the driver once, and each cluster loops over its
+    //    rectangles inside one codegen'd expression. `inline` emits the
+    //    argmax county with its exact overlap, or no row when none
+    //    overlaps (the reference's inner join drops those clusters). Equal
+    //    overlaps go to the smaller county_key, the oracle's
+    //    (overlap DESC, county_key) order. No join, aggregation or
+    //    exchange: the clusters stay on their merge partitions.
+    val best = graft.plans.CountyArgmax(col("ex1"), col("ex2"), col("ey1"), col("ey2"),
+      graft.plans.CountyRects.collect(counties(spark, dir)))
+    // every column but the cluster key and the georeference stays
+    // nullable: the written parquet schema (OPTIONAL vs REQUIRED) is part
+    // of the output, and e1's has always declared these OPTIONAL
+    def opt(c: Column) = GraftSqlShim.column(KnownNullable(GraftSqlShim.expression(c)))
+    wgs.select(col("*"), inline(best))
       .select(
         col("tile_id"), col("cluster_id"),
-        col("b.minx").as("minx"), col("b.miny").as("miny"),
-        col("b.maxx").as("maxx"), col("b.maxy").as("maxy"),
-        col("b.n_boxes").as("n_boxes"),
-        col("b.object_class").as("object_class"),
-        col("b.merged").as("merged"),
-        array_join(col("b.chip_names"), ",").as("chip_names"),
-        round(col("b.cx_utm"), 2).as("cx_utm"),
-        round(col("b.cy_utm"), 2).as("cy_utm"),
-        round(col("b.diameter_m"), 2).as("diameter_m"),
-        col("b.lat").as("lat"), col("b.lon").as("lon"),
-        col("b.county_key").as("county_key"),
-        col("b.state_key").as("state_key"),
-        round(col("b.overlap_m2"), 2).as("overlap_m2"),
-        col("b.geo_ok").as("geo_ok"))
+        opt(col("minx")).as("minx"), opt(col("miny")).as("miny"),
+        opt(col("maxx")).as("maxx"), opt(col("maxy")).as("maxy"),
+        opt(col("n_boxes")).as("n_boxes"), opt(col("object_class")).as("object_class"),
+        opt(col("merged")).as("merged"),
+        opt(array_join(col("chip_names"), ",")).as("chip_names"),
+        round(col("cx_utm"), 2).as("cx_utm"),
+        round(col("cy_utm"), 2).as("cy_utm"),
+        round(col("diameter_m"), 2).as("diameter_m"),
+        col("lat"), col("lon"),
+        opt(col("county_key")).as("county_key"), opt(col("state_key")).as("state_key"),
+        opt(round(col("overlap_m2"), 2)).as("overlap_m2"),
+        col("geo_ok"))
   }
 
   val Classes = Seq("closed_roof_tank", "water_tower", "spherical_tank", "undefined_object")
@@ -163,38 +155,64 @@ object TankInventory {
     * report script reads it, `distribution_by_county_state.py:27`). The
     * margin row (`dim` = -1) is the grand-total grouping set of the same
     * aggregation as the cells, so the inventory is read once and nothing
-    * is cached. */
+    * is cached. Rows come sorted by (`total` desc, `dim`). */
   def crosstabFrom(inv: DataFrame, dim: String, percent: Boolean): DataFrame = {
-    val margin = col("_gid") === 1
-    val key = when(margin, lit(-1)).otherwise(col(dim)).as(dim)
-    classCounts(inv, Seq(dim))
-      .select(key +: (Classes :+ "total").map(c => cell(c, percent, margin)): _*)
-      .orderBy(col("total").desc, col(dim))
+    val (rows, grand) = collectCounts(inv, Seq(dim))
+    // grouping_id(dim): 0 = a cell row, 1 = the margin
+    val out = rows.map(r => (if (r.gid == 1) Int.box(-1) else r.dims.head, r.cells))
+      .sortBy { case (key, cells) => (-cells.last, Option(key).map(_.intValue)) }
+      .map { case (key, cells) => Row.fromSeq(key +: cells.map(cell(_, percent, grand))) }
+    val cellType = if (percent) DoubleType else LongType
+    localFrame(inv, out, StructField(dim, IntegerType) +:
+      (Classes :+ "total").map(StructField(_, cellType, nullable = percent)))
   }
 
   /** All four distribution reports — {county, state} x {count, percent},
     * margins included — from ONE aggregation over `inv`, tagged by
     * `report` (`county_count`, `state_count`, `county_pct`, `state_pct`)
-    * and keyed by `dim_key` (-1 on the margin rows). Rows equal the four
-    * [[crosstabFrom]] outputs with every cell cast to double, so count
-    * and percent reports share one schema. */
+    * and keyed by `dim_key` (-1 on the margin rows), sorted by
+    * (`report`, `dim_key`). Rows equal the four [[crosstabFrom]] outputs
+    * with every cell cast to double, so count and percent reports share
+    * one schema. */
   def reports(inv: DataFrame): DataFrame = {
-    val counts = classCounts(inv, Seq("county_key", "state_key"))
+    val (rows, grand) = collectCounts(inv, Seq("county_key", "state_key"))
     // grouping_id(county_key, state_key): 1 = county cells, 2 = state
     // cells, 3 = the grand-total row, the margin of both
-    val gid = col("_gid")
-    val tags = when(gid === 1, array(lit("county_count"), lit("county_pct")))
-      .when(gid === 2, array(lit("state_count"), lit("state_pct")))
-      .otherwise(array(Seq("county_count", "state_count", "county_pct", "state_pct").map(lit): _*))
-    val key = when(gid === 1, col("county_key")).when(gid === 2, col("state_key"))
-      .otherwise(lit(-1)).cast("int")
-    val pct = col("report").endsWith("_pct")
-    counts.select(Seq(explode(tags).as("report"), key.as("dim_key"), gid) ++
-        (Classes :+ "total").map(col): _*)
-      .select(col("report") +: col("dim_key") +:
-        (Classes :+ "total").map(c =>
-          when(pct, cell(c, percent = true, gid === 3))
-            .otherwise(col(c).cast("double")).as(c)): _*)
+    val out = rows.flatMap { r =>
+      val (tags, key) = r.gid match {
+        case 1 => (Seq("county_count", "county_pct"), r.dims(0))
+        case 2 => (Seq("state_count", "state_pct"), r.dims(1))
+        case _ => (Seq("county_count", "state_count", "county_pct", "state_pct"), Int.box(-1))
+      }
+      tags.map(t => Row.fromSeq(t +: key +: r.cells.map { n =>
+        if (t.endsWith("_pct")) cell(n, percent = true, grand) else n.toDouble
+      }))
+    }.sortBy(r => (r.getString(0), Option(r.getAs[Integer](1)).map(_.intValue)))
+    localFrame(inv, out, StructField("report", StringType, nullable = false) +:
+      StructField("dim_key", IntegerType) +:
+      (Classes :+ "total").map(StructField(_, DoubleType)))
+  }
+
+  /** One row of [[classCounts]]: its `grouping_id` over the dims, the dim
+    * values (null where aggregated away) and the cells — the class counts,
+    * then their total. */
+  private case class Counts(gid: Long, dims: Seq[Integer], cells: Seq[Long])
+
+  /** [[classCounts]] over `dims`, run in Spark and collected (one row per
+    * dim value plus the grand total), with the grand total (None when
+    * there is none or it is 0). The crosstab cells are derived from these
+    * rows on the driver, so no window or single-partition exchange
+    * spreads the grand total, and the crosstabs generate no classes
+    * beyond the aggregation's. */
+  private def collectCounts(inv: DataFrame, dims: Seq[String]): (Seq[Counts], Option[Long]) = {
+    val n = dims.size
+    val rows = GraftSqlShim.collectInternal(classCounts(inv, dims)).toSeq.map { r =>
+      Counts(r.getLong(n + Classes.size),
+        (0 until n).map(i => if (r.isNullAt(i)) null else Int.box(r.getInt(i))),
+        ((n until n + Classes.size) :+ (n + Classes.size + 1)).map(r.getLong))
+    }
+    val all = (1L << n) - 1
+    (rows, rows.find(_.gid == all).map(_.cells.last).filter(_ != 0))
   }
 
   /** Per-class counts and their total for each of `dims` alone plus the
@@ -209,11 +227,12 @@ object TankInventory {
   }
 
   /** A crosstab cell: the count, or its share of the grand total (pandas
-    * `normalize='all'` divides every cell, margins included). The grand
-    * total is the `total` of the row `grand` marks, spread to every row by
-    * a window over the aggregation's few rows. */
-  private def cell(c: String, percent: Boolean,
-                   grand: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    if (!percent) col(c)
-    else (col(c) / max(when(grand, col("total"))).over()).as(c)
+    * `normalize='all'` divides every cell, margins included; null without
+    * a grand total) as the long/long division both engines evaluate. */
+  private def cell(n: Long, percent: Boolean, grand: Option[Long]): Any =
+    if (!percent) n else grand.map(g => Double.box(n.toDouble / g.toDouble)).orNull
+
+  /** The driver-built rows as a local relation of `fields`. */
+  private def localFrame(inv: DataFrame, rows: Seq[Row], fields: Seq[StructField]): DataFrame =
+    inv.sparkSession.createDataFrame(rows.asJava, StructType(fields))
 }

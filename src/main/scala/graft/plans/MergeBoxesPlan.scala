@@ -4,9 +4,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, HashPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -101,7 +101,10 @@ case class MergeBoxesExec(gap: Int, child: SparkPlan,
 
   override protected def doExecute(): RDD[InternalRow] = {
     val g = gap
-    val outTypes = output.map(_.dataType).toArray
+    // `unsafe` below writes freshOutput's ten columns by position
+    require(output.map(_.dataType) == MergeBoxesPlan.freshOutput().map(_.dataType),
+      "MergeBoxesExec: the output is not the layout its row writer fills")
+    val width = output.length
     val inNames = child.output.map(_.name).toArray
     val nonNull: InternalRow => InternalRow = { r =>
       var i = 0
@@ -113,8 +116,28 @@ case class MergeBoxesExec(gap: Int, child: SparkPlan,
       r
     }
     child.execute().mapPartitions { iter =>
-      // downstream operators require UnsafeRow — project per partition
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(outTypes)
+      // downstream operators require UnsafeRow: each cluster is written
+      // into one reused row by hand, which generates no projection class
+      val row = new UnsafeRowWriter(width, 64)
+      val chips = new UnsafeArrayWriter(row, 8)
+      def unsafe(c: BoxMerge.Cluster): InternalRow = {
+        row.reset()
+        row.zeroOutNullBytes()
+        row.write(0, UTF8String.fromString(c.key))
+        row.write(1, c.cluster_id)
+        row.write(2, c.minx)
+        row.write(3, c.miny)
+        row.write(4, c.maxx)
+        row.write(5, c.maxy)
+        row.write(6, c.n_boxes)
+        row.write(7, UTF8String.fromString(c.object_class))
+        row.write(8, c.merged)
+        val start = row.cursor()
+        chips.initialize(c.chip_names.length)
+        c.chip_names.iterator.zipWithIndex.foreach { case (n, i) => chips.write(i, UTF8String.fromString(n)) }
+        row.setOffsetAndSizeFromPreviousCursor(9, start)
+        row.getRow
+      }
       new Iterator[InternalRow] {
         private val in = iter.map(nonNull).buffered
         private var out: Iterator[InternalRow] = Iterator.empty
@@ -132,13 +155,7 @@ case class MergeBoxesExec(gap: Int, child: SparkPlan,
           // rows arrive sorted on (key, x1, y1, x2, y2, label, chip) —
           // already the canonical order, so positional ids are canonical
           // positions (what the oracles' row_number assigns)
-          out = BoxMerge.clusterGroup(boxes.toSeq, g).iterator.map { c =>
-            proj(InternalRow(
-              UTF8String.fromString(c.key), c.cluster_id,
-              c.minx, c.miny, c.maxx, c.maxy,
-              c.n_boxes, UTF8String.fromString(c.object_class), c.merged,
-              new GenericArrayData(c.chip_names.map(UTF8String.fromString).toArray[Any])))
-          }
+          out = BoxMerge.clusterGroup(boxes.toSeq, g).iterator.map(unsafe)
         }
 
         override def hasNext: Boolean = {

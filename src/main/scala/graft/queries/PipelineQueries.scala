@@ -173,9 +173,9 @@ object PipelineQueries {
     val path = Sinks.scratchDir("e3e_inventory")
     val built = TankInventory.inventory(spark, dir)
     built.write.mode("overwrite").parquet(path)
-    // the schema just written: the read starts no inference job
+    // the schema just written: the read starts no inference job; the
+    // reports come sorted by (report, dim_key)
     TankInventory.reports(spark.read.schema(built.schema).parquet(path))
-      .orderBy("report", "dim_key")
   }
 
   private val e3ePersistedCrosstabsSql = {

@@ -315,12 +315,21 @@ object Shapefile {
     new java.io.File(outDir).mkdirs()
     val cols = Seq("minx", "miny", "maxx", "maxy").map(org.apache.spark.sql.functions.col) ++
       attrs.map { case (c, _) => org.apache.spark.sql.functions.col(c).cast("string") }
-    df.select(cols: _*).foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val rows = it.toVector
+    // Catalyst rows, read inside a SQL execution: no Row deserializer class
+    // is generated, and the tasks compile the plan's classes under the same
+    // session class loader as any other query's
+    val qe = df.select(cols: _*).queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreachPartition { it =>
+      // the scan reuses its row: copy each row's values out as it passes
+      val rows = it.map { r =>
+        require(!(0 until 4).exists(r.isNullAt), "writeZippedLayer: a rectangle holds a null coordinate")
+        ((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)),
+          attrs.indices.map(i => if (r.isNullAt(4 + i)) "" else r.getUTF8String(4 + i).toString))
+      }.toVector
       if (rows.nonEmpty) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val rects = rows.map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-        val vals = rows.map(r => attrs.indices.map(i => Option(r.getString(4 + i)).getOrElse("")))
+        val rects = rows.map(_._1)
+        val vals = rows.map(_._2)
         val zip = renderZip(Seq(
           f"layer_$pid%05d.shp" -> renderRectShp(rects),
           f"layer_$pid%05d.dbf" -> renderDbfFields(attrs, vals)))
@@ -330,8 +339,7 @@ object Shapefile {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
-      ()
-    }
+    })
   }
 
   /** Zips named byte entries. */

@@ -70,6 +70,15 @@ object GraftSqlShim {
                     schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[ClassicSparkSession].internalCreateDataFrame(rows, schema)
 
+  /** A small frame's Catalyst rows, collected in one SQL execution: no
+    * `Row` deserializer class is generated, and the tasks compile the
+    * plan's classes under the session's class loader like any action's. */
+  def collectInternal(df: DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(
+      qe.executedPlan.executeCollect())
+  }
+
   /** Re-flag a batch DataFrame as a STREAMING one — what a V1
     * `Source.getBatch` must return (`MicroBatchExecution` asserts
     * `isStreaming`; Spark's own `FileStreamSource` builds its batches with

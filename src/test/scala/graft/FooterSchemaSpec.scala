@@ -124,6 +124,27 @@ class FooterSchemaSpec extends SparkSpec {
     }
   }
 
+  test("a corpus table written as a directory of part files declares its schema, with no job") {
+    import spark.implicits._
+    val dir = freshTable("dir_corpus")
+    // three part files whose schemas differ in one column, plus the
+    // writer's _SUCCESS marker
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(2)
+      .write.parquet(s"$dir/orders.parquet")
+    Seq((3L, "c", 0.5)).toDF("id", "v", "extra")
+      .write.mode("append").parquet(s"$dir/orders.parquet")
+    val (t, jobs) = jobsDuring(Tables.table(spark, dir, "orders"))
+    assert(jobs == 0, s"Tables.table on a directory started $jobs jobs")
+    val path = s"$dir/orders.parquet"
+    assert(Files.exists(Paths.get(path, "_SUCCESS")))
+    assert(t.schema == spark.read.parquet(path).schema, "declared schema differs from inference")
+    assert(t.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    val empty = freshTable("dir_empty")
+    Files.createDirectories(Paths.get(empty, "orders.parquet"))
+    val e = intercept[IllegalArgumentException](Tables.table(spark, empty, "orders"))
+    assert(e.getMessage.contains("no data file"))
+  }
+
   test("a snapshot collect on a table without a declared schema runs exactly one job") {
     val t = freshTable("onejob")
     CommitLog.append(df(1L -> "a", 2L -> "b"), t)

@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.TankInventory
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val inv = TankInventory.inventory(spark, sf0001).cache()
 
@@ -95,5 +99,27 @@ class PipelineSpec extends SparkSpec {
   test("e1 inventory: state matches the assigned county's state") {
     assert(inv.filter(col("state_key") =!= floor(col("county_key") / 5).cast("int"))
       .count() == 0)
+  }
+
+  test("e1 inventory: the county argmax is one expression, with no join, sort aggregate or extra exchange") {
+    val built = TankInventory.inventory(spark, sf0001)
+    built.collect()
+    val plan = built.queryExecution.executedPlan
+    assert(collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, plan.toString)
+    assert(collect(plan) { case a: SortAggregateExec => a }.isEmpty, plan.toString)
+    // the box merge's exchange on the tile key is the chain's only shuffle
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan.toString)
+    // and the argmax runs once per cluster: no filter re-evaluates it
+    val argmaxes = collect(plan) { case p =>
+      p.expressions.flatMap(_.collect { case a: graft.plans.CountyArgmax => a })
+    }.flatten
+    assert(argmaxes.size == 1, plan.toString)
+  }
+
+  test("e3e runs in at most 6 Spark jobs at sf0.001") {
+    val e3e = graft.SparkEntry.queries("e3e_persisted_crosstabs")
+    e3e(spark, sf0001).collect() // warm: footers, codegen
+    val (_, jobs) = jobsDuring(e3e(spark, sf0001).collect())
+    assert(jobs <= 6, s"e3e ran $jobs jobs")
   }
 }
